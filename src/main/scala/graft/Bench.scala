@@ -1,5 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
+/** The one dev harness over [[SparkEntry.queries]], on the
+  * `SPARK_GRAFT_SF_DIR` tables at `SPARK_GRAFT_CPUS` threads:
+  *   - no arguments: the timed suite (JSON lines on stdout, the full
+  *     record in `BENCH_QUERIES_<cpus>C.json`);
+  *   - `qNN [passes]`: one query timed in isolation (default 5 passes);
+  *   - `--plan <outDir> [qNN ...]`: formatted plans, one file per query;
+  *   - `--jobs <qNN> [passes]`: per-job and per-stage wall times. */
 object Bench {
 
   /** One isolated re-measurement of `name` in a FRESH JVM (the ledger's
@@ -75,39 +82,133 @@ object Bench {
       return
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC like Verify: the events NTZ->timestamp normalization in
-      // Tables is zone-relabeling only under UTC, and benchmarked row
-      // sets must match the rows the correctness gate verified on any
-      // host timezone (build.sbt sets the -D for sbt runs; this keeps
-      // direct spark-submit launches identical)
-      .config("spark.sql.session.timeZone", "UTC")
-      // see Verify: events' TIMESTAMP(NANOS) mapping, set at bootstrap
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE coalescing floor: set PER QUERY by SparkEntry's
-      // withCoalesceFloor wrapper since r18 (the r17 session-wide 64k
-      // floor was a wash at verified 32-way parallelism — see
-      // SparkEntry.denseCoalesce for the rationale and the A/B gate)
-      //
-      // Local FS without CRC sidecars (r18, guide §6/§1.2): Hadoop's
-      // default local FS is ChecksumFileSystem — every file write
-      // also writes a .crc sidecar and every read re-verifies it,
-      // doubling the per-file I/O of the store lifecycles' many tiny
-      // parquet commits (isolated A/B: q128 2.73→1.88s, q116
-      // 3.06→2.65s). Production file systems (HDFS/S3) carry their
-      // own integrity checks, so the client-side CRC emulation is a
-      // local-mode artifact — the lease/manifest code already
-      // bypasses it for its own I/O (JsonLease.rawFs). Deployment
-      // config, not engine semantics: set here and in Verify alike.
-      .config("spark.hadoop.fs.file.impl", sys.env.getOrElse(
-        "SPARK_GRAFT_FS_IMPL", "org.apache.hadoop.fs.RawLocalFileSystem"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.envCpus
+    val spark = GraftSession.local(cpus, "graft-bench")
+    try args.headOption match {
+      case Some("--plan") =>
+        require(args.length >= 2, "usage: Bench --plan <outDir> [qNN ...]")
+        dumpPlans(spark, sfDir, java.nio.file.Paths.get(args(1)),
+          args.drop(2).toSeq)
+      case Some("--jobs") =>
+        require(args.length >= 2, "usage: Bench --jobs <qNN> [passes]")
+        profileJobs(spark, sfDir, args(1),
+          if (args.length > 2) args(2).toInt else 3)
+      case _ => timeQueries(spark, sfDir, cpus, args)
+    } finally spark.stop()
+  }
+
+  /** `--plan <outDir> [qNN ...]`: `explain("formatted")` of each named
+    * query (every query when none is named) into `<outDir>/<name>.txt`,
+    * so plan claims are checkable without running Spark. A query whose
+    * construction throws records the error text instead of aborting
+    * the dump. */
+  private def dumpPlans(spark: SparkSession, sfDir: String,
+                        outDir: java.nio.file.Path, wanted: Seq[String]): Unit = {
+    java.nio.file.Files.createDirectories(outDir)
+    val qs =
+      if (wanted.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)
+      else wanted.map(SparkEntry.resolve)
+    qs.foreach { case (name, fn) =>
+      val text =
+        try fn(spark, sfDir).queryExecution
+          .explainString(org.apache.spark.sql.execution.ExplainMode
+            .fromString("formatted"))
+        catch { case t: Throwable =>
+          s"EXPLAIN FAILED: ${t.getClass.getName}: ${t.getMessage}"
+        }
+      java.nio.file.Files.write(outDir.resolve(s"$name.txt"),
+        text.getBytes("UTF-8"))
+      // lifecycle queries persist/checkpoint during construction —
+      // keep dumps independent, like the bench's cold passes
+      GraftSession.dropCaches(spark)
+      println(s"dumped $name")
+    }
+  }
+
+  /** `--jobs <qNN> [passes]`: runs one query `passes` times and prints
+    * per-job and per-stage wall times of the last pass from a
+    * SparkListener, so a multi-job lifecycle query's cost attributes to
+    * its actual passes (build / write / probe). */
+  private def profileJobs(spark: SparkSession, sfDir: String, want: String,
+                          passes: Int): Unit = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+    import scala.jdk.CollectionConverters._
+    val (name, fn) = SparkEntry.resolve(want)
+    final case class Stage(id: Int, desc: String, ms: Long, tasks: Int)
+    final class Job(val id: Int, val desc: String, val start: Long) {
+      var end = 0L
+      var stages = List.empty[Stage]
+    }
+    val fenceKey = "graft.bench.fence"
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
+    val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val fenceJobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val fencesSeen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val props = Option(js.properties)
+        props.flatMap(p => Option(p.getProperty(fenceKey))) match {
+          case Some(key) => fenceJobs.put(js.jobId, key)
+          case None =>
+            jobs.put(js.jobId, new Job(js.jobId, props
+              .flatMap(p => Option(p.getProperty("spark.job.description")))
+              .getOrElse(""), js.time))
+            js.stageIds.foreach(sid => stageToJob.put(sid, js.jobId))
+        }
+      }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit = {
+        Option(fenceJobs.remove(je.jobId)).foreach(fencesSeen.put)
+        Option(jobs.get(je.jobId)).foreach(_.end = je.time)
+      }
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+        val si = sc.stageInfo
+        Option(jobs.get(stageToJob.getOrDefault(si.stageId, -1))).foreach { j =>
+          j.stages ::= Stage(si.stageId,
+            (si.name.takeWhile(_ != '\n') + " | " +
+              si.details.linesIterator.take(4).mkString(" <- ")).take(220),
+            si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L),
+            si.numTasks)
+        }
+      }
+    }
+    // Block until the listener has processed every event posted so far:
+    // a job's end event is posted before its action returns and the bus
+    // delivers in order, so once a fresh one-task job's end arrives, all
+    // earlier events have too. The queue hand-off is also the
+    // happens-before edge for reading the Job vars the bus thread wrote.
+    def fence(p: Int): Unit = {
+      val sc = spark.sparkContext
+      sc.setLocalProperty(fenceKey, s"fence-$p")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(fenceKey, null)
+      require(fencesSeen.poll(60, java.util.concurrent.TimeUnit.SECONDS) ==
+        s"fence-$p", "job listener did not catch up within 60 s")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    for (p <- 1 to passes) {
+      val t0 = System.nanoTime()
+      fn(spark, sfDir).count()
+      val total = (System.nanoTime() - t0) / 1e9
+      fence(p)
+      GraftSession.dropCaches(spark)
+      println(f"== pass $p: $name total=$total%.3fs jobs=${jobs.size}")
+      if (p == passes) {
+        jobs.values.asScala.toSeq.sortBy(_.id).foreach { j =>
+          println(f"  job ${j.id}%3d ${(j.end - j.start) / 1e3}%7.3fs  ${j.desc.take(70)}")
+          j.stages.sortBy(_.id).foreach { st =>
+            println(f"    stage ${st.id}%4d ${st.ms / 1e3}%7.3fs tasks=${st.tasks}%-3d\n      ${st.desc}")
+          }
+        }
+      }
+      jobs.clear(); stageToJob.clear()
+      System.gc()
+    }
+  }
+
+  /** The timing harness: the whole suite with no arguments, or one
+    * query (`qNN [passes]`) in isolation. */
+  private def timeQueries(spark: SparkSession, sfDir: String, cpus: Int,
+                          args: Array[String]): Unit = {
     // Host-load calibration: a fixed arithmetic loop on 8 PARALLEL
     // threads (deterministic work, no allocation), timed before and
     // after the suite. Three rounds of bench adjudication have hinged
@@ -213,20 +314,15 @@ object Bench {
     }
     // THE one timing path, isolated and suite alike (CLAUDE.md
     // invariant): time a pass, then drop its caches so the next pass
-    // is cold — persist()-based query caches register in the
-    // CacheManager, which a bare RDD unpersist does not deregister,
-    // and a still-registered cache plan-matches the next pass's
-    // freshly built plan (the r10 warm-crediting bug).
+    // is cold (GraftSession.dropCaches).
     // Every pass also records the storage memory occupied BEFORE and
     // AFTER its timed region (VERDICT r14 #5 / r15 #6: pass anomalies
     // must SELF-adjudicate from the artifact, without a judge rerun) —
     // pre > 0 on a cold pass means a predecessor's blocks were still
     // resident when this query started, exactly the suite-context
     // pressure suspect. The per-pass (pre, post) pairs persist into
-    // BENCH_QUERIES.json; SPARK_GRAFT_BENCH_METRICS=1 additionally
-    // prints them live to stderr. getExecutorMemoryStatus is a
+    // the queries file (storage_mb). getExecutorMemoryStatus is a
     // driver-local map in local mode — the capture costs microseconds.
-    val benchMetrics = sys.env.get("SPARK_GRAFT_BENCH_METRICS").contains("1")
     // the undrainable-storage floor (see the teardown loop below)
     var stickyResidualMB = 0L
     def usedStorageMB(): Long =
@@ -238,18 +334,9 @@ object Bench {
       val pre = usedStorageMB()
       val r = timed(fn)
       val post = usedStorageMB()
-      spark.catalog.clearCache()
-      // BLOCKING unpersist (r13): with blocking=false the block
-      // manager frees prior queries' cached blocks asynchronously,
-      // so a cache-heavy query can start while storage memory is
-      // still occupied by its predecessors' dying blocks — the prime
-      // suspect for r12's q161 suite-context spikes (3 of 4 passes
-      // ~4× isolated). Blocking costs milliseconds per query and
-      // makes "cold" mean the same thing in every suite position.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      // VERIFIABLY complete teardown (r17 — VERDICT r16 #2): the two
-      // calls above free cached plans and RDD blocks, but broadcast
+      GraftSession.dropCaches(spark)
+      // VERIFIABLY complete teardown (r17 — VERDICT r16 #2): the
+      // call above frees cached plans and RDD blocks, but broadcast
       // pieces (and any block whose drop the block manager processed
       // asynchronously) are reclaimed by the ContextCleaner only after
       // a driver GC notices the dead references — the r16 storage_mb
@@ -275,9 +362,6 @@ object Bench {
         // (the pre-storage vector still records it honestly)
         stickyResidualMB = residualMB
       }
-      if (benchMetrics) System.err.println(
-        f"[bench-metrics] $name pre=${pre}MB post=${post}MB " +
-          f"t=${r._2}%.3f ok=${r._1}")
       (r._1, r._2, pre, post)
     }
     // Isolated mode: `runMain graft.Bench q64 [nPasses]` runs ONE query
@@ -287,13 +371,8 @@ object Bench {
     // (rounds 5–7 each shipped phantom "regressions" on untouched
     // queries that an isolated re-run dismissed).
     if (args.nonEmpty) {
-      val want = args(0)
       val passes = if (args.length > 1) args(1).toInt else 5
-      val hits = SparkEntry.queries.keys
-        .filter(k => k == want || k.takeWhile(_ != '_') == want).toSeq
-      require(hits.size == 1, s"query '$want' matches ${hits.size} entries: ${hits.sorted.mkString(", ")}")
-      val name = hits.head
-      val fn = SparkEntry.queries(name)
+      val (name, fn) = SparkEntry.resolve(args(0))
       val times = (1 to passes).map(_ => timedCold(name, fn))
       val good = times.collect { case (true, t, _, _) => t }
       def fmtI(v: Double): String = BigDecimal(v)
@@ -301,14 +380,13 @@ object Bench {
       val best = if (good.nonEmpty) good.min else -1.0
       val all = times.map(t => fmtI(t._2)).mkString("[", ",", "]")
       println(s"""{"metric":"$name","value":${fmtI(best)},"unit":"sec","passes":$all,"sf":"$sfDir"}""")
-      spark.stop()
       return
     }
     // Noise gate from the PREVIOUS artifact (r11 lesson: two equally-
     // slow passes — suite-context GC/host pressure — never triggered
     // the warm>cold retry, and q64 shipped at 6× its isolated steady
     // state). If this run's min-of-2 exceeds 2× the previous
-    // BENCH_QUERIES.json value for the same query (calib-scaled so a
+    // queries-file value for the same query (calib-scaled so a
     // genuinely slower host widens the gate instead of retrying
     // everything; 1s floor so sub-second noise never loops), run up to
     // two extra passes and keep the overall min.
@@ -337,8 +415,11 @@ object Bench {
         }
       }
     } catch { case _: Throwable => (Map.empty[String, Double], 1.0) }
+    // one queries file per cpu count: the prior is the SAME width's
+    // run (an 8-cpu artifact once gated a 32-cpu suite)
+    val queriesFile = s"BENCH_QUERIES_${cpus}C.json"
     val (priorRaw: Map[String, Double], priorRatio: Double) =
-      loadArtifact("BENCH_QUERIES.json")
+      loadArtifact(queriesFile)
     // Committed 8-cpu reference (r18 — VERDICT r17 #7): the r17 story
     // was a 32c value 3–6× its own 8c time on the same code — exactly
     // the asymmetry the ledger should catch. When the repo carries a
@@ -404,7 +485,7 @@ object Bench {
     // calib-scaled value by >1.5× is re-measured in a FRESH JVM (the
     // same `runMain graft.Bench qNNN` isolated mode the driver and
     // judge use — fresh block manager, fresh JIT, nothing of the
-    // suite's context), and BOTH numbers persist in BENCH_QUERIES.json
+    // suite's context), and BOTH numbers persist in the queries file
     // under "isolated_rerun". The suite min stays the reported value
     // (the convention every prior round's totals carry); the ledger is
     // what lets a reader dismiss — or confirm — a regression without
@@ -476,14 +557,14 @@ object Bench {
     // ~2000-char tail of the run and the per-query line — ~3 KB at
     // 200+ queries — lost its HEAD, total included). Three artifacts:
     // 1. the full line (head of output, human- and driver-readable),
-    // 2. the same JSON persisted to BENCH_QUERIES.json beside the
+    // 2. the same JSON persisted to the queries file beside the
     //    build so per-query times survive any console truncation,
     // 3. a compact total-only line printed LAST — whatever tail
     //    window the driver keeps, the final short line is complete
     //    and still leads with {"metric":"total",...}.
     println(full)
     val qFile = java.nio.file.Paths.get(
-      sys.props.getOrElse("user.dir", "."), "BENCH_QUERIES.json")
+      sys.props.getOrElse("user.dir", "."), queriesFile)
     try java.nio.file.Files.write(qFile, (fullWithPasses + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () } // best-effort; stdout already has it
     // 4. chunked per-query lines (r18 — VERDICT r17 #2): the driver's
@@ -513,7 +594,6 @@ object Bench {
     chunks.zipWithIndex.foreach { case (c, i) =>
       println(s"""{"metric":"queries_${i + 1}of${chunks.size}","value":${i + 1},"unit":"chunk","queries":{$c},"sf":"$sfDir"}""")
     }
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries_file":"BENCH_QUERIES.json","sf":"$sfDir","calib":$calib,"env":$envJson}""")
-    spark.stop()
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries_file":"$queriesFile","sf":"$sfDir","calib":$calib,"env":$envJson}""")
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Session extensions installing graft's native expressions
-  * (`SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * ([[GraftSession.local]] installs them; other sessions set
   * `spark.sql.extensions=graft.GraftExtensions`).
   *
   * Only expressions whose composed-function form measurably loses

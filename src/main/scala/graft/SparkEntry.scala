@@ -62,7 +62,8 @@ object SparkEntry {
     "q251_sql_merge_cdc")
 
   /** Every query entry pins its own coalescing floor at build time —
-    * dense queries the 64k rescue, everything else the Spark default —
+    * dense queries the 64k rescue, everything else the session's
+    * starting value (the SparkContext conf's, else Spark's default) —
     * so the choice travels with the queries map into Bench, Verify,
     * the driver, and the test sessions alike (ADVICE r17: the specs
     * used to validate plans under a different floor than the bench
@@ -81,10 +82,15 @@ object SparkEntry {
   private def withCoalesceFloor(
       name: String, fn: (SparkSession, String) => DataFrame)
       : (SparkSession, String) => DataFrame = { (s, d) =>
-    s.conf.set(coalesceFloorKey,
-      if (denseCoalesce(name))
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "64k")
-      else "1m")
+    if (denseCoalesce(name))
+      s.conf.set(coalesceFloorKey,
+        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "64k"))
+    else s.sparkContext.getConf.getOption(coalesceFloorKey) match {
+      // the session's starting value: a deployment-set floor, else
+      // Spark's own default (unset)
+      case Some(v) => s.conf.set(coalesceFloorKey, v)
+      case None => s.conf.unset(coalesceFloorKey)
+    }
     fn(s, d)
   }
 
@@ -100,6 +106,16 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     wrappedQueries
+
+  /** The one query-name lookup of the dev harnesses: a full entry name
+    * or its unique `qNN` prefix. Fails loudly on zero or several hits. */
+  def resolve(want: String): (String, (SparkSession, String) => DataFrame) = {
+    val hits = queries.keys
+      .filter(k => k == want || k.takeWhile(_ != '_') == want).toSeq
+    require(hits.size == 1,
+      s"query '$want' matches ${hits.size} entries: ${hits.sorted.mkString(", ")}")
+    hits.head -> queries(hits.head)
+  }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for ops whose semantics are not

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,28 +9,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // session bootstrap, not read-time side effect (ADVICE r2): the
-      // events table carries TIMESTAMP(NANOS); TablesSpec guards that
-      // no OTHER table silently reads nanos as bigint under this flag
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE coalescing floor — set per query by SparkEntry's
-      // withCoalesceFloor wrapper (see SparkEntry.denseCoalesce)
-      //
-      // raw local FS (no CRC sidecars) — same rationale as Bench:
-      // ChecksumFileSystem's client-side CRC emulation is a local-mode
-      // artifact production file systems don't have; kept identical
-      // here so the correctness gate runs the exact bench I/O stack
-      .config("spark.hadoop.fs.file.impl", sys.env.getOrElse(
-        "SPARK_GRAFT_FS_IMPL", "org.apache.hadoop.fs.RawLocalFileSystem"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCpus, "graft-verify")
     // java.io.File by contract: outDir is the driver's LOCAL dump
     // directory (the correctness gate reads it with DuckDB on this
     // host) — the Fs invariant covers STORE paths, not this artifact
@@ -46,14 +24,8 @@ object Verify {
       }
       // free blocks pinned by eager checkpoints inside the query just
       // written — dead now, but the context cleaner only reclaims them
-      // after a driver GC (see Bench for the measured effect).
-      // clearCache FIRST: the r10 persist() sweep registers query
-      // caches in the CacheManager, which a bare RDD unpersist does
-      // not deregister — stale entries then plan-match later queries
-      // and force recompute-into-cache churn
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // after a driver GC (see Bench for the measured effect)
+      GraftSession.dropCaches(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,6 +1,6 @@
 package graft.cli
 
-import graft.GraftExtensions
+import graft.GraftSession
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -11,18 +11,10 @@ import org.apache.spark.sql.functions.col
   * for its planning-time inference pass. */
 private[graft] object CliSession {
 
-  def build(appName: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .appName(appName)
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  /** The shared [[graft.GraftSession]] at `SPARK_GRAFT_CPUS` threads;
+    * `SPARK_MASTER` is the one deployment override. */
+  def build(appName: String): SparkSession =
+    GraftSession.local(GraftSession.envCpus, appName, sys.env.get("SPARK_MASTER"))
 
   /** Per-input "Reading <file>" progress lines, reference parity.
     * The two reference CLIs use DIFFERENT streams — the schema finder

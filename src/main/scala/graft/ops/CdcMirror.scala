@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** A downstream PARQUET MIRROR of a graftjson table, kept consistent
   * through adds, rewrites, and DELETES by the `cdcDeletes` change feed
@@ -93,9 +94,9 @@ object CdcMirror {
         "a field of that name (it would shadow the metadata column " +
         "and seed partitions from data values instead of source paths)")
     val snap = loaded.select(col("*"), col(JsonMirrorCols.file))
-    snap
+    stored(snap
       .withColumn(PartCol, partKey)
-      .drop(JsonMirrorCols.file)
+      .drop(JsonMirrorCols.file))
       .write.mode("overwrite").partitionBy(PartCol)
       .parquet(mirrorDir)
   }
@@ -139,14 +140,34 @@ object CdcMirror {
         ()
       }
       if (hasInserts)
-        batch.where(col(JsonMirrorCols.changeType) === "insert")
+        stored(batch.where(col(JsonMirrorCols.changeType) === "insert")
           .withColumn(PartCol, partKey)
-          .drop(JsonMirrorCols.file, JsonMirrorCols.changeType)
+          .drop(JsonMirrorCols.file, JsonMirrorCols.changeType))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy(PartCol)
           .parquet(mirrorDir)
     } finally batch.unpersist()
+  }
+
+  /** The mirror's storage schema: every integral column, nested ones
+    * too, as bigint. The source infers the NARROWEST integer type its
+    * current files need, so partitions written before and after a
+    * widening would disagree, and a parquet read takes ONE file's
+    * schema: a tinyint-typed read silently wraps a later 130 to -126. */
+  private def stored(df: DataFrame): DataFrame = {
+    def widen(dt: DataType): DataType = dt match {
+      case ByteType | ShortType | IntegerType => LongType
+      case s: StructType =>
+        StructType(s.fields.map(f => f.copy(dataType = widen(f.dataType))))
+      case a: ArrayType => a.copy(elementType = widen(a.elementType))
+      case m: MapType =>
+        m.copy(keyType = widen(m.keyType), valueType = widen(m.valueType))
+      case other => other
+    }
+    df.select(df.schema.fields.toIndexedSeq.map(f =>
+      col(s"`${f.name.replace("`", "``")}`").cast(widen(f.dataType))
+        .as(f.name)): _*)
   }
 
   /** Spark's own partition-value path escaping — the writer applies it
@@ -171,8 +192,9 @@ object CdcMirror {
       .foreachBatch((b: DataFrame, _: Long) => apply(b, mirrorDir))
 
   /** The mirror as a frame of the source's DATA columns (partition
-    * bookkeeping dropped). An empty mirror directory reads as an
-    * empty, schema-less frame — the empty-change-feed convention. */
+    * bookkeeping dropped; integral columns as bigint, see [[stored]]).
+    * An empty mirror directory reads as an empty, schema-less frame —
+    * the empty-change-feed convention. */
   def read(spark: SparkSession, mirrorDir: String): DataFrame = {
     val root = new Path(mirrorDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)

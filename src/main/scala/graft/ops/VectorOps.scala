@@ -1535,8 +1535,7 @@ object VectorOps {
       coded.observe(obs, collect_set(col("cell")).as("cells"))
         .write.mode("overwrite").parquet(s"$staging/batch")
       val batch = spark.read.parquet(s"$staging/batch")
-      val touched = obs.get("cells")
-        .asInstanceOf[scala.collection.Seq[Int]].toArray
+      val touched = Observed.ints(obs, "cells").toArray
       if (touched.isEmpty) return // empty batch: schedule no write at all
       val existing = spark.read.parquet(s"$indexDir/corpus")
       val carried = stageRead(

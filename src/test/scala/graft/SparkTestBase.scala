@@ -1,29 +1,15 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for integration specs (one per suite;
   * cheap after the first JVM-wide context). */
-trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
+trait SparkTestBase extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // events' TIMESTAMP(NANOS) mapping, set at session bootstrap
-    // (TablesSpec asserts events is the ONLY table needing it)
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    spark.sparkContext.setLogLevel("WARN")
-  }
+  /** The mains' session ([[GraftSession]]: same extensions, UTC,
+    * nanos mapping and raw local FS), pinned at 4 threads. */
+  lazy val spark: SparkSession = GraftSession.local(4, getClass.getSimpleName)
 
   /** Register the graft V2 catalog on the shared session (idempotent;
     * the catalog instantiates lazily per conf). */

@@ -26,6 +26,28 @@ class CdcMirrorSpec extends SparkTestBase {
     ids(spark.read.format("graftjson").option("refresh", "true")
       .load(dir.toString))
 
+  test("a mirror seeded before the source's integer type widened reads every value back exactly") {
+    // either seed-file name: the parquet read takes one partition's
+    // schema, and which one depends on the listing order
+    for ((seedFile, laterFile) <- Seq("e0.json" -> "e1.json", "e1.json" -> "e0.json")) {
+      val dir = mkDir(s"cdcmirror_widen_$seedFile")
+      val mirror = graft.TempRoots.path(s"cdcmirror_widen_out_$seedFile")
+      val ckpt = graft.TempRoots.path(s"cdcmirror_widen_ckpt_$seedFile")
+      put(dir, seedFile, """{"id": 1, "s": "a"}""" + "\n") // tinyint
+      JsonMeta.save(spark, dir.toString)
+      val start = JsonMeta.saves(spark, dir.toString).head
+      CdcMirror.init(spark, dir.toString, mirror, start)
+      put(dir, laterFile,
+        """{"id": 130, "s": "b"}""" + "\n" + """{"id": 40000, "s": "c"}""" + "\n")
+      JsonMeta.save(spark, dir.toString)
+      val q = CdcMirror.writer(spark, dir.toString, mirror, ckpt, start)
+        .trigger(Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally q.stop()
+      assert(ids(CdcMirror.read(spark, mirror)) == Seq(1L, 130L, 40000L),
+        s"seed $seedFile")
+    }
+  }
+
   test("init + sync tracks adds, rewrites, and deletes exactly; restarts replay idempotently; the live tail continues") {
     val dir = mkDir("cdcmirror_src")
     val mirror = graft.TempRoots.path("cdcmirror_out")

@@ -24,6 +24,46 @@ class JsonLeaseSpec extends SparkTestBase {
     dir.toString
   }
 
+  /** What a default Hadoop client gets for `file://`: a checksummed
+    * LocalFileSystem. Uncached, so the session's shared raw instance is
+    * untouched. */
+  private def checksummedFs(): org.apache.hadoop.fs.FileSystem = {
+    val conf = new org.apache.hadoop.conf.Configuration(
+      spark.sparkContext.hadoopConfiguration)
+    conf.set("fs.file.impl", classOf[org.apache.hadoop.fs.LocalFileSystem].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI("file:///"), conf)
+    assert(fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem])
+    fs
+  }
+
+  test("acquire, release and takeover through a checksummed LocalFileSystem raise no ChecksumException and leave no sidecar") {
+    val fs = checksummedFs()
+    val root = fs.makeQualified(new Path(freshTable("lease_checksummed")))
+    val lp = JsonLease.leasePath(root)
+    val leaseDir = new java.io.File(lp.getParent.toUri)
+    // release may remove the emptied lease directory itself
+    def listed() = Option(leaseDir.list()).toSeq.flatten
+    def sidecars() = listed().filter(_.endsWith(".crc"))
+    // every read goes through the CHECKSUMMED fs: a stale sidecar
+    // beside the lease would throw ChecksumException here
+    def holder() = graft.ops.Fs.readFullyUtf8(fs, lp)
+    val first = JsonLease.acquire(fs, root, "first")
+    assert(holder().startsWith("first@") && sidecars().isEmpty, sidecars())
+    first.release()
+    assert(!fs.exists(lp) && sidecars().isEmpty, sidecars())
+    val dead = JsonLease.acquire(fs, root, "crashed-run")
+    fs.setTimes(lp, System.currentTimeMillis() - JsonLease.DefaultTtlMs - 1000, -1)
+    val usurper = JsonLease.acquire(fs, root, "takeover")
+    assert(holder().startsWith("takeover@") && sidecars().isEmpty, sidecars())
+    intercept[IllegalStateException](dead.verifyHeld())
+    dead.release()
+    usurper.verifyHeld()
+    usurper.release()
+    assert(!fs.exists(lp), "the takeover's release left the lease")
+    assert(listed().isEmpty, s"debris: ${listed()}")
+  }
+
   test("second acquire fails loudly while the lease is fresh; succeeds after release") {
     val dir = freshTable("lease_basic")
     val root = new Path(dir)

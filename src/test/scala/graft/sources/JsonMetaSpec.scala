@@ -715,6 +715,42 @@ class JsonMetaSpec extends SparkTestBase {
     assert(n == 4L && walkedFiles == 0L)
   }
 
+  test("manifest publishes through a checksummed LocalFileSystem raise no ChecksumException and leave no manifest sidecar") {
+    // the session's file:// becomes a fresh (uncached) checksummed
+    // LocalFileSystem for the duration: what a default Hadoop client
+    // gets, and the hazard writeManifest's raw I/O exists to bypass
+    val conf = spark.sparkContext.hadoopConfiguration
+    val saved = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+      .map(k => k -> Option(conf.get(k)))
+    conf.set("fs.file.impl", classOf[org.apache.hadoop.fs.LocalFileSystem].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    try {
+      val dir = mkTable("jm_checksummed", 3)
+      val mp = new org.apache.hadoop.fs.Path(
+        new java.io.File(new java.io.File(dir, "_graftjson_meta"), "manifest").toString)
+      val fs = mp.getFileSystem(conf)
+      assert(fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem])
+      val metaDir = new java.io.File(dir, "_graftjson_meta")
+      def manifestDebris() = metaDir.list().toSeq
+        .filter(n => n.startsWith(".manifest") || n.startsWith("manifest."))
+      val first = JsonMeta.save(spark, dir.toString)
+      assert(manifestDebris().isEmpty, manifestDebris())
+      // the second publish REPLACES the manifest: the racy step
+      val w = new java.io.PrintWriter(new java.io.File(dir, "p88.json"))
+      w.println("""{"id": 880, "src": "y"}"""); w.close()
+      JsonMeta.save(spark, dir.toString)
+      assert(manifestDebris().isEmpty, manifestDebris())
+      // read back through the CHECKSUMMED fs: a stale sidecar would
+      // throw ChecksumException here
+      assert(graft.ops.Fs.readFullyUtf8(fs, mp).contains("segments"))
+      JsonMeta.clearParsed()
+      assert(JsonMeta.saves(spark, dir.toString).size == 2 && first.total == 3)
+    } finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
   test("standalone save() takes the writer lease: loud conflict while held, no lease left behind") {
     val dir = mkTable("jm_savelease", 2)
     val root0 = new org.apache.hadoop.fs.Path(dir.toString)
