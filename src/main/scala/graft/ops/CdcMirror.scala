@@ -193,8 +193,11 @@ object CdcMirror {
 
   /** The mirror as a frame of the source's DATA columns (partition
     * bookkeeping dropped; integral columns as bigint, see [[stored]]).
-    * An empty mirror directory reads as an empty, schema-less frame —
-    * the empty-change-feed convention. */
+    * Partitions written before the source gained a field lack it, so
+    * the read merges every file's schema: a one-file schema would keep
+    * or drop the new field depending on the listing order. An empty
+    * mirror directory reads as an empty, schema-less frame — the
+    * empty-change-feed convention. */
   def read(spark: SparkSession, mirrorDir: String): DataFrame = {
     val root = new Path(mirrorDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -202,7 +205,8 @@ object CdcMirror {
       try fs.listStatus(root).exists(_.getPath.getName.startsWith(s"$PartCol="))
       catch { case _: java.io.FileNotFoundException => false }
     if (!any) spark.emptyDataFrame
-    else spark.read.parquet(mirrorDir).drop(PartCol)
+    else spark.read.option("mergeSchema", "true").parquet(mirrorDir)
+      .drop(PartCol)
   }
 }
 

@@ -54,14 +54,18 @@ object Fanout {
     // measured q178 at 4.6s vs 0.8s (spill + GC, §5). Cap the fan-out
     // at one heavy task per 512 MB of heap — 16 on the 8 GB bench
     // JVM, measured indistinguishable from 32 on an uncontended host
-    // and immune to the memory cliff. At production scale executor
-    // heaps are sized to their cores (guide §9), the cap is ≥ the
-    // core count, and the multi-split no-op path short-circuits
-    // first anyway — this bounds only the local rescue.
-    val maxByMem = math.max(2,
-      (Runtime.getRuntime.maxMemory / (512L << 20)).toInt)
-    val target = math.min(
-      df.sparkSession.sparkContext.defaultParallelism, maxByMem)
+    // and immune to the memory cliff. The tasks run in the driver JVM
+    // only in local mode; on a cluster the heap is the executor's
+    // (`spark.executor.memory`, Spark's 1g default). At production
+    // scale executor heaps are sized to their cores (guide §9), the
+    // cap is ≥ the core count, and the multi-split no-op path
+    // short-circuits first anyway — this bounds only the local rescue.
+    val sc = df.sparkSession.sparkContext
+    val heap =
+      if (sc.isLocal) Runtime.getRuntime.maxMemory
+      else sc.getConf.getSizeAsBytes("spark.executor.memory", "1g")
+    val maxByMem = math.max(2, (heap / (512L << 20)).toInt)
+    val target = math.min(sc.defaultParallelism, maxByMem)
     val plan = df.queryExecution.executedPlan match {
       // the AQE wrapper's children are built lazily by EXECUTING query
       // stages — probe its initial plan instead (identical scan leaves)

@@ -134,7 +134,7 @@ object GraphOps {
     * shuffles deep and the rank rows are a few longs+doubles per
     * node. (Compute-loop checkpoint, not durable-state staging — a
     * lost executor fails one query job, nothing durable is mid-
-    * overwrite, so the stageRead discipline does not apply.)
+    * overwrite, so the StoreTxn.stage discipline does not apply.)
     *
     * At 100 TB the cost is iters × (rank shuffle + contribution
     * shuffle): linear per iteration, no all-pairs anything; hot dst

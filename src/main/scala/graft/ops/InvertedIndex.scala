@@ -113,10 +113,20 @@ object InvertedIndex {
 
   /** Marker file names: touched before a multi-step wipe/swap, removed
     * after it completes — readers fail fast in the window and the
-    * crashed operation converges on a rerun (the store-wide crash
-    * discipline of [[VectorOps.buildIvfIndex]]). */
+    * crashed operation converges on a rerun (the in-flight guard of
+    * [[StoreTxn.Guard]]; a build IS the recovery rerun). */
   private val RebuildMarker = "_rebuild_pending"
   private val CompactMarker = "_compact_pending"
+
+  private def rebuildGuard(indexDir: String, kind: String,
+                           rerun: String): StoreTxn.Guard =
+    StoreTxn.Guard(s"$indexDir/$RebuildMarker",
+      crashed = s"$kind $indexDir: a rebuild crashed mid-wipe " +
+        s"($RebuildMarker) — rerun $rerun() to converge")
+  private def postingsGuard(indexDir: String) =
+    rebuildGuard(indexDir, "inverted index", "build")
+  private def trigramGuard(indexDir: String) =
+    rebuildGuard(indexDir, "trigram index", "buildTrigramIndex")
 
   /** Build the index as segment 0: one corpus scan, one (term, doc)
     * aggregation, one (seg, bucket)-partitioned write, plus a per-
@@ -133,18 +143,15 @@ object InvertedIndex {
     * crashed build converges by rerunning build(). */
   def build(docs: DataFrame, indexDir: String, nBuckets: Int = 64): Unit = {
     val spark = docs.sparkSession
-    Fs.touch(spark, s"$indexDir/$RebuildMarker")
-    // a crashed COMPACTION's marker and staged copy hold PRE-rebuild
-    // data — left alive, the post-rebuild "rerun compactSegments"
-    // recovery would swap that stale copy over the fresh index
-    // (review r12); the rebuild supersedes them wholesale
-    deleteDir(spark, s"$indexDir/$CompactMarker")
-    deleteDir(spark, s"$indexDir/_staging")
-    deleteDir(spark, s"$indexDir/postings")
-    deleteDir(spark, s"$indexDir/meta")
-    deleteDir(spark, s"$indexDir/tombstones")
-    writeSegment(postingsOf(docs, nBuckets, 0), indexDir, nBuckets, 0)
-    deleteDir(spark, s"$indexDir/$RebuildMarker")
+    postingsGuard(indexDir).write(spark, "build") {
+      // a crashed COMPACTION's marker and staged copy hold PRE-rebuild
+      // data — left alive, the post-rebuild "rerun compactSegments"
+      // recovery would swap that stale copy over the fresh index
+      // (review r12); the rebuild supersedes them wholesale
+      Seq(CompactMarker, "_staging", "postings", "meta", "tombstones")
+        .foreach(d => Fs.delete(spark, s"$indexDir/$d"))
+      writeSegment(postingsOf(docs, nBuckets, 0), indexDir, nBuckets, 0)
+    }
   }
 
   /** LSM-style incremental growth: index a NEW batch of documents as
@@ -170,11 +177,8 @@ object InvertedIndex {
     * live dirs may be mid-wipe or mid-swap, and serving partial
     * postings silently would be worse than the loud error. */
   private def meta(spark: SparkSession, indexDir: String): (Long, Long, Int) = {
-    if (pathExists(spark, s"$indexDir/$RebuildMarker"))
-      throw new IllegalStateException(
-        s"inverted index $indexDir: a rebuild crashed mid-wipe " +
-          "(_rebuild_pending) — rerun build() to converge")
-    if (pathExists(spark, s"$indexDir/$CompactMarker"))
+    postingsGuard(indexDir).failIfPending(spark)
+    if (Fs.exists(spark, s"$indexDir/$CompactMarker"))
       throw new IllegalStateException(
         s"inverted index $indexDir: a compaction crashed mid-swap " +
           "(_compact_pending) — rerun compactSegments() to roll forward")
@@ -231,15 +235,9 @@ object InvertedIndex {
   // Hadoop FS, not java.io: the index root may live on HDFS/S3 — a
   // local-File existence probe would silently report "no tombstones"
   // there and serve deleted docs (cluster-readiness, r10 sweep)
-  private def pathExists(spark: SparkSession, dir: String): Boolean =
-    Fs.exists(spark, dir)
-
-  private def deleteDir(spark: SparkSession, dir: String): Unit =
-    Fs.delete(spark, dir)
-
   private def tombstones(spark: SparkSession,
                          indexDir: String): Option[DataFrame] =
-    if (pathExists(spark, s"$indexDir/tombstones"))
+    if (Fs.exists(spark, s"$indexDir/tombstones"))
       Some(spark.read.schema(tombstoneSchema)
         .parquet(s"$indexDir/tombstones")
         .select(col("doc_id")).distinct())
@@ -350,14 +348,14 @@ object InvertedIndex {
     // FROM STAGING, never re-stage from the (possibly emptied) live
     // dirs: reading a half-swapped postings dir as "live" and staging
     // it would overwrite the only surviving copy with a partial one.
-    if (pathExists(spark, marker)) {
-      if (pathExists(spark, s"$staging/postings"))
+    if (Fs.exists(spark, marker)) {
+      if (Fs.exists(spark, s"$staging/postings"))
         swapFromStaging(spark, indexDir, staging, marker)
       else {
         // crash inside the post-swap cleanup: the swap completed,
         // only the tombstone/marker removal is left
-        deleteDir(spark, s"$indexDir/tombstones")
-        deleteDir(spark, marker)
+        Fs.delete(spark, s"$indexDir/tombstones")
+        Fs.delete(spark, marker)
       }
       return
     }
@@ -415,9 +413,9 @@ object InvertedIndex {
       .option("partitionOverwriteMode", "static")
       .partitionBy("seg")
       .parquet(s"$indexDir/meta")
-    deleteDir(spark, s"$indexDir/tombstones")
-    deleteDir(spark, staging)
-    deleteDir(spark, marker)
+    Fs.delete(spark, s"$indexDir/tombstones")
+    Fs.delete(spark, staging)
+    Fs.delete(spark, marker)
   }
 
   /** Character-trigram substring index — the grep / pg_trgm-style
@@ -443,24 +441,24 @@ object InvertedIndex {
     // same rebuild discipline as build(): marker + wipe, so a crashed
     // rebuild fails loudly instead of serving a stale or fileless
     // store, and a changed nBuckets cannot disagree with the grams
-    Fs.touch(spark, s"$indexDir/$RebuildMarker")
-    deleteDir(spark, s"$indexDir/grams")
-    deleteDir(spark, s"$indexDir/meta")
-    val t = coalesce(col("text"), lit(""))
-    docs.select(col("doc_id"),
-        explode(when(length(t) >= 3,
-          array_distinct(transform(sequence(lit(1), length(t) - lit(2)),
-            i => t.substr(i, lit(3)))))
-          .otherwise(array().cast("array<string>"))).as("gram"))
-      .withColumn("bucket", bucketOf(col("gram"), nBuckets))
-      .repartition(col("bucket"))
-      .sortWithinPartitions(col("gram"), col("doc_id"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$indexDir/grams")
-    docs.agg(count(lit(1)).as("n_docs"),
-        lit(nBuckets.toLong).as("n_buckets"))
-      .write.mode("overwrite").parquet(s"$indexDir/meta")
-    deleteDir(spark, s"$indexDir/$RebuildMarker")
+    trigramGuard(indexDir).write(spark, "buildTrigramIndex") {
+      Fs.delete(spark, s"$indexDir/grams")
+      Fs.delete(spark, s"$indexDir/meta")
+      val t = coalesce(col("text"), lit(""))
+      docs.select(col("doc_id"),
+          explode(when(length(t) >= 3,
+            array_distinct(transform(sequence(lit(1), length(t) - lit(2)),
+              i => t.substr(i, lit(3)))))
+            .otherwise(array().cast("array<string>"))).as("gram"))
+        .withColumn("bucket", bucketOf(col("gram"), nBuckets))
+        .repartition(col("bucket"))
+        .sortWithinPartitions(col("gram"), col("doc_id"))
+        .write.mode("overwrite").partitionBy("bucket")
+        .parquet(s"$indexDir/grams")
+      docs.agg(count(lit(1)).as("n_docs"),
+          lit(nBuckets.toLong).as("n_buckets"))
+        .write.mode("overwrite").parquet(s"$indexDir/meta")
+    }
   }
 
   /** Substring (grep-style) search over [[buildTrigramIndex]]'s store:
@@ -474,10 +472,7 @@ object InvertedIndex {
                       pattern: String): DataFrame = {
     require(pattern.length >= 3, "substring search needs >= 3 chars")
     val spark = docs.sparkSession
-    if (pathExists(spark, s"$indexDir/$RebuildMarker"))
-      throw new IllegalStateException(
-        s"trigram index $indexDir: a rebuild crashed mid-wipe " +
-          "(_rebuild_pending) — rerun buildTrigramIndex() to converge")
+    trigramGuard(indexDir).failIfPending(spark)
     // explicit schemas: a fileless dir (crash debris) reads empty
     // instead of throwing 'Unable to infer schema' with no cause
     val nBuckets = spark.read.schema("n_docs BIGINT, n_buckets BIGINT")

@@ -214,31 +214,22 @@ object Sharding {
   case class CdcAudit(n_upserts: Long, n_deletes: Long,
                       n_buckets_touched: Long)
 
-  private def stageRead(df: DataFrame, path: String): DataFrame = {
-    df.write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
-  }
-
-  private def deleteDir(spark: org.apache.spark.sql.SparkSession,
-                        dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-  }
-
   /** Initialize a hash-bucketed document store: rows land in
     * `bucket=<shardOf(doc_id)>` partition dirs, one shuffle. The
     * bucket function is the same oracle-recomputable Lehmer step as
     * [[shardOf]], so external engines can locate a doc's partition. */
   def initDocStore(docs: DataFrame, storeDir: String, nBuckets: Int): Unit =
-    docs.withColumn("bucket", shardOf(col("doc_id"), nBuckets))
-      .repartition(col("bucket"))
-      .write.mode("overwrite")
-      // STATIC pinned (the r12 full-replacement rule, reachable from
-      // foreign sessions since the CALL addressing): under a
-      // session-wide dynamic default, re-initializing from a smaller
-      // source would keep stale bucket dirs alongside the new ones
-      .option("partitionOverwriteMode", "static")
-      .partitionBy("bucket").parquet(storeDir)
+    StoreTxn.step(docs.sparkSession, "initDocStore", "write") {
+      docs.withColumn("bucket", shardOf(col("doc_id"), nBuckets))
+        .repartition(col("bucket"))
+        .write.mode("overwrite")
+        // STATIC pinned (the r12 full-replacement rule, reachable from
+        // foreign sessions since the CALL addressing): under a
+        // session-wide dynamic default, re-initializing from a smaller
+        // source would keep stale bucket dirs alongside the new ones
+        .option("partitionOverwriteMode", "static")
+        .partitionBy("bucket").parquet(storeDir)
+    }
 
   /** CDC merge (upsert + delete) into a bucketed document store — the
     * text-corpus twin of the stored-ANN index maintenance: a change
@@ -251,11 +242,12 @@ object Sharding {
     *      executor loss mid-write only retries tasks);
     *   2. collect the touched bucket ids (bounded: ≤ nBuckets ints) so
     *      the survivor scan prunes STATICALLY on the partition column;
-    *   3. stage the touched buckets' surviving rows (anti-join on the
-    *      changed ids) durably — the dynamic overwrite below must read
-    *      only durable files, never its own input path;
-    *   4. union survivors + upserts, dynamically overwrite ONLY the
-    *      touched bucket partitions.
+    *   3. stage the touched buckets' complete post-merge content
+    *      (survivors ∪ upserts) durably — the dynamic overwrite must
+    *      read only durable files, never its own input path;
+    *   4. commit through [[StoreTxn.commit]]: marker, dynamic
+    *      overwrite of ONLY the touched bucket partitions, removal of
+    *      the buckets the merge emptied.
     *
     * Replay-safe: re-applying the same batch rewrites the same
     * partitions to the same content (upserts are by-id overwrites,
@@ -263,26 +255,26 @@ object Sharding {
     * columns plus `op` ∈ {upsert, delete}. */
   def mergeCdc(spark: org.apache.spark.sql.SparkSession, storeDir: String,
                changes: DataFrame, nBuckets: Int): CdcAudit = {
-    val staging = s"$storeDir/_staging"
-    rollForwardCdc(spark, storeDir) // finish a crashed merge first
-    try mergeCdcBody(spark, storeDir, changes, nBuckets, staging)
-    catch {
-      case e: Throwable =>
-        // only PRE-marker failures may clear staging (a rejected
-        // batch, a staging-write failure): once the marker is up, the
-        // staged copy is the roll-forward's redo log
-        if (!Fs.exists(spark, s"$storeDir/_cdc_pending"))
-          deleteDir(spark, staging)
-        throw e
+    val redo = cdcRedo(storeDir)
+    StoreTxn.run(spark, "mergeCdc", redo) { // finishes a crashed merge first
+      mergeCdcBody(spark, storeDir, changes, nBuckets, redo)
     }
   }
 
+  /** The store's redo layout ([[StoreTxn.Redo]]): the staged
+    * post-merge content of the touched buckets at `_staging/out`, the
+    * marker at `_cdc_pending/emptied`. */
+  private def cdcRedo(storeDir: String) = StoreTxn.Redo(
+    target = storeDir, partCol = "bucket",
+    markerDir = s"$storeDir/_cdc_pending", markerLeaf = "emptied",
+    staging = s"$storeDir/_staging", staged = s"$storeDir/_staging/out")
+
   private def mergeCdcBody(spark: org.apache.spark.sql.SparkSession,
                            storeDir: String, changes: DataFrame,
-                           nBuckets: Int, staging: String): CdcAudit = {
-    val ch = stageRead(
+                           nBuckets: Int, redo: StoreTxn.Redo): CdcAudit = {
+    val ch = StoreTxn.stage(
       changes.withColumn("bucket", shardOf(col("doc_id"), nBuckets)),
-      s"$staging/changes")
+      s"${redo.staging}/changes")
     // ONE summary job over the tiny staged batch (r17 optimization,
     // guide §1.2): the dup-id check, the touched-bucket set, and both
     // audit counts each ran their own job before — all four fold into
@@ -308,17 +300,15 @@ object Sharding {
     val touched = sm.getAs[scala.collection.Seq[Int]]("buckets").toArray
     val nUpserts = sm.getAs[Long]("nup")
     val nDeletes = sm.getAs[Long]("ndel")
-    if (touched.isEmpty) { deleteDir(spark, staging); return CdcAudit(0L, 0L, 0L) }
+    if (touched.isEmpty) { Fs.delete(spark, redo.staging); return CdcAudit(0L, 0L, 0L) }
     val existing = spark.read.parquet(storeDir)
     val upserts0 = ch.where(col("op") === "upsert").drop("op")
     // stage the complete post-merge content of the touched buckets —
-    // survivors ∪ upserts — so (a) the overwrite never reads the path
-    // it rewrites and (b) a crash ANYWHERE in the commit re-applies
-    // the whole merge from this durable copy (Spark's dynamic
-    // overwrite commits per partition as delete-then-rename; a crash
-    // between the two empties a bucket, and a replay that read the
-    // emptied bucket as "survivors" would lose its rows forever —
-    // review r12)
+    // survivors ∪ upserts — as the commit's redo log: the overwrite
+    // never reads the path it rewrites, and a crash ANYWHERE in the
+    // commit re-applies the whole merge from this durable copy (a
+    // replay that read a torn bucket as "survivors" would lose its
+    // rows forever — review r12).
     // the post-merge bucket set rides the staging WRITE via observe
     // (r18, guide §1.2): it used to be a separate distinct+collect
     // job over the staged files — one less plan+job per merge
@@ -328,79 +318,15 @@ object Sharding {
       .unionByName(upserts0.select(
         existing.columns.map(col).toIndexedSeq: _*))
       .observe(obs, collect_set(col("bucket")).as("buckets"))
-      .write.mode("overwrite").parquet(s"$staging/out")
-    val out = spark.read.parquet(s"$staging/out")
+      .write.mode("overwrite").parquet(redo.staged)
+    val out = spark.read.parquet(redo.staged)
     // buckets this merge EMPTIES entirely (all rows deleted, no
-    // upserts hashing there): a dynamic overwrite cannot truncate a
-    // partition with zero output rows — their dirs must be REMOVED,
-    // and the marker carries the list so a crash cannot strand them
-    // half-served (the deleteFromIvfIndex protocol)
+    // upserts hashing there) ride the marker so their dirs are removed
     val outBuckets = Observed.ints(obs, "buckets").toSet
     val emptied = touched.filterNot(outBuckets.contains)
-    // the -1 sentinel makes the marker ALWAYS non-empty: a fileless
-    // husk (crash during this very write) then reads as zero rows and
-    // roll-forward can tell "marker never committed — store is
-    // pre-merge intact" from "committed with no emptied buckets"
-    spark.createDataFrame((-1 +: emptied.toSeq).map(Tuple1(_))).toDF("bucket")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$storeDir/_cdc_pending/emptied")
-    if (outBuckets.nonEmpty)
-      out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(storeDir)
-    for (b <- emptied) deleteDir(spark, s"$storeDir/bucket=$b")
-    val audit = CdcAudit(nUpserts, nDeletes, touched.length.toLong)
-    deleteDir(spark, s"$storeDir/_cdc_pending")
-    deleteDir(spark, staging) // marker retired first, staging last
-    audit
-  }
-
-  /** Roll a crashed [[mergeCdc]] forward: while the `_cdc_pending`
-    * marker is up, the staged post-merge content at `_staging/out` is
-    * authoritative for its buckets — redo the dynamic overwrite from
-    * it, remove the marker's emptied-bucket dirs, then retire marker
-    * and staging. A marker HUSK (crash during the marker write) means
-    * the overwrite never started: the store is pre-merge intact and
-    * only debris clears. Idempotent, called by every mergeCdc entry. */
-  private def rollForwardCdc(spark: org.apache.spark.sql.SparkSession,
-                             storeDir: String): Unit = {
-    val markerDir = s"$storeDir/_cdc_pending"
-    if (!Fs.exists(spark, markerDir)) return
-    // ONLY the fileless-dir AnalysisException means "husk" — any other
-    // failure (transient IO, throttling) must PROPAGATE: treating it
-    // as a husk would delete the marker and the staged redo log, the
-    // sole recovery source of a half-applied merge (review r12)
-    val rows =
-      try spark.read.schema("bucket INT")
-        .parquet(s"$markerDir/emptied").collect().map(_.getInt(0))
-      catch {
-        case _: org.apache.spark.sql.AnalysisException => Array.empty[Int]
-      }
-    // zero rows = a HUSK (the -1 sentinel makes every committed
-    // marker non-empty): the crash hit the marker write itself, so
-    // nothing after it ran and the store is pre-merge intact
-    if (rows.nonEmpty) {
-      val emptied = rows.filter(_ >= 0)
-      val outPath = s"$storeDir/_staging/out"
-      if (Fs.exists(spark, outPath)) {
-        // a fileless out dir (the merge emptied every touched bucket)
-        // throws on the eager schemaless READ — no survivor rewrite
-        // was owed; a failure in the redo WRITE must propagate before
-        // the retirement below discards the redo log
-        val outDf =
-          try Some(spark.read.parquet(outPath))
-          catch { case _: org.apache.spark.sql.AnalysisException => None }
-        outDf.foreach(_
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("bucket")
-          .parquet(storeDir))
-      }
-      for (b <- emptied) deleteDir(spark, s"$storeDir/bucket=$b")
-    }
-    deleteDir(spark, markerDir)
-    deleteDir(spark, s"$storeDir/_staging")
+    StoreTxn.commit(spark, "mergeCdc", redo,
+      if (outBuckets.nonEmpty) Some(out) else None, emptied.toSeq)
+    CdcAudit(nUpserts, nDeletes, touched.length.toLong)
   }
 
   /** ANALYZE-style per-column statistics — the planner-food every
@@ -518,7 +444,7 @@ object Sharding {
       Fs.delete(spark, staging)
     }
     try {
-      val ch = stageRead(
+      val ch = StoreTxn.stage(
         changes.withColumn("bucket", shardOf(col("doc_id"), nBuckets)),
         s"$staging/changes")
       // deterministic batch signature (count + decimal hash-sum): the
@@ -559,7 +485,7 @@ object Sharding {
       val recorded = Fs.readUtf8IfExists(spark, ledger)
       if (recorded.contains(sig) || recorded.contains(untaggedContentSig) ||
         recorded.contains(legacyKeysSig)) {
-        deleteDir(spark, staging)
+        Fs.delete(spark, staging)
         return spark.read.parquet(statsDir)
       }
       // the same conflicting-batch gate mergeCdc enforces, HERE too:
@@ -588,7 +514,7 @@ object Sharding {
       val delta = plus.unionByName(minus)
         .groupBy(col("source"))
         .agg(sum(col("d_docs")).as("d_docs"), sum(col("d_chars")).as("d_chars"))
-      val updated = stageRead(
+      val updated = StoreTxn.stage(
         spark.read.parquet(statsDir).join(delta, Seq("source"), "full_outer")
           .select(col("source"),
             (coalesce(col("n_docs"), lit(0L)) +
@@ -606,13 +532,13 @@ object Sharding {
       updated.coalesce(1).write.mode("overwrite").parquet(statsDir)
       Fs.writeUtf8Atomic(spark, ledger, sig)
       Fs.delete(spark, marker)
-      deleteDir(spark, staging)
+      Fs.delete(spark, staging)
       spark.read.parquet(statsDir)
     } catch {
       case e: Throwable =>
         // only pre-marker failures may clear staging — once the
         // marker is up, the staged rollup is the recovery source
-        if (!Fs.exists(spark, marker)) deleteDir(spark, staging)
+        if (!Fs.exists(spark, marker)) Fs.delete(spark, staging)
         throw e
     }
   }

@@ -29,18 +29,23 @@ object Sketches {
     * store's whole premise is "keep the sketch, drop the data", so
     * the partition may be unrebuildable and every merged estimate
     * silently under-counts. The marker is up for the write's
-    * duration; readers FAIL FAST on it (loud beats a wrong estimate)
-    * and re-running the same backfill — the replay contract — clears
-    * it (review r12). */
-  private def markerPath(dir: String): String = s"$dir/_backfill_pending"
-
-  private def requireNoCrashedBackfill(spark: SparkSession,
-                                       dir: String): Unit =
-    require(!Fs.exists(spark, markerPath(dir)),
-      s"sketch store $dir: a shard backfill crashed mid-commit " +
-        "(_backfill_pending) — re-run the same backfill to converge " +
-        "before reading estimates")
-
+    * duration ([[StoreTxn.Guard]]); readers FAIL FAST on it (loud
+    * beats a wrong estimate) and re-running the same backfill — the
+    * replay contract — clears it (review r12). An UNRELATED later
+    * backfill must not absorb a crashed one's marker (its success
+    * would unblock readers while the crashed shard's sketches are
+    * still gone): it refuses unless the caller states it IS the
+    * recovery rerun (`allowPending`). */
+  private def backfill(dir: String): StoreTxn.Guard = {
+    val marker = "_backfill_pending"
+    StoreTxn.Guard(s"$dir/$marker",
+      crashed = s"sketch store $dir: a shard backfill crashed mid-commit " +
+        s"($marker) — re-run the same backfill to converge " +
+        "before reading estimates",
+      refusal = s"sketch store $dir: a previous backfill crashed " +
+        s"mid-commit ($marker) — re-run THAT backfill with " +
+        "allowPending=true before any other write")
+  }
 
   /** Sketch one shard batch (or a whole table of shards) into the
     * store: one hash-aggregate pass over the rows, one (shard, group)
@@ -51,25 +56,17 @@ object Sketches {
   def writeHllShards(df: DataFrame, dir: String, shard: Column,
                      group: Column, id: Column, lgK: Int = 12,
                      allowPending: Boolean = false): Unit = {
-    val spark = df.sparkSession
-    // an UNRELATED later backfill must not absorb a crashed one's
-    // marker (its success would unblock readers while the crashed
-    // shard's sketches are still gone — review r12): refuse unless
-    // the caller states it IS the recovery rerun of the crashed write
-    require(allowPending || !Fs.exists(spark, markerPath(dir)),
-      s"sketch store $dir: a previous backfill crashed mid-commit " +
-        "(_backfill_pending) — re-run THAT backfill with " +
-        "allowPending=true before any other write")
-    Fs.touch(spark, markerPath(dir))
-    df.groupBy(shard.as("shard"), group.as("grp"))
-      .agg(hll_sketch_agg(id, lit(lgK)).as("sketch"),
-        count(lit(1)).as("n_rows"))
-      .repartition(col("shard"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("shard")
-      .parquet(dir)
-    Fs.delete(spark, markerPath(dir))
+    backfill(dir).write(df.sparkSession, "writeHllShards",
+        recovery = allowPending) {
+      df.groupBy(shard.as("shard"), group.as("grp"))
+        .agg(hll_sketch_agg(id, lit(lgK)).as("sketch"),
+          count(lit(1)).as("n_rows"))
+        .repartition(col("shard"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("shard")
+        .parquet(dir)
+    }
   }
 
   /** Per-group distinct-count estimate from the STORED sketches alone
@@ -77,7 +74,7 @@ object Sketches {
     * shards, then the estimator; `n_rows` sums exactly alongside so
     * the consumer sees both scales. */
   def mergedDistinct(spark: SparkSession, dir: String): DataFrame = {
-    requireNoCrashedBackfill(spark, dir)
+    backfill(dir).failIfPending(spark)
     spark.read.parquet(dir)
       .groupBy(col("grp"))
       .agg(hll_sketch_estimate(hll_union_agg(col("sketch")))
@@ -97,7 +94,7 @@ object Sketches {
     * envelope); groups are few by construction, so the pair self-join
     * is a broadcast over a group-count-sized table. */
   def overlapEstimate(spark: SparkSession, dir: String): DataFrame = {
-    requireNoCrashedBackfill(spark, dir)
+    backfill(dir).failIfPending(spark)
     val g = spark.read.parquet(dir)
       .groupBy(col("grp"))
       .agg(hll_union_agg(col("sketch")).as("sk"))
@@ -172,30 +169,27 @@ object Sketches {
                       shard: Column, lo: Double, hi: Double,
                       nBins: Int, allowPending: Boolean = false): Unit = {
     require(nBins >= 2 && hi > lo, s"need nBins>=2 and hi>lo, got $nBins, [$lo,$hi]")
-    require(allowPending || !Fs.exists(df.sparkSession, markerPath(dir)),
-      s"sketch store $dir: a previous backfill crashed mid-commit " +
-        "(_backfill_pending) — re-run THAT backfill with " +
-        "allowPending=true before any other write")
-    Fs.touch(df.sparkSession, markerPath(dir))
     val w = (hi - lo) / nBins
-    // NaN is dropped with NULL: under a non-ANSI cast floor(NaN)
-    // lands in bin 0 and silently skews every low-end quantile
-    df.select(shard.as("shard"), value.cast("double").as("v"))
-      .where(col("v").isNotNull && !isnan(col("v")))
-      // clamp on the LONG floor result BEFORE narrowing: a far
-      // out-of-frame value (corrupt input under histIngest's fixed
-      // design-time frame) otherwise wraps through the int cast into
-      // an arbitrary interior bin instead of the edge bin
-      .withColumn("bin",
-        least(lit(nBins - 1L), greatest(lit(0L),
-          floor((col("v") - lit(lo)) / lit(w)))).cast("int"))
-      .groupBy(col("shard"), col("bin"))
-      .agg(count(lit(1)).as("c"))
-      .repartition(col("shard"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("shard").parquet(dir)
-    Fs.delete(df.sparkSession, markerPath(dir))
+    backfill(dir).write(df.sparkSession, "writeHistShards",
+        recovery = allowPending) {
+      // NaN is dropped with NULL: under a non-ANSI cast floor(NaN)
+      // lands in bin 0 and silently skews every low-end quantile
+      df.select(shard.as("shard"), value.cast("double").as("v"))
+        .where(col("v").isNotNull && !isnan(col("v")))
+        // clamp on the LONG floor result BEFORE narrowing: a far
+        // out-of-frame value (corrupt input under histIngest's fixed
+        // design-time frame) otherwise wraps through the int cast into
+        // an arbitrary interior bin instead of the edge bin
+        .withColumn("bin",
+          least(lit(nBins - 1L), greatest(lit(0L),
+            floor((col("v") - lit(lo)) / lit(w)))).cast("int"))
+        .groupBy(col("shard"), col("bin"))
+        .agg(count(lit(1)).as("c"))
+        .repartition(col("shard"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("shard").parquet(dir)
+    }
   }
 
   /** Interpolated quantile estimates from the stored histogram ALONE
@@ -211,7 +205,7 @@ object Sketches {
                     ps: Seq[Double]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(ps.nonEmpty && ps.forall(p => p > 0 && p <= 1))
-    requireNoCrashedBackfill(spark, dir)
+    backfill(dir).failIfPending(spark)
     val w = (hi - lo) / nBins
     val cum = spark.read.parquet(dir)
       .groupBy(col("bin")).agg(sum(col("c")).as("c"))

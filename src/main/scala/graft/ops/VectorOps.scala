@@ -1190,41 +1190,28 @@ object VectorOps {
     val trainRows = trainSample(corpus, maxTrain)
     require(trainRows.nonEmpty, "cannot build an IVF index on an empty corpus")
     val centers = localKMeans(trainRows, autoCells(corpus, nCells), iters = 5)
-    // a rebuild into an existing dir must not inherit a crashed
-    // delete's marker — but the crashed delete must be ROLLED FORWARD
-    // (emptied-cell dirs removed), not merely forgotten: a blind
-    // marker wipe opens a window (before our own marker lands) where
-    // a crash resurrects acknowledged-deleted rows with nothing left
-    // to protect readers (review r12). A lingering rebuild marker
-    // means the LAST crash was a rebuild (it wiped _maintenance
-    // first) — this rerun IS its heal, wipe and proceed.
-    if (pathExists(spark, rebuildPendingPath(indexDir)))
-      deleteDir(spark, s"$indexDir/_maintenance")
-    else
-      completePendingRemoves(spark, indexDir)
-    // rebuild-in-flight marker BEFORE the first overwrite: the two
-    // overwrites below are only individually atomic, and a crash
-    // between them leaves fresh centroids quantizing the OLD corpus
-    // partitioning — readers fail fast on the marker instead of
-    // serving silently wrong neighbors; rerunning the build clears it
-    Fs.touch(spark, rebuildPendingPath(indexDir))
-    spark.createDataset(centers.toIndexedSeq.zipWithIndex
-        .map { case (c, i) => (i, c.toSeq) })
-      .toDF("cell", "center")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$indexDir/centroids")
-    corpus.withColumn("gen", lit(0))
-      .withColumn("cell",
-        element_at(pqEncodeIf(native, col("v"), Array(centers), 1), 1))
-      .write.mode("overwrite")
-      // STATIC pinned: under a session-wide dynamic default this
-      // rebuild would keep old cell dirs empty under the NEW
-      // centroids — stale rows encoded under the old quantizer
-      // served alongside the new index (review r12)
-      .option("partitionOverwriteMode", "static")
-      .partitionBy("cell")
-      .parquet(s"$indexDir/corpus")
-    deleteDir(spark, rebuildPendingPath(indexDir))
+    // the two overwrites below are only individually atomic, and a
+    // crash between them leaves fresh centroids quantizing the OLD
+    // corpus partitioning — readers fail fast on the rebuild marker
+    // instead of serving silently wrong neighbors
+    rebuilding(spark, indexDir, "buildIvfIndex") {
+      spark.createDataset(centers.toIndexedSeq.zipWithIndex
+          .map { case (c, i) => (i, c.toSeq) })
+        .toDF("cell", "center")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$indexDir/centroids")
+      corpus.withColumn("gen", lit(0))
+        .withColumn("cell",
+          element_at(pqEncodeIf(native, col("v"), Array(centers), 1), 1))
+        .write.mode("overwrite")
+        // STATIC pinned: under a session-wide dynamic default this
+        // rebuild would keep old cell dirs empty under the NEW
+        // centroids — stale rows encoded under the old quantizer
+        // served alongside the new index (review r12)
+        .option("partitionOverwriteMode", "static")
+        .partitionBy("cell")
+        .parquet(s"$indexDir/corpus")
+    }
   }
 
   /** Batch-vs-corpus embedding near-dup under a STORED quantizer: the
@@ -1260,7 +1247,7 @@ object VectorOps {
     * incremental operation reuses verbatim. */
   private def storedCenters(spark: SparkSession,
                             indexDir: String): Array[Array[Double]] = {
-    requireNoInterruptedRebuild(spark, indexDir)
+    rebuildGuard(indexDir).failIfPending(spark)
     spark.read.parquet(s"$indexDir/centroids")
       .orderBy(col("cell")).collect()
       .map(_.getAs[scala.collection.Seq[Double]]("center").toArray)
@@ -1339,42 +1326,27 @@ object VectorOps {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Write `df` to `path` and read it back: a DURABLE materialization
-    * barrier. The index-maintenance paths used localCheckpoint here
-    * (executor-memory, single-replica) — fine on local[32], but on a
-    * real cluster an executor loss mid-overwrite killed the JOB with
-    * the only copy of the carried index rows (truncated lineage is
-    * unrecoverable) while their durable files were being replaced
-    * (VERDICT r8 #1, the one weak mark). Parquet staging under the
-    * index root costs one extra write+read of the (batch-proportional)
-    * staged rows and survives any task/executor retry. */
-  private def stageRead(df: DataFrame, path: String): DataFrame = {
-    df.write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
-  }
-
-  private def deleteDir(spark: SparkSession, dir: String): Unit =
-    Fs.delete(spark, dir)
-
-  private def pathExists(spark: SparkSession, dir: String): Boolean =
-    Fs.exists(spark, dir)
-
-  /** Delete's crash-window marker (VERDICT r9 #3): the cell ids a
-    * [[deleteFromIvfIndex]] will leave WHOLLY EMPTY, written durably
-    * BEFORE the survivor overwrite and removed only after the emptied
-    * cell directories are gone. A crash anywhere in between leaves the
-    * marker behind, and then (a) every corpus READER filters the
-    * marked cells out ([[readCorpus]]) — their rows are by definition
-    * all in the acknowledged delete's id set, so serving them would be
-    * resurrection — and (b) every MAINTENANCE entry first completes
-    * the removal ([[completePendingRemoves]]): remove the listed dirs
-    * (idempotent — some may already be gone), then drop the marker.
-    * Nested under a `_`-prefixed parent (the `_staging/ids`
-    * convention): invisible to Spark's data-file listing of the index
-    * root, while the explicit leaf path reads back cleanly (an
-    * underscore LEAF would trip the hidden-path filter's warning). */
-  private def pendingRemovesPath(indexDir: String): String =
-    s"$indexDir/_maintenance/pending_removes"
+  /** The corpus's redo layout ([[StoreTxn.Redo]]) — the crash-window
+    * protocol of every corpus rewrite ([[deleteFromIvfIndex]],
+    * [[appendStaged]], [[compactCells]]; VERDICT r9 #3, review r12):
+    * the post-commit content of the touched cells is staged at
+    * `_staging/carried`, and the `_maintenance/pending_removes` marker
+    * names the cells the commit leaves WHOLLY EMPTY (plus the
+    * sentinel) before the overwrite. While it is up (a) every corpus
+    * READER filters the marked cells out ([[readCorpus]]) — their rows
+    * are by definition all in an acknowledged delete's id set, so
+    * serving them would be resurrection — and (b) every MAINTENANCE
+    * entry first rolls the commit forward ([[maintaining]]): the
+    * overwrite redone from the staged copy, the marked dirs removed,
+    * the marker retired, then the staging. Nested under a
+    * `_`-prefixed parent: invisible to Spark's data-file listing of
+    * the index root, while the explicit leaf path reads back cleanly
+    * (an underscore LEAF would trip the hidden-path filter's
+    * warning). */
+  private def ivfRedo(indexDir: String) = StoreTxn.Redo(
+    target = s"$indexDir/corpus", partCol = "cell",
+    markerDir = s"$indexDir/_maintenance", markerLeaf = "pending_removes",
+    staging = s"$indexDir/_staging", staged = s"$indexDir/_staging/carried")
 
   /** Marker present from just before a REBUILD's centroid overwrite
     * until just after its corpus overwrite commits. A rebuild into an
@@ -1384,98 +1356,43 @@ object VectorOps {
     * serves silently wrong neighbors. Readers fail FAST on the
     * marker ("interrupted rebuild, rerun buildIvfIndex") instead;
     * rerunning the build clears it (review r11). */
-  private def rebuildPendingPath(indexDir: String): String =
-    s"$indexDir/_maintenance/rebuild_pending"
-
-  private def requireNoInterruptedRebuild(spark: SparkSession,
-                                          indexDir: String): Unit =
-    if (pathExists(spark, rebuildPendingPath(indexDir)))
-      throw new IllegalStateException(
-        s"$indexDir: a rebuild was interrupted mid-overwrite (marker " +
-          s"${rebuildPendingPath(indexDir)} present) — centroids and " +
-          "corpus may disagree; rerun buildIvfIndex/buildIvfPqIndex " +
-          "over the full snapshot to converge")
-
-  private def pendingRemovedCells(spark: SparkSession,
-                                  indexDir: String): Array[Int] = {
-    val p = pendingRemovesPath(indexDir)
-    if (!pathExists(spark, p)) Array.empty
-    // EXPLICIT schema (the InvertedIndex.postingsSchema rule): a crash
-    // DURING the marker write leaves a fileless directory (_temporary
-    // only); schema inference would throw on it forever — bricking
-    // every reader — where an empty frame means "no pending removals"
-    // and the next maintenance call simply clears the husk
-    else
-      try spark.read.schema("cell INT").parquet(p)
-        .collect().map(_.getInt(0))
-      catch {
-        // maintenance retired the marker between the exists() probe
-        // and this read (the readMarker TOCTOU class, r14): the
-        // removals were fully applied, so "no pending removals" is
-        // the consistent answer — a lock-free reader must never die
-        // on a racing roll-forward. Matched by error CONDITION, not
-        // message text (ADVICE r14): a reworded/localized message
-        // would either re-expose the race or over-match an unrelated
-        // analysis failure as "no pending removals"
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" =>
-          Array.empty[Int]
-        case _: java.io.FileNotFoundException => Array.empty[Int]
-      }
+  private def rebuildGuard(indexDir: String): StoreTxn.Guard = {
+    val marker = s"$indexDir/_maintenance/rebuild_pending"
+    StoreTxn.Guard(marker,
+      crashed = s"$indexDir: a rebuild was interrupted mid-overwrite " +
+        s"(marker $marker present) — centroids and corpus may " +
+        "disagree; rerun buildIvfIndex/buildIvfPqIndex over the full " +
+        "snapshot to converge")
   }
 
-  /** Roll a crashed delete FORWARD — the WHOLE delete, not just its
-    * emptied-cell half: a delete stages its survivors durably before
-    * the marker, so if the marker is still up and the staged
-    * survivors are readable, the survivor overwrite is REDONE from
-    * them first (a crash between the marker write and the survivor
-    * overwrite would otherwise leave partially-touched cells serving
-    * acknowledged-deleted rows forever once the marker dropped —
-    * review r12), then the emptied-cell dirs and the marker retire,
-    * then the staging. Safe to call at any time (no-op without a
-    * marker); every maintenance entry point calls it first so a
-    * crashed delete can never interleave its leftover state with new
-    * writes. */
-  private def completePendingRemoves(spark: SparkSession,
-                                     indexDir: String): Unit = {
-    // an interrupted REBUILD is not completable by roll-forward —
-    // refuse before touching anything (only a rebuild rerun heals
-    // it); with that guard passed, no rebuild_pending sibling can
-    // exist, so removing the parent wholesale is safe
-    requireNoInterruptedRebuild(spark, indexDir)
-    if (!pathExists(spark, s"$indexDir/_maintenance")) return
-    val cells = pendingRemovedCells(spark, indexDir)
-    if (cells.nonEmpty) {
-      // a READABLE marker ⟹ the delete got past its marker write, and
-      // its staging was not yet retired (staging deletes strictly
-      // after the marker), so a readable staged-survivor set is THIS
-      // delete's — redo its dynamic overwrite (idempotent: identical
-      // content per cell) before the dir removals. An all-emptied
-      // delete staged a FILELESS carried dir; reading it throws —
-      // that simply means no survivor rewrite was owed. A marker HUSK
-      // (crash during the marker write itself) means nothing after
-      // staging ever ran — the corpus is pre-delete intact, so only
-      // the debris clears below.
-      val carriedPath = s"$indexDir/_staging/carried"
-      if (pathExists(spark, carriedPath)) {
-        // scope the fileless-dir catch to the READ alone (parquet
-        // schema resolution is eager, so a fileless carried — the
-        // all-emptied delete — throws here): a failure in the redo
-        // WRITE must propagate, or the emptied-dir/marker retirement
-        // below would discard the redo log after a failed redo
-        val carriedDf =
-          try Some(spark.read.parquet(carriedPath))
-          catch { case _: org.apache.spark.sql.AnalysisException => None }
-        carriedDf.foreach(_
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("cell")
-          .parquet(s"$indexDir/corpus"))
-      }
-      for (c <- cells) deleteDir(spark, s"$indexDir/corpus/cell=$c")
-    }
-    deleteDir(spark, s"$indexDir/_maintenance")
-    deleteDir(spark, s"$indexDir/_staging")
+  private[graft] def rebuildPending(spark: SparkSession,
+                                    indexDir: String): Boolean =
+    rebuildGuard(indexDir).pending(spark)
+
+  /** A corpus rewrite under the redo protocol. An interrupted REBUILD
+    * is not completable by roll-forward — refuse before touching
+    * anything (only a rebuild rerun heals it). */
+  private def maintaining[T](spark: SparkSession, indexDir: String,
+                             op: String)(body: StoreTxn.Redo => T): T = {
+    rebuildGuard(indexDir).failIfPending(spark)
+    val redo = ivfRedo(indexDir)
+    StoreTxn.run(spark, op, redo)(body(redo))
+  }
+
+  /** A rebuild under the in-flight guard. It must not inherit a
+    * crashed rewrite's marker — but the crashed rewrite is ROLLED
+    * FORWARD (emptied-cell dirs removed), not merely forgotten: a
+    * blind marker wipe opens a window (before our own marker lands)
+    * where a crash resurrects acknowledged-deleted rows with nothing
+    * left to protect readers (review r12). A lingering rebuild marker
+    * means the LAST crash was a rebuild — this rerun IS its heal. */
+  private def rebuilding(spark: SparkSession, indexDir: String,
+                         op: String)(body: => Unit): Unit = {
+    val redo = ivfRedo(indexDir)
+    if (rebuildPending(spark, indexDir))
+      Fs.delete(spark, redo.markerDir) // superseded by this rerun
+    else StoreTxn.rollForward(spark, op, redo)
+    rebuildGuard(indexDir).write(spark, op)(body)
   }
 
   /** The one corpus-read helper every SERVING path goes through:
@@ -1486,9 +1403,9 @@ object VectorOps {
     * existence probe). Read-only paths filter rather than complete:
     * search must not need write permission on the index. */
   private def readCorpus(spark: SparkSession, indexDir: String): DataFrame = {
-    requireNoInterruptedRebuild(spark, indexDir)
+    rebuildGuard(indexDir).failIfPending(spark)
     val corpus = spark.read.parquet(s"$indexDir/corpus")
-    val pend = pendingRemovedCells(spark, indexDir)
+    val pend = StoreTxn.pendingEmptied(spark, ivfRedo(indexDir))
     if (pend.isEmpty) corpus
     else corpus.where(!col("cell").isin(pend.map(Int.box).toSeq: _*))
   }
@@ -1502,16 +1419,14 @@ object VectorOps {
     * rewrite, atomic per partition, layout-stable for q112 probes.
     * Touched cells collect to the driver (≤ nCells ints) so the
     * survivor scan prunes STATICALLY via isin on the partition column
-    * — a semi-join would depend on dynamic pruning kicking in. Both
-    * the encoded batch and the carried rows stage as parquet under
-    * `$indexDir/_staging` ([[stageRead]]): the overwrite reads only
-    * durable files (Spark refuses to overwrite a path its own plan
-    * still reads, and executor loss mid-write just retries tasks),
-    * and a nondeterministic batch plan is evaluated exactly once.
-    * The staging dir is removed on every exit; a crash can leave it
-    * behind, but `_`-prefixed dirs are invisible to Spark's file
-    * listing, so a stale one never pollutes an index read and the
-    * next maintenance call overwrites it.
+    * — a semi-join would depend on dynamic pruning kicking in. The
+    * encoded batch stages under `$indexDir/_staging`
+    * ([[StoreTxn.stage]]: a nondeterministic batch plan is evaluated
+    * exactly once), and so does the touched cells' post-commit
+    * content (carried ∪ fresh), the commit's redo log
+    * ([[ivfRedo]]): a crash mid-overwrite is rolled forward from it
+    * by the next maintenance call instead of losing the torn cell's
+    * rows.
     *
     * Idempotence: an id already stored sits in the SAME cell (same
     * quantizer, deterministic assignment), so the anti-join against
@@ -1520,38 +1435,33 @@ object VectorOps {
     * rows are stamped `gen = 1` (appended) for [[indexDrift]];
     * carried rows keep their generation. */
   private def appendStaged(spark: SparkSession, indexDir: String,
-                           coded: DataFrame): Unit = {
-    // roll a crashed delete forward before touching the corpus: a
+                           coded: DataFrame): Unit =
+    // a crashed rewrite rolls forward before the corpus is touched: a
     // leftover marker's cells must not receive new rows while their
     // old (deleted) rows still sit in the directory
-    completePendingRemoves(spark, indexDir)
-    val staging = s"$indexDir/_staging"
-    try {
+    maintaining(spark, indexDir, "appendStaged") { redo =>
       // the touched-cell set rides the staging WRITE via observe
       // (r18, guide §1.2 — the r17 InvertedIndex pattern): it used to
       // be a separate distinct+collect job over the staged files,
       // pure per-action overhead on a batch-sized frame
       val obs = org.apache.spark.sql.Observation()
       coded.observe(obs, collect_set(col("cell")).as("cells"))
-        .write.mode("overwrite").parquet(s"$staging/batch")
-      val batch = spark.read.parquet(s"$staging/batch")
+        .write.mode("overwrite").parquet(s"${redo.staging}/batch")
+      val batch = spark.read.parquet(s"${redo.staging}/batch")
       val touched = Observed.ints(obs, "cells").toArray
-      if (touched.isEmpty) return // empty batch: schedule no write at all
-      val existing = spark.read.parquet(s"$indexDir/corpus")
-      val carried = stageRead(
-        existing.where(col("cell").isin(touched.map(Int.box).toSeq: _*)),
-        s"$staging/carried")
-      val fresh = batch
-        .join(carried.select(col("vec_id")), Seq("vec_id"), "left_anti")
-        .withColumn("gen", lit(1))
-      carried.unionByName(fresh)
-        .select(carried.columns.map(col).toIndexedSeq: _*)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell")
-        .parquet(s"$indexDir/corpus")
-    } finally deleteDir(spark, staging)
-  }
+      if (touched.isEmpty) // empty batch: schedule no write at all
+        Fs.delete(spark, redo.staging)
+      else {
+        val carried = spark.read.parquet(s"$indexDir/corpus")
+          .where(col("cell").isin(touched.map(Int.box).toSeq: _*))
+        val fresh = batch
+          .join(carried.select(col("vec_id")), Seq("vec_id"), "left_anti")
+          .withColumn("gen", lit(1))
+        val staged = StoreTxn.stage(carried.unionByName(fresh)
+          .select(carried.columns.map(col).toIndexedSeq: _*), redo.staged)
+        StoreTxn.commit(spark, "appendStaged", redo, Some(staged), Nil)
+      }
+    }
 
   /** Per-subspace codebooks of a stored PQ index, (sub, code)-ordered. */
   private def storedBooks(spark: SparkSession, indexDir: String,
@@ -1594,36 +1504,31 @@ object VectorOps {
       localKMeans(trainRows.map(_.slice(s * w_, (s + 1) * w_)),
         codebookSize, iters = 5)
     }
-    // same stale-marker hygiene + rebuild-in-flight marker as
-    // buildIvfIndex (FOUR overwrites here — the window is wider):
-    // roll a crashed delete forward, wipe only after a crashed REBUILD
-    if (pathExists(spark, rebuildPendingPath(indexDir)))
-      deleteDir(spark, s"$indexDir/_maintenance")
-    else
-      completePendingRemoves(spark, indexDir)
-    Fs.touch(spark, rebuildPendingPath(indexDir))
-    spark.createDataset(Seq((subs, codebookSize, dim)))
-      .toDF("subs", "codebook_size", "dim")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta")
-    spark.createDataset(coarse.toIndexedSeq.zipWithIndex
-        .map { case (c, i) => (i, c.toSeq) })
-      .toDF("cell", "center")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
-    spark.createDataset(for {
-        (book, s) <- books.toIndexedSeq.zipWithIndex
-        (cen, c) <- book.toIndexedSeq.zipWithIndex
-      } yield (s, c, cen.toSeq))
-      .toDF("sub", "code", "center")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/books")
-    corpus
-      .withColumn("cell", element_at(pqEncodeIf(native, col("v"), Array(coarse), 1), 1))
-      .withColumn("codes", pqEncodeIf(native, col("v"), books, 1))
-      .select(col("vec_id"), col("codes"), col("n"), lit(0).as("gen"), col("cell"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "static") // the buildIvfIndex rule
-      .partitionBy("cell")
-      .parquet(s"$indexDir/corpus")
-    deleteDir(spark, rebuildPendingPath(indexDir))
+    // the buildIvfIndex rebuild guard (FOUR overwrites here — the
+    // window is wider)
+    rebuilding(spark, indexDir, "buildIvfPqIndex") {
+      spark.createDataset(Seq((subs, codebookSize, dim)))
+        .toDF("subs", "codebook_size", "dim")
+        .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta")
+      spark.createDataset(coarse.toIndexedSeq.zipWithIndex
+          .map { case (c, i) => (i, c.toSeq) })
+        .toDF("cell", "center")
+        .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
+      spark.createDataset(for {
+          (book, s) <- books.toIndexedSeq.zipWithIndex
+          (cen, c) <- book.toIndexedSeq.zipWithIndex
+        } yield (s, c, cen.toSeq))
+        .toDF("sub", "code", "center")
+        .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/books")
+      corpus
+        .withColumn("cell", element_at(pqEncodeIf(native, col("v"), Array(coarse), 1), 1))
+        .withColumn("codes", pqEncodeIf(native, col("v"), books, 1))
+        .select(col("vec_id"), col("codes"), col("n"), lit(0).as("gen"), col("cell"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "static") // the buildIvfIndex rule
+        .partitionBy("cell")
+        .parquet(s"$indexDir/corpus")
+    }
   }
 
   /** Approximate cosine top-k against a STORED IVF+PQ index: probe
@@ -1676,83 +1581,59 @@ object VectorOps {
     * "deleted" rows would silently survive.
     *
     * CRASH SAFETY: the survivor overwrite and the emptied-cell dir
-    * removal are two filesystem operations, but the window between
-    * them is closed by the `_pending_removes` marker: the to-be-
-    * emptied cell ids are written durably BEFORE the overwrite,
-    * readers filter marked cells out, every maintenance entry rolls
-    * the removal forward, and the marker is dropped only after the
-    * dirs are gone (partially-emptied cells were always safe — their
-    * overwrite is atomic per partition). IvfIndexSpec simulates the
-    * crash and pins search correctness + idempotent completion. */
+    * removal are two filesystem operations, and the overwrite itself
+    * is per-partition delete-then-rename; the corpus redo protocol
+    * ([[ivfRedo]]) closes both windows: the to-be-emptied cell ids
+    * are written durably BEFORE the overwrite, readers filter marked
+    * cells out, every maintenance entry rolls the whole delete
+    * forward from the staged survivors, and the marker is dropped
+    * only after the dirs are gone. IvfIndexSpec and StoreTxnSpec
+    * simulate the crashes and pin search correctness + idempotent
+    * completion. */
   def deleteFromIvfIndex(spark: SparkSession, indexDir: String,
-                         ids: DataFrame): Unit = {
-    completePendingRemoves(spark, indexDir) // finish any crashed delete first
-    val staging = s"$indexDir/_staging"
-    // NO blanket finally-cleanup of staging: the staged survivors ARE
-    // the redo log completePendingRemoves rewrites from when a marked
-    // delete crashes or its job fails — staging must outlive the
-    // marker (review r12); it is deleted on the success path and on
-    // the explicit pre-marker exits, and a marked failure leaves it
-    // for the roll-forward
-    val existing = spark.read.parquet(s"$indexDir/corpus")
+                         ids: DataFrame): Unit =
+    // finishes any crashed rewrite first. NO blanket finally-cleanup
+    // of staging: the staged survivors ARE the redo log of a marked
+    // delete that crashes or whose job fails — staging must outlive
+    // the marker (review r12); the pre-marker exits clear it
+    maintaining(spark, indexDir, "deleteFromIvfIndex") { redo =>
+      val existing = spark.read.parquet(s"$indexDir/corpus")
       // materialize the id set ONCE, durably: a nondeterministic ids
       // plan (limit/sample) evaluated twice could rewrite one id's cell
       // while anti-joining a different id set — a silent partial delete
-      val idSet = stageRead(ids.select(col("vec_id")).distinct(),
-        s"$staging/ids")
+      val idSet = StoreTxn.stage(ids.select(col("vec_id")).distinct(),
+        s"${redo.staging}/ids")
       val touched = existing.join(idSet, Seq("vec_id"), "left_semi")
         .select(col("cell")).distinct().collect().map(_.getInt(0))
-      if (touched.isEmpty) { // nothing stored under those ids
-        deleteDir(spark, staging)
-        return
+      if (touched.isEmpty) // nothing stored under those ids
+        Fs.delete(spark, redo.staging)
+      else {
+        val allCells = existing.select(col("cell")).distinct()
+          .collect().map(_.getInt(0)).toSet
+        // survivors of the touched cells — a STATIC isin on the
+        // partition column (guaranteed pruning; a broadcast semi-join
+        // would depend on dynamic pruning kicking in), staged as the
+        // commit's redo log. Written as-is: the schema comes from the
+        // index itself, so the same function serves the raw-vector and
+        // the codes-only (PQ) layouts.
+        val carried = StoreTxn.stage(
+          existing.where(col("cell").isin(touched.map(Int.box).toSeq: _*))
+            .join(idSet, Seq("vec_id"), "left_anti"),
+          redo.staged)
+        val carriedEmpty = carried.isEmpty
+        // pre-marker refusal: the staging clears on the way out
+        if (carriedEmpty && touched.toSet == allCells)
+          throw new VectorOps.WouldEmptyIndexException
+        // the cells this delete empties entirely are known BEFORE the
+        // overwrite, so they ride the marker: readers filter them
+        // ([[readCorpus]]) until their dirs are gone
+        val survivorCells = carried.select(col("cell")).distinct()
+          .collect().map(_.getInt(0)).toSet
+        StoreTxn.commit(spark, "deleteFromIvfIndex", redo,
+          if (carriedEmpty) None else Some(carried),
+          touched.filterNot(survivorCells.contains).toSeq)
       }
-      val allCells = existing.select(col("cell")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      // survivors of the touched cells — a STATIC isin on the partition
-      // column (guaranteed pruning; a broadcast semi-join would depend
-      // on dynamic pruning kicking in), staged durably before the
-      // overwrite ([[stageRead]] — same fault-tolerance rationale as
-      // append). Written as-is: the schema comes from the index itself,
-      // so the same function serves the raw-vector and the codes-only
-      // (PQ) layouts.
-      val carried = stageRead(
-        existing.where(col("cell").isin(touched.map(Int.box).toSeq: _*))
-          .join(idSet, Seq("vec_id"), "left_anti"),
-        s"$staging/carried")
-      val carriedEmpty = carried.isEmpty
-      if (carriedEmpty && touched.toSet == allCells) {
-        deleteDir(spark, staging) // pre-marker exit: staging is debris
-        throw new VectorOps.WouldEmptyIndexException
-      }
-      // the cells this delete will empty entirely are known BEFORE
-      // the overwrite (carried is durably staged) — write the
-      // _pending_removes marker FIRST, so a crash anywhere between
-      // the survivor overwrite and the directory removals can no
-      // longer resurrect their rows: readers filter marked cells
-      // ([[readCorpus]]), maintenance rolls them forward
-      // ([[completePendingRemoves]]).
-      val survivorCells = carried.select(col("cell")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      val emptied = touched.filterNot(survivorCells.contains)
-      if (emptied.nonEmpty)
-        spark.createDataFrame(emptied.toSeq.map(Tuple1(_))).toDF("cell")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(pendingRemovesPath(indexDir))
-      if (!carriedEmpty)
-        carried
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("cell")
-          .parquet(s"$indexDir/corpus")
-      // a cell emptied entirely is NOT rewritten by a dynamic overwrite
-      // (no surviving row carries its key) — remove its directory,
-      // then retire the marker (removal-before-marker-drop: the
-      // marker outlives every state in which the dirs might remain)
-      for (c <- emptied) deleteDir(spark, s"$indexDir/corpus/cell=$c")
-      if (emptied.nonEmpty)
-        deleteDir(spark, s"$indexDir/_maintenance")
-      deleteDir(spark, staging) // marker retired first, staging last
-  }
+    }
 
   /** Embedding snapshot diff — [[graft.ops.TextOps.snapshotDiff]]'s
     * vector twin (the change audit between two embedding-table
@@ -1836,51 +1717,42 @@ object VectorOps {
     * already-compact cells' files BYTE-UNTOUCHED (they are not read,
     * not rewritten — immutability the spec pins by mtime). Content is
     * preserved verbatim (gen markers included), so search results are
-    * identical before and after. Durable `_staging` + dynamic
-    * partition overwrite, and a crashed delete's pending-removes
-    * marker is rolled forward FIRST — a marked cell must not be
-    * compacted back to life. Idempotent: a second call finds nothing
-    * over the threshold and returns without scheduling a job. */
+    * identical before and after. The rewrite commits under the
+    * corpus redo protocol ([[ivfRedo]]), and a crashed rewrite is
+    * rolled forward FIRST — a marked cell must not be compacted back
+    * to life. Idempotent: a second call finds nothing over the
+    * threshold and returns without scheduling a job. */
   def compactCells(spark: SparkSession, indexDir: String,
                    maxFilesPerCell: Int = 1): Unit = {
     require(maxFilesPerCell >= 1, "maxFilesPerCell must be >= 1")
-    completePendingRemoves(spark, indexDir)
-    val corpusDir = s"$indexDir/corpus"
-    val corpusPath = new org.apache.hadoop.fs.Path(corpusDir)
-    val fs = corpusPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(corpusPath)) return
-    // one namenode listing decides the work set: cells whose data-file
-    // count exceeds the bound (hidden/_SUCCESS entries don't count)
-    val needy = fs.listStatus(corpusPath).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-      .flatMap { st =>
-        val files = fs.listStatus(st.getPath).count { f =>
-          val n = f.getPath.getName
-          f.isFile && !n.startsWith("_") && !n.startsWith(".")
-        }
-        if (files > maxFilesPerCell)
-          Some(st.getPath.getName.stripPrefix("cell=").toInt)
-        else None
+    maintaining(spark, indexDir, "compactCells") { redo =>
+      val corpusPath = new org.apache.hadoop.fs.Path(redo.target)
+      val fs = corpusPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // one namenode listing decides the work set: cells whose
+      // data-file count exceeds the bound (hidden/_SUCCESS entries
+      // don't count)
+      val needy =
+        if (!fs.exists(corpusPath)) Seq.empty[Int]
+        else fs.listStatus(corpusPath).toSeq
+          .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
+          .flatMap { st =>
+            val files = fs.listStatus(st.getPath).count { f =>
+              val n = f.getPath.getName
+              f.isFile && !n.startsWith("_") && !n.startsWith(".")
+            }
+            if (files > maxFilesPerCell)
+              Some(st.getPath.getName.stripPrefix("cell=").toInt)
+            else None
+          }
+      if (needy.nonEmpty) {
+        val carried = StoreTxn.stage(spark.read.parquet(redo.target)
+          .where(col("cell").isin(needy.map(Int.box): _*)), redo.staged)
+        // one output task per needy cell → exactly one file per cell
+        // (hash collisions just mean a task writes two cells' files)
+        StoreTxn.commit(spark, "compactCells", redo,
+          Some(carried.repartition(needy.size, col("cell"))), Nil)
       }
-    if (needy.isEmpty) return
-    val staging = s"$indexDir/_staging"
-    try {
-      // stage the needy cells' rows durably, then overwrite those
-      // partitions from the staged copy (the appendStaged rationale:
-      // Spark refuses to overwrite a path its plan still reads, and
-      // the staged files survive any task retry)
-      val carried = stageRead(
-        spark.read.parquet(corpusDir)
-          .where(col("cell").isin(needy.map(Int.box): _*)),
-        s"$staging/compact")
-      // one output task per needy cell → exactly one file per cell
-      // (hash collisions just mean a task writes two cells' files)
-      carried.repartition(needy.size, col("cell"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell")
-        .parquet(corpusDir)
-    } finally deleteDir(spark, staging)
+    }
   }
 
   /** Centroid-drift audit of a stored raw-layout IVF index — the

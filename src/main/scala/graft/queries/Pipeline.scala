@@ -1810,7 +1810,7 @@ object Pipeline {
       // after a failed first build (rebuild marker up, never healed —
       // self-review r15); buildIvfIndex's rerun IS the heal path
       if (!graft.ops.Fs.exists(s, s"$idx/corpus") ||
-          graft.ops.Fs.exists(s, s"$idx/_maintenance/rebuild_pending"))
+          VectorOps.rebuildPending(s, idx))
         VectorOps.buildIvfIndex(Tables(s, dir, "embeddings"), idx,
           nCells = ivfSharedCells)
       idx

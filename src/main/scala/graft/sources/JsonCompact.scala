@@ -27,8 +27,9 @@ import java.nio.charset.StandardCharsets
   * treats each FILE as one row — compacting it would merge rows; the
   * table owner calls this, and owns that contract.
   *
-  * Crash safety follows the store-wide marker protocol (cf.
-  * `VectorOps.pendingRemovesPath`, `InvertedIndex.compactSegments`):
+  * Crash safety follows the store-wide marker discipline (cf.
+  * `graft.ops.StoreTxn`, `InvertedIndex.compactSegments`), in its own
+  * file-rename shape:
   *   1. merged files are staged under the hidden `_compaction/` dir —
   *      invisible to [[JsonDocSource.listFiles]] until committed;
   *   2. ONE marker file (`_compaction/commit`, written to a tmp name

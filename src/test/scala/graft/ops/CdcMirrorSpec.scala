@@ -48,6 +48,29 @@ class CdcMirrorSpec extends SparkTestBase {
     }
   }
 
+  test("a field the source gained after the mirror's seed survives the read in either listing order") {
+    for ((seedFile, laterFile) <- Seq("e0.json" -> "e1.json", "e1.json" -> "e0.json")) {
+      val dir = mkDir(s"cdcmirror_late_$seedFile")
+      val mirror = graft.TempRoots.path(s"cdcmirror_late_out_$seedFile")
+      val ckpt = graft.TempRoots.path(s"cdcmirror_late_ckpt_$seedFile")
+      put(dir, seedFile, """{"id": 1, "s": "a"}""" + "\n")
+      JsonMeta.save(spark, dir.toString)
+      val start = JsonMeta.saves(spark, dir.toString).head
+      CdcMirror.init(spark, dir.toString, mirror, start)
+      put(dir, laterFile, """{"id": 2, "s": "b", "extra": "x"}""" + "\n")
+      JsonMeta.save(spark, dir.toString)
+      val q = CdcMirror.writer(spark, dir.toString, mirror, ckpt, start)
+        .trigger(Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally q.stop()
+      val got = CdcMirror.read(spark, mirror)
+      assert(got.schema.fieldNames.contains("extra"),
+        s"seed $seedFile: ${got.schema.simpleString}")
+      assert(got.select(col("id").cast("long"), col("extra")).collect()
+        .map(r => r.getLong(0) -> Option(r.getString(1))).sorted.toSeq ==
+        Seq(1L -> None, 2L -> Some("x")), s"seed $seedFile")
+    }
+  }
+
   test("init + sync tracks adds, rewrites, and deletes exactly; restarts replay idempotently; the live tail continues") {
     val dir = mkDir("cdcmirror_src")
     val mirror = graft.TempRoots.path("cdcmirror_out")

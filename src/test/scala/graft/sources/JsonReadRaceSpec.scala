@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import java.util.concurrent.{ConcurrentLinkedQueue, CyclicBarrier}
 import java.util.concurrent.atomic.AtomicLong
+import scala.util.Random
 
 /** REAL-THREAD reader-vs-maintenance race harness (VERDICT r14 #1 —
   * the writer path has [[JsonLeaseRaceSpec]]; this is its reader
@@ -92,7 +93,14 @@ class JsonReadRaceSpec extends SparkTestBase {
     registered.add(0L)
     val committed = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
     Seq(0L, 1L, 2L).foreach(committed.add)
-    val rnd = new scala.util.Random(20260816L)
+    // every draw comes from a Random of its own, seeded from (seed,
+    // round, role): the main thread's op and reader picks, the writer
+    // thread's options and each reader thread's save picks never
+    // share a generator, so a round's draws replay from its seed
+    val seed = 20260816L
+    def roundSeed(round: Int): Long = seed * 1000L + round
+    def rng(round: Int, role: String): Random =
+      new Random(roundSeed(round) * 31L + role.hashCode)
     val nextBase = new AtomicLong(3L)
     val nextBatch = new AtomicLong(0L)
     val readerRuns = new AtomicLong(0L)
@@ -168,7 +176,7 @@ class JsonReadRaceSpec extends SparkTestBase {
           violations.add(s"$ctx: id-less schema with rows")
         None
       }
-    def asOfRead(): Unit = {
+    def asOfRead(rnd: Random): Unit = {
       val saves = JsonMeta.saves(spark, dir)
       if (saves.nonEmpty) {
         val pick = saves(rnd.nextInt(saves.size))
@@ -177,7 +185,7 @@ class JsonReadRaceSpec extends SparkTestBase {
           .foreach(checkIds(_, s"asOfSave $pick", requireSeed = false))
       }
     }
-    def sinceRead(): Unit = {
+    def sinceRead(rnd: Random): Unit = {
       val saves = JsonMeta.saves(spark, dir)
       if (saves.nonEmpty) {
         val pick = saves(rnd.nextInt(saves.size))
@@ -215,7 +223,7 @@ class JsonReadRaceSpec extends SparkTestBase {
       checkIds(ids.result(), "streamTail", requireSeed = true)
     }
 
-    def cdcRead(): Unit = {
+    def cdcRead(rnd: Random): Unit = {
       // a change-feed stream from a random save: catch-up batches plus
       // the live tail's first admission, read end to end — the reader
       // that races BOTH history resolution and the live listing
@@ -259,7 +267,7 @@ class JsonReadRaceSpec extends SparkTestBase {
       }
     }
 
-    def mirrorApply(): Unit = {
+    def mirrorApply(rnd: Random): Unit = {
       // the one real CONSUMER shape (VERDICT r16 #7): a fresh
       // CdcMirror — init at a committed save, one AvailableNow
       // foreachBatch drain of the cdcDeletes feed into the parquet
@@ -290,42 +298,43 @@ class JsonReadRaceSpec extends SparkTestBase {
       }
     }
 
-    val readers: Vector[() => Unit] =
-      Vector(batchScan _, metaAgg _, asOfRead _, sinceRead _, tailRead _,
-        cdcRead _, mirrorApply _)
+    val readers: Vector[Random => Unit] =
+      Vector(_ => batchScan(), _ => metaAgg(), asOfRead, sinceRead,
+        _ => tailRead(), cdcRead, mirrorApply)
 
     // ---- writer ops (the lease spec's shapes, uniform 3-row batches) --
-    def writerOp(): (Seq[Long], () => Seq[Long]) = rnd.nextInt(5) match {
-      case 0 | 1 =>
-        val base = nextBase.getAndAdd(3L)
-        registered.add(base)
-        (Seq(base, base + 1, base + 2), () => {
-          spark.range(3).select((col("id") + base).as("id"),
-              lit("w").as("s"))
-            .write.format("graftjson").mode("append")
-            .option("refreshMeta", rnd.nextBoolean().toString).save(dir)
-          Seq(base, base + 1, base + 2)
-        })
-      case 2 =>
-        val base = nextBase.getAndAdd(3L)
-        registered.add(base)
-        val bid = nextBatch.getAndIncrement()
-        (Seq(base, base + 1, base + 2), () => {
-          graft.streaming.EventStreams.ingestEpoch(
+    def writerOp(pick: Random, rnd: Random): (Seq[Long], () => Seq[Long]) =
+      pick.nextInt(5) match {
+        case 0 | 1 =>
+          val base = nextBase.getAndAdd(3L)
+          registered.add(base)
+          (Seq(base, base + 1, base + 2), () => {
             spark.range(3).select((col("id") + base).as("id"),
-              lit("e").as("s")),
-            dir, batchId = bid, opId = s"readrace$bid")
-          Seq(base, base + 1, base + 2)
-        })
-      case 3 =>
-        (Seq.empty[Long],
-          () => { JsonCompact.compact(spark, dir, targetBytes = 1L << 20)
-            Seq.empty })
-      case 4 =>
-        (Seq.empty[Long],
-          () => { JsonMeta.vacuum(spark, dir, retainSaves = 2)
-            Seq.empty })
-    }
+                lit("w").as("s"))
+              .write.format("graftjson").mode("append")
+              .option("refreshMeta", rnd.nextBoolean().toString).save(dir)
+            Seq(base, base + 1, base + 2)
+          })
+        case 2 =>
+          val base = nextBase.getAndAdd(3L)
+          registered.add(base)
+          val bid = nextBatch.getAndIncrement()
+          (Seq(base, base + 1, base + 2), () => {
+            graft.streaming.EventStreams.ingestEpoch(
+              spark.range(3).select((col("id") + base).as("id"),
+                lit("e").as("s")),
+              dir, batchId = bid, opId = s"readrace$bid")
+            Seq(base, base + 1, base + 2)
+          })
+        case 3 =>
+          (Seq.empty[Long],
+            () => { JsonCompact.compact(spark, dir, targetBytes = 1L << 20)
+              Seq.empty })
+        case 4 =>
+          (Seq.empty[Long],
+            () => { JsonMeta.vacuum(spark, dir, retainSaves = 2)
+              Seq.empty })
+      }
 
     val hardFailures = new ConcurrentLinkedQueue[Throwable]()
     // publish-then-lease-loss groups: all-or-nothing maybes (the lease
@@ -333,8 +342,9 @@ class JsonReadRaceSpec extends SparkTestBase {
     // the auxiliary meta verify loses the lease)
     val maybeGroups = new ConcurrentLinkedQueue[Seq[Long]]()
     (1 to 100).foreach { round =>
-      val (writerIds, writer) = writerOp()
-      val rs = Seq.fill(2)(readers(rnd.nextInt(readers.size)))
+      val main = rng(round, "main")
+      val (writerIds, writer) = writerOp(main, rng(round, "writer"))
+      val rs = Seq.fill(2)(readers(main.nextInt(readers.size)))
       val barrier = new CyclicBarrier(1 + rs.size)
       val results = new ConcurrentLinkedQueue[Seq[Long]]()
       val wt = new Thread(() => {
@@ -349,11 +359,12 @@ class JsonReadRaceSpec extends SparkTestBase {
               maybeGroups.add(writerIds)
         }
       })
-      val rts = rs.map { r =>
+      val rts = rs.zipWithIndex.map { case (r, i) =>
+        val rnd = rng(round, s"reader$i")
         new Thread(() => {
           barrier.await()
           readerRuns.incrementAndGet()
-          try r()
+          try r(rnd)
           catch {
             case t: Throwable =>
               if (isBenign(chain(t), readerBenign, dirToken))
@@ -364,11 +375,12 @@ class JsonReadRaceSpec extends SparkTestBase {
       }
       (wt +: rts).foreach(_.start())
       (wt +: rts).foreach(_.join(120000))
-      assert((wt +: rts).forall(!_.isAlive), s"round $round: a racer hung")
+      val at = s"round $round (round seed ${roundSeed(round)})"
+      assert((wt +: rts).forall(!_.isAlive), s"$at: a racer hung")
       assert(hardFailures.isEmpty,
-        s"round $round: unexpected failure class: ${hardFailures.peek()}")
+        s"$at: unexpected failure class: ${hardFailures.peek()}")
       assert(violations.isEmpty,
-        s"round $round: consistency violation: ${violations.peek()}")
+        s"$at: consistency violation: ${violations.peek()}")
       results.forEach(ids => ids.foreach(committed.add(_)))
     }
     // the harness actually read (not everything rejected or skipped)
