@@ -30,9 +30,9 @@ object SparkEntry {
     * (shingle-set intersections, MinHash lanes, per-token expressions,
     * HLL merges): byte-based AQE coalescing folds their sub-MB stages
     * onto 1–2 tasks while the other cores idle, so these opt in to the
-    * 64k coalescing floor (`SPARK_GRAFT_MIN_COALESCE`), r17's
-    * cross-cutting win. r18 re-measured the floor per query at
-    * VERIFIED 32-way parallelism (VERDICT r17 #1: the session-wide
+    * 64k coalescing floor, r17's cross-cutting win. r18 re-measured
+    * the floor per query at VERIFIED 32-way parallelism (VERDICT r17
+    * #1: the session-wide
     * floor was a wash at 32 cpus — ~10s of wins on these queries
     * cancelled by ~10s of losses on lifecycle/small-stage queries,
     * whose many tiny shuffles it shattered into per-task overhead and
@@ -83,8 +83,7 @@ object SparkEntry {
       name: String, fn: (SparkSession, String) => DataFrame)
       : (SparkSession, String) => DataFrame = { (s, d) =>
     if (denseCoalesce(name))
-      s.conf.set(coalesceFloorKey,
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "64k"))
+      s.conf.set(coalesceFloorKey, "64k")
     else s.sparkContext.getConf.getOption(coalesceFloorKey) match {
       // the session's starting value: a deployment-set floor, else
       // Spark's own default (unset)

@@ -43,7 +43,6 @@ object Fanout {
     // streaming frames cannot be probed (no batch physical plan) and
     // micro-batches are already split by the source — no-op
     if (df.isStreaming) return df
-    if (sys.env.get("GRAFT_FANOUT_OFF").contains("1")) return df
     // Memory-bounded target (r18 — VERDICT r17 #1a, guide §5): the
     // stages this helper fans out are explode + partial hash
     // aggregation, whose per-task state must fit its share of the

@@ -313,13 +313,15 @@ object Sharding {
     // (r18, guide §1.2): it used to be a separate distinct+collect
     // job over the staged files — one less plan+job per merge
     val obs = org.apache.spark.sql.Observation()
-    existing.where(col("bucket").isin(touched.map(Int.box).toSeq: _*))
+    val merged = existing
+      .where(col("bucket").isin(touched.map(Int.box).toSeq: _*))
       .join(ch.select(col("doc_id")), Seq("doc_id"), "left_anti")
       .unionByName(upserts0.select(
         existing.columns.map(col).toIndexedSeq: _*))
-      .observe(obs, collect_set(col("bucket")).as("buckets"))
+    merged.observe(obs, collect_set(col("bucket")).as("buckets"))
       .write.mode("overwrite").parquet(redo.staged)
-    val out = spark.read.parquet(redo.staged)
+    // read back with the schema in hand: footer inference costs a job
+    val out = spark.read.schema(merged.schema).parquet(redo.staged)
     // buckets this merge EMPTIES entirely (all rows deleted, no
     // upserts hashing there) ride the marker so their dirs are removed
     val outBuckets = Observed.ints(obs, "buckets").toSet
