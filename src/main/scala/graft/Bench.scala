@@ -234,22 +234,53 @@ object Bench {
         new java.io.ByteArrayInputStream(buf.toByteArray))
     } catch { case _: Throwable => }
 
-    // the undrainable-storage floor (see the drain loop below)
-    private var stickyResidualMB = 0L
     private def usedStorageMB(): Long =
       spark.sparkContext.getExecutorMemoryStatus.values
         .map { case (max, rem) => max - rem }.sum / (1L << 20)
 
+    /** Every pass starts on drained storage. The floor is per query: the
+      * first pass drains to 0, so no predecessor's blocks are resident
+      * when it starts, and a later pass drains only to the residual an
+      * earlier pass of the SAME query left behind. */
     def measure(name: String, fn: (SparkSession, String) => DataFrame,
-                passes: Int): Seq[Pass] =
-      (1 to passes).map(p => timedCold(name, p, fn))
+                passes: Int): Seq[Pass] = {
+      var floorMB = 0L
+      (1 to passes).map { p =>
+        floorMB = drain(floorMB, name, p)
+        timedCold(name, p, fn)
+      }
+    }
+
+    /** Broadcast pieces (and any block whose drop the block manager
+      * processed asynchronously) are reclaimed by the ContextCleaner
+      * only after a driver GC notices the dead references. Wait for
+      * storage to fall to `floorMB` with a bounded budget (4 s, one GC
+      * nudge). If the budget expires, say so rather than silently
+      * recording a nonzero pre, and return the residual as the floor
+      * for this query's later passes, so they do not re-pay the full
+      * budget chasing the same megabytes. */
+    private def drain(floorMB: Long, name: String, pass: Int): Long = {
+      var drainedMs = 0
+      while (usedStorageMB() > floorMB && drainedMs < 4000) {
+        if (drainedMs == 200) System.gc()
+        Thread.sleep(50); drainedMs += 50
+      }
+      val residualMB = usedStorageMB()
+      if (residualMB <= floorMB) floorMB
+      else {
+        System.err.println(
+          s"[bench-teardown] ${residualMB}MB storage residual before " +
+            s"$name pass $pass (drain budget expired)")
+        residualMB
+      }
+    }
 
     /** Time one pass, then drop its caches so the next pass is cold
       * (clearing per pass, not per query: a warm second pass once
       * reported 5× off on q161). A failed pass says so on stderr. The
       * storage occupancy before and after the timed region persists as
-      * `storage_mb`: pre > 0 would mean a predecessor's blocks were
-      * still resident when this pass started. */
+      * `storage_mb`: a first pass has pre == 0 unless a
+      * `[bench-teardown]` line names it (see [[measure]]). */
     private def timedCold(name: String, pass: Int,
                           fn: (SparkSession, String) => DataFrame): Pass = {
       val pre = usedStorageMB()
@@ -263,28 +294,6 @@ object Bench {
       val secs = (System.nanoTime() - t0) / 1e9
       val post = usedStorageMB()
       GraftSession.dropCaches(spark)
-      // Broadcast pieces (and any block whose drop the block manager
-      // processed asynchronously) are reclaimed by the ContextCleaner
-      // only after a driver GC notices the dead references. Drain with
-      // a bounded wait (one GC nudge) so pre==0 is an INVARIANT; if the
-      // budget expires, say so rather than silently recording a
-      // nonzero pre.
-      var drainedMs = 0
-      while (usedStorageMB() > stickyResidualMB && drainedMs < 4000) {
-        if (drainedMs == 200) System.gc()
-        Thread.sleep(50); drainedMs += 50
-      }
-      val residualMB = usedStorageMB()
-      if (residualMB > stickyResidualMB) {
-        System.err.println(
-          s"[bench-teardown] ${residualMB}MB storage residual after " +
-            s"$name (drain budget expired)")
-        // a residual that survived 4 s + a GC is a block the cleaner
-        // cannot reclaim — remember it so later passes do not re-pay
-        // the full budget chasing the same megabytes (the pre-storage
-        // vector still records it)
-        stickyResidualMB = residualMB
-      }
       Pass(ok, secs, pre, post)
     }
   }

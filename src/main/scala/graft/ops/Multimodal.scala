@@ -707,26 +707,6 @@ object Multimodal {
     }
   }
 
-  /** Feature extraction stub: a deterministic pseudo-embedding from
-    * payload bytes (a real pipeline would run an image/audio encoder
-    * here — same mapPartitions batch shape, same output schema
-    * `array<float>`, directly consumable by [[VectorOps]]). */
-  def extractFeatures(spark: SparkSession, docs: DataFrame,
-                      dim: Int = 16): DataFrame = {
-    import spark.implicits._
-    withPayload(docs).as[(Long, Array[Byte])].mapPartitions { it =>
-      it.map { case (id, payload) =>
-        val v = new Array[Float](dim)
-        var i = 0
-        while (i < payload.length) {
-          v(i % dim) += (payload(i) & 0xFF) / 255.0f
-          i += 1
-        }
-        (id, v.toSeq)
-      }
-    }.toDF("doc_id", "feature")
-  }
-
   /** Metadata extraction + aggregate by format — the downstream query
     * a curation pipeline runs over decoded metadata. */
   def metaSummary(spark: SparkSession, docs: DataFrame): DataFrame = {

@@ -177,8 +177,8 @@ object Sketches {
       df.select(shard.as("shard"), value.cast("double").as("v"))
         .where(col("v").isNotNull && !isnan(col("v")))
         // clamp on the LONG floor result BEFORE narrowing: a far
-        // out-of-frame value (corrupt input under histIngest's fixed
-        // design-time frame) otherwise wraps through the int cast into
+        // out-of-frame value (corrupt input under a fixed design-time
+        // frame) otherwise wraps through the int cast into
         // an arbitrary interior bin instead of the edge bin
         .withColumn("bin",
           least(lit(nBins - 1L), greatest(lit(0L),

@@ -91,13 +91,6 @@ object TextOps {
     docs.join(keep, docs("doc_id") === keep("keep_doc_id"), "left_semi")
   }
 
-  /** Exact unigram Jaccard similarity between two word-set columns
-    * (|∩| / |∪| as double — both engines compute the identical IEEE
-    * quotient of small ints). */
-  def jaccard(a: Column, b: Column): Column =
-    size(array_intersect(a, b)).cast("double") /
-      size(array_union(a, b)).cast("double")
-
   /** Jaccard from pre-computed set sizes: |∩| / (|A| + |B| − |∩|).
     * Identical value (the inputs are distinct sets) at half the array
     * traffic — the hot-pair form. With [[graft.GraftExtensions]]
@@ -283,8 +276,8 @@ object TextOps {
     }
 
   /** Band structs `(band, band_key)` for a signature column — the ONE
-    * copy of the band-key formula (every banded entry point, batch and
-    * streaming, goes through it, so the banding cannot drift). */
+    * copy of the band-key formula (every banded entry point goes
+    * through it, so the banding cannot drift). */
   def bandStructs(sig: Column, nSig: Int, bands: Int): Column = {
     val rows = nSig / bands
     array((0 until bands).map { i =>
@@ -299,15 +292,6 @@ object TextOps {
     withSig
       .select(col("doc_id"), explode(bandStructs(col("sig"), nSig, bands)).as("b"))
       .select(col("doc_id"), col("b.band"), col("b.band_key"))
-
-  /** LSH banding: doc rows exploded to one row per band with a hashed
-    * band key. Docs sharing any band key are near-dup candidates. */
-  def minhashBands(docs: DataFrame, nSig: Int, bands: Int,
-                   ngram: Int = 1): DataFrame =
-    bandRows(docs.withColumn("sig",
-      minhashSignatureFromHashes(ngramHashSet(col("text"), ngram), nSig,
-        Some(docs.sparkSession))),
-      nSig, bands)
 
   /** Deterministic train/val/test split: each doc's split derives
     * ONLY from the md5 of its id against hex thresholds, so (a) the
@@ -424,18 +408,15 @@ object TextOps {
         col("first_drop_stage"))
   }
 
-  /** Batch twin of [[graft.streaming.EventStreams.nearDupIngest]]'s
-    * band-claim suppression, rendered deterministically: every doc's
-    * bands rank within their band key by doc_id (the batch stand-in
-    * for arrival order), a doc is KEPT iff it claims ALL its bands
-    * (rank 1 in each). A dropped doc's unclaimed bands still hold
-    * their rank-1 claims — exactly the stream's state semantics, where
-    * a suppressed doc's novel bands still enter the dedup state and
-    * transitively suppress later near-dups of the dropped doc.
+  /** LSH band-claim near-duplicate suppression, rendered
+    * deterministically: every doc's bands rank within their band key
+    * by doc_id (the stand-in for arrival order), a doc is KEPT iff it
+    * claims ALL its bands (rank 1 in each). A dropped doc's unclaimed
+    * bands still hold their rank-1 claims, so they transitively
+    * suppress later near-dups of the dropped doc.
     * One explode + one window shuffle on the band key; no self-join,
     * no pair enumeration — the suppression decision is per-doc.
-    * Not SQL-expressible (MinHash band keys); StreamNearDupSpec pins
-    * stream == batch parity on identical input order. */
+    * Not SQL-expressible (MinHash band keys). */
   def nearDupSuppress(docs: DataFrame, nSig: Int = 12, bands: Int = 3,
                       ngram: Int = 1): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -189,13 +189,10 @@ object JsonQueries {
       |  max(n_events) AS max_session_events
       |FROM per_session GROUP BY user_id ORDER BY user_id""".stripMargin
 
-  /** Batch twin of [[graft.streaming.EventStreams.dedupStream]]
-    * (streaming `dropDuplicatesWithinWatermark`): one surviving event
-    * per (user_id, event_type) key. The stream keeps the
-    * ARRIVAL-first row and evicts its state at the watermark; the
-    * deterministic batch rendering keeps the EVENT-TIME-first row
-    * with an event_id tiebreak — one window rank, one shuffle by the
-    * dedup key, the same per-key state bound the stream enforces. */
+  /** Deterministic dedup of the event stream: one surviving event per
+    * (user_id, event_type) key, the EVENT-TIME-first row with an
+    * event_id tiebreak — one window rank, one shuffle by the dedup
+    * key. */
   private def q91(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"), col("event_type"))
       .orderBy(col("ts"), col("event_id"))

@@ -547,17 +547,15 @@ object Pipeline {
       |WHERE list_cosine_similarity(bv, cv) >= 0.4
       |ORDER BY batch_id, corpus_id""".stripMargin
 
-  /** Batch twin of the streaming near-dup suppression
-    * ([[graft.streaming.EventStreams.nearDupIngest]]): per doc, how
-    * many of its MinHash LSH bands were already claimed by an earlier
-    * doc, and whether it survives the all-bands-new gate. Oracled
+  /** Near-dup suppression ([[graft.ops.TextOps.nearDupSuppress]]): per
+    * doc, how many of its MinHash LSH bands were already claimed by an
+    * earlier doc, and whether it survives the all-bands-new gate. Oracled
     * since r14 over the planted-document fixture: band keys stay
     * MinHash-derived (not SQL-recomputable), but a planted
     * 4-char-truncated copy shares its base's band keys with high
     * probability and carries the LATER id, so the suppression gate
     * must drop most planted mutants — the floor boolean — while the
-    * doc count is exact conservation DuckDB computes independently.
-    * Stream == batch decision parity stays in StreamNearDupSpec. */
+    * doc count is exact conservation DuckDB computes independently. */
   private def q113(s: SparkSession, dir: String): DataFrame = {
     val sup = TextOps.nearDupSuppress(
       graft.queries.LlmQueries.plantedDocs(s, dir)

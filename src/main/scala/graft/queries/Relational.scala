@@ -880,8 +880,7 @@ object Relational {
   /** Interval (event-time range) join: views by the same user in the
     * 24 hours before each purchase. The equi key (user_id) carries the
     * shuffle; the time range is a residual predicate evaluated inside
-    * each key's partition — the batch twin of the streaming
-    * stream-stream interval join ([[graft.streaming.EventStreams]]). */
+    * each key's partition. */
   private def q05(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables(s, dir, "events")
     val p = ev.where(col("event_type") === "purchase")

@@ -340,14 +340,4 @@ class MultimodalSpec extends SparkTestBase {
     assert(MediaHeader.decodePcm(2L, "not a wav at all".getBytes) ==
       Multimodal.PcmStats(2L, 0L, 0L, 0L, 0L, 0L, 0L, 0L))
   }
-
-  test("extracted features feed cosine top-k directly") {
-    val feats = Multimodal.extractFeatures(spark, docs, dim = 8)
-      .withColumnRenamed("doc_id", "vec_id")
-      .withColumnRenamed("feature", "embedding")
-    val out = VectorOps.cosineTopK(feats, feats.where(col("vec_id") === 0), 2)
-      .collect()
-    assert(out.map(_.getAs[Long]("vec_id")).toSet.subsetOf(Set(1L, 2L)))
-    assert(out.length == 2)
-  }
 }

@@ -596,6 +596,73 @@ class PipelineOpsSpec extends SparkTestBase {
       "staging dir survived the merge")
   }
 
+  test("a delete that EMPTIES a bucket removes its dir; a crashed merge rolls forward") {
+    import spark.implicits._
+    val store = graft.TempRoots.path("cdc_emptied")
+    val docs = spark.createDataFrame(
+      (0L until 24L).map(i => (i, s"t$i", "en", "a", i)))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    Sharding.initDocStore(docs, store, nBuckets = 4)
+    def byBucket = spark.read.parquet(store)
+      .select(col("doc_id"), col("bucket")).collect()
+      .groupBy(_.getInt(1)).view.mapValues(_.map(_.getLong(0)).toSet).toMap
+    val (b, ids) = byBucket.head
+    // delete EVERY doc of one bucket, no upserts hashing there: a
+    // dynamic overwrite cannot truncate a zero-output partition — the
+    // merge must REMOVE the dir (review r12: these rows previously
+    // survived silently while the audit reported the deletes applied)
+    val eraser = spark.createDataFrame(ids.toSeq.map(i =>
+        (i, null.asInstanceOf[String], "en", "a", 0L, "delete")))
+      .toDF("doc_id", "text", "lang", "source", "n_chars", "op")
+    Sharding.mergeCdc(spark, store, eraser, 4)
+    val after = spark.read.parquet(store)
+      .select(col("doc_id")).collect().map(_.getLong(0)).toSet
+    assert(after.intersect(ids).isEmpty, "emptied bucket's rows survived")
+    assert(!new java.io.File(s"$store/bucket=$b").exists)
+    assert(!new java.io.File(s"$store/_cdc_pending").exists)
+    assert(!new java.io.File(s"$store/_staging").exists)
+
+    // CRASH state: staged post-merge content + committed marker, with
+    // one touched bucket wiped (Spark's per-partition delete-then-
+    // rename died between the two) — the next merge entry must
+    // restore the bucket FROM STAGING, completing the crashed delete
+    val (b2, ids2) = byBucket.filter(_._2.size >= 2).head
+    val dead2 = ids2.min
+    spark.read.parquet(store)
+      .where(col("bucket") === b2 && col("doc_id") =!= dead2)
+      .write.parquet(s"$store/_staging/out")
+    spark.createDataFrame(Seq(Tuple1(-1))).toDF("bucket")
+      .coalesce(1).write.parquet(s"$store/_cdc_pending/emptied")
+    graft.ops.Fs.delete(spark, s"$store/bucket=$b2") // the torn commit
+    Sharding.mergeCdc(spark, store, eraser.where(lit(false)), 4)
+    val healed = spark.read.parquet(store)
+      .select(col("doc_id")).collect().map(_.getLong(0)).toSet
+    assert(!healed.contains(dead2), "the crashed delete must complete")
+    assert((ids2 - dead2).subsetOf(healed),
+      "the torn bucket's survivors must be restored from staging")
+    assert(!new java.io.File(s"$store/_cdc_pending").exists)
+    assert(!new java.io.File(s"$store/_staging").exists)
+  }
+
+  test("mergeCdc: conflicting rows for one id fail fast and leave no staging") {
+    val store = graft.TempRoots.path("cdc_conflict_store")
+    Sharding.initDocStore(spark.createDataFrame(
+        (0L until 20L).map(i => (i, s"doc $i", "en", "a", 6L)))
+      .toDF("doc_id", "text", "lang", "source", "n_chars"), store, 4)
+    // conflicting rows for one id in a single batch must fail fast,
+    // not silently duplicate the doc in the store
+    val bad = spark.createDataFrame(Seq(
+      (5L, "a", "en", "a", 1L, "upsert"),
+      (5L, "b", "en", "a", 1L, "upsert")))
+      .toDF("doc_id", "text", "lang", "source", "n_chars", "op")
+    val err = intercept[IllegalArgumentException] {
+      Sharding.mergeCdc(spark, store, bad, 4)
+    }
+    assert(err.getMessage.contains("one change per id"))
+    // and the failed merge left no staging behind
+    assert(!new java.io.File(s"$store/_staging").exists())
+  }
+
   test("write audit degrades cleanly on an empty export (null min/max, no stall)") {
     val docs = graft.queries.Tables(spark, sfDir, "documents")
     val audit = Sharding.writeShards(docs.where(lit(false)),
@@ -678,5 +745,37 @@ class PipelineOpsSpec extends SparkTestBase {
     val h2 = Sharding.scd2Apply(h1, changes, "k", Seq("seg"),
       lit("2023-01-01 00:00:00").cast("timestamp"))
     assert(h2.count() == 5, "replay must not mint new versions")
+  }
+
+  test("scd2Apply history under the temporal join: boundary, unknown-key and pre-history rows") {
+    import spark.implicits._
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    // dimension history: key 1 changes segment on 2024-06-01, key 2
+    // never changes
+    val dim0 = Seq((1L, "OLD"), (2L, "STABLE"))
+      .toDF("k", "seg")
+      .withColumn("valid_from", lit("2024-01-01 00:00:00").cast("timestamp"))
+      .withColumn("valid_to", lit(null).cast("timestamp"))
+    val hist = Sharding.scd2Apply(dim0,
+      Seq((1L, "NEW")).toDF("k", "seg"), "k", Seq("seg"),
+      lit("2024-06-01 00:00:00").cast("timestamp"))
+    // events straddling the version boundary, an unknown key (9) and a
+    // pre-history event, joined as q156 joins orders to its history
+    val events = Seq((10L, 1L, ts("2024-03-01 12:00:00")),
+      (11L, 1L, ts("2024-06-01 00:00:00")), // boundary: NEW from here
+      (12L, 9L, ts("2024-07-01 00:00:00")), // unknown key
+      (13L, 1L, ts("2024-05-31 23:59:59")),
+      (14L, 2L, ts("2024-08-01 00:00:00")),
+      (15L, 2L, ts("2023-12-31 23:59:59"))) // before first version
+      .toDF("event_id", "k", "ts")
+    val got = events.join(hist.as("d"),
+        events("k") === col("d.k") && events("ts") >= col("d.valid_from") &&
+          (col("d.valid_to").isNull || events("ts") < col("d.valid_to")),
+        "left")
+      .select(col("event_id"), col("seg")).collect()
+      .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
+    assert(got == Map(
+      10L -> Some("OLD"), 11L -> Some("NEW"), 12L -> None,
+      13L -> Some("OLD"), 14L -> Some("STABLE"), 15L -> None))
   }
 }

@@ -99,8 +99,11 @@ class ScaleSmokeSpec extends SparkTestBase {
     val n1 = base.count(); val n10 = docs10.count()
     assert(n10 == 10 * n1)
     // exact explode volume: one row per (doc, band), nothing more
-    assert(TextOps.minhashBands(base, 12, 3).count() == 3 * n1)
-    assert(TextOps.minhashBands(docs10, 12, 3).count() == 3 * n10)
+    def bandVolume(d: DataFrame) = d.select(explode(TextOps.bandStructs(
+      TextOps.minhashSignatureFromHashes(TextOps.ngramHashSet(col("text"), 1),
+        12, Some(spark)), 12, 3))).count()
+    assert(bandVolume(base) == 3 * n1)
+    assert(bandVolume(docs10) == 3 * n10)
     def run(d: DataFrame) = TextOps.nearDupSuppress(d).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_lost_bands"),
         r.getAs[Long]("is_kept")))

@@ -127,6 +127,41 @@ class AnalyticSpec extends SparkTestBase {
     assert(java.util.Arrays.equals(one, many),
       "sketch bytes differ across layouts")
   }
+
+  test("hourly anomalies: only the varying type emits, and only its spike flags") {
+    import spark.implicits._
+    val baseMs = java.sql.Timestamp.valueOf("2024-03-01 00:00:00").getTime
+    def at(hour: Int, i: Int) =
+      new java.sql.Timestamp(baseMs + hour * 3600L * 1000L + i * 1000L)
+    // deterministic hourly counts with a spike at hour 27
+    def clickCount(h: Int): Int = if (h == 27) 200 else 5 + (h * 7) % 13
+    val clicks = for (h <- 0 until 30; i <- 0 until clickCount(h))
+      yield (at(h, i), "click")
+    // constant-rate type: sigma == 0 -> suppressed
+    val views = for (h <- 0 until 30; i <- 0 until 4) yield (at(h, i), "view")
+    val rows = graft.streaming.EventStreams
+      .hourlyAnomalies((clicks ++ views).toDF("ts", "event_type"))
+      .collect()
+      .map(r => (r.getAs[String]("event_type"),
+        r.getAs[java.sql.Timestamp]("hr"), r.getAs[Long]("is_anomaly")))
+    assert(rows.map(_._1).distinct.toSeq == Seq("click"),
+      "flat type must be variance-suppressed")
+    // hours 24..29 have 24 predecessors; 27 is the spike
+    assert(rows.length == 6)
+    assert(rows.filter(_._3 == 1L).map(_._2).toSeq == Seq(at(27, 0)),
+      "only the spike flags")
+  }
+
+  test("q180 transition counts cover every event but each user's last, and normalize per from-type") {
+    val events = Tables(spark, sfDir, "events")
+    val nPairs = events.count() - events.select(col("user_id")).distinct().count()
+    val rows = q("q180_markov_transitions").collect()
+    assert(rows.nonEmpty)
+    assert(rows.map(_.getAs[Long]("n")).sum == nPairs)
+    for ((from, rs) <- rows.groupBy(_.getAs[String]("from_type")))
+      assert(math.abs(rs.map(_.getAs[Double]("p")).sum - 1.0) <= 0.0005 * rs.length,
+        s"p of $from does not sum to 1")
+  }
 }
 
 /** Indirection so the spec reads like the driver does (SparkEntry is

@@ -2,219 +2,15 @@ package graft.streaming
 
 import graft.SparkTestBase
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
 
-/** Structured Streaming semantics with MemoryStream: windowed
-  * aggregation with watermark-driven late-data drop, and the custom
-  * flatMapGroupsWithState sessionizer. */
+/** [[EventStreams.schemaOverTime]] driven as a MemoryStream query:
+  * watermark-closed windows each emit their rendered schema. */
 class EventStreamsSpec extends SparkTestBase {
 
   private def ts(minute: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00")
-
-  test("tumbling window emits finalized windows and drops late data") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, Long, String, Double)]
-    val events = mem.toDF().toDF("ts", "user_id", "event_type", "value")
-
-    val q = EventStreams.tumblingCounts(events, "10 minutes", "10 minutes")
-      .writeStream.format("memory").queryName("tumbling")
-      .outputMode("append").start()
-
-    // batch 1: two events in [10:00,10:10), one in [10:10,10:20)
-    mem.addData((ts(1), 1L, "click", 1.0), (ts(2), 1L, "click", 2.0),
-      (ts(11), 2L, "view", 3.0))
-    q.processAllAvailable()
-    // batch 2: advances the watermark to 10:21 (31 - 10min lateness),
-    // finalizing both earlier windows
-    mem.addData((ts(31), 1L, "click", 4.0))
-    q.processAllAvailable()
-    // batch 3: event at 10:03 is behind the 10:21 watermark and its
-    // window is closed → must be dropped
-    mem.addData((ts(3), 9L, "late", 99.0), (ts(55), 1L, "click", 5.0))
-    q.processAllAvailable()
-    mem.addData((ts(59), 1L, "click", 6.0)) // flush remaining windows
-    q.processAllAvailable()
-    q.stop()
-
-    val rows = spark.table("tumbling").collect()
-      .map(r => (r.getAs[Timestamp]("window_start").toString,
-        r.getAs[String]("event_type"), r.getAs[Long]("n")))
-      .toSet
-    assert(rows.contains(("2024-01-01 10:00:00.0", "click", 2L)))
-    assert(rows.contains(("2024-01-01 10:10:00.0", "view", 1L)))
-    assert(!rows.exists(_._2 == "late"), s"late event leaked: $rows")
-  }
-
-  test("sliding windows assign each event to window/slide buckets") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, Long, String, Double)]
-    val events = mem.toDF().toDF("ts", "user_id", "event_type", "value")
-    val q = EventStreams.slidingCounts(events, "10 minutes", "5 minutes", "10 minutes")
-      .writeStream.format("memory").queryName("sliding")
-      .outputMode("append").start()
-    mem.addData((ts(7), 1L, "click", 1.0)) // in [10:00,10:10) and [10:05,10:15)
-    q.processAllAvailable()
-    mem.addData((ts(40), 1L, "click", 1.0)) // advance watermark, finalize
-    q.processAllAvailable()
-    mem.addData((Timestamp.valueOf("2024-01-01 11:30:00"), 1L, "x", 0.0))
-    q.processAllAvailable()
-    q.stop()
-    val starts = spark.table("sliding").collect()
-      .filter(_.getAs[Long]("n") > 0)
-      .map(_.getAs[Timestamp]("window_start").toString).sorted.toSeq
-    assert(starts.take(2) == Seq("2024-01-01 10:00:00.0", "2024-01-01 10:05:00.0"),
-      s"got $starts")
-  }
-
-  test("flatMapGroupsWithState sessionizer closes sessions on gap and timeout") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[EventStreams.Event]
-    val q = EventStreams.sessionize(spark, mem.toDS(), gapMs = 10 * 60 * 1000)
-      .writeStream.format("memory").queryName("sessions")
-      .outputMode("append").start()
-
-    // user 1: events at 10:00, 10:05 (one session), then 10:40 (new session)
-    mem.addData(EventStreams.Event(ts(0), 1L, "click", 1.0),
-      EventStreams.Event(ts(5), 1L, "click", 1.0))
-    q.processAllAvailable()
-    mem.addData(EventStreams.Event(ts(40), 1L, "click", 1.0))
-    q.processAllAvailable()
-    // advance watermark far enough to time out the open session
-    mem.addData(EventStreams.Event(Timestamp.valueOf("2024-01-01 12:00:00"), 2L, "x", 0.0))
-    q.processAllAvailable()
-    mem.addData(EventStreams.Event(Timestamp.valueOf("2024-01-01 14:00:00"), 2L, "x", 0.0))
-    q.processAllAvailable()
-    q.stop()
-
-    val sessions = spark.table("sessions").collect()
-      .map(r => (r.getAs[Long]("user_id"),
-        r.getAs[Timestamp]("session_start").toString,
-        r.getAs[Long]("n_events")))
-    assert(sessions.contains((1L, "2024-01-01 10:00:00.0", 2L)),
-      s"got ${sessions.toSeq}")
-    assert(sessions.contains((1L, "2024-01-01 10:40:00.0", 1L)),
-      s"got ${sessions.toSeq}")
-  }
-
-  test("sessionizer handles late events: backward extend, separate, bridge") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[EventStreams.Event]
-    val q = EventStreams.sessionize(spark, mem.toDS(), gapMs = 10 * 60 * 1000)
-      .writeStream.format("memory").queryName("late_sessions")
-      .outputMode("append").start()
-
-    // user 1: open at 10:10, then a LATE in-gap event at 10:05 → one
-    //   session starting 10:05 (backward gap-merge, = session_window)
-    // user 5: open at 10:30, then a late event at 10:05 — 25 min
-    //   before the session start, beyond the 10-min gap → must stay a
-    //   SEPARATE session, not merge (a single-session state would
-    //   wrongly merge it: t - lastTs is negative, trivially < gap)
-    // user 6: sessions at 10:00 and 10:16, then a late 10:08 in
-    //   between → bridges both into ONE session of 3
-    mem.addData(
-      EventStreams.Event(ts(10), 1L, "click", 1.0),
-      EventStreams.Event(ts(30), 5L, "click", 1.0),
-      EventStreams.Event(ts(0), 6L, "click", 1.0),
-      EventStreams.Event(ts(16), 6L, "click", 1.0))
-    q.processAllAvailable()
-    mem.addData(
-      EventStreams.Event(ts(5), 1L, "click", 1.0),
-      EventStreams.Event(ts(5), 5L, "click", 1.0),
-      EventStreams.Event(ts(8), 6L, "click", 1.0))
-    q.processAllAvailable()
-    // advance the watermark far enough to close everything
-    mem.addData(EventStreams.Event(Timestamp.valueOf("2024-01-01 12:00:00"), 2L, "x", 0.0))
-    q.processAllAvailable()
-    mem.addData(EventStreams.Event(Timestamp.valueOf("2024-01-01 14:00:00"), 2L, "x", 0.0))
-    q.processAllAvailable()
-    q.stop()
-
-    val sessions = spark.table("late_sessions").collect()
-      .map(r => (r.getAs[Long]("user_id"),
-        r.getAs[Timestamp]("session_start").toString,
-        r.getAs[Long]("n_events"))).toSet
-    assert(sessions.contains((1L, "2024-01-01 10:05:00.0", 2L)),
-      s"got $sessions")
-    assert(sessions.contains((5L, "2024-01-01 10:05:00.0", 1L)) &&
-      sessions.contains((5L, "2024-01-01 10:30:00.0", 1L)),
-      s"far-older late event must stay separate: $sessions")
-    assert(sessions.contains((6L, "2024-01-01 10:00:00.0", 3L)),
-      s"in-between late event must bridge: $sessions")
-  }
-
-  test("streaming dedup drops in-watermark duplicates and bounds state") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, Long, String, Double)]
-    val events = mem.toDF().toDF("ts", "user_id", "event_type", "value")
-      .withColumn("event_id", col("user_id") * 100 + col("value").cast("long"))
-    // the 2-arg single-key call shape must keep compiling (ADVICE r5)
-    EventStreams.dedupStream(events, "event_id")
-    intercept[IllegalArgumentException] {
-      EventStreams.dedupStream(events, Seq.empty[String])
-    }
-    val q = EventStreams.dedupStream(events, "event_id", "10 minutes")
-      .writeStream.format("memory").queryName("deduped")
-      .outputMode("append").start()
-    // batch 1: two distinct ids, one in-batch duplicate
-    mem.addData((ts(1), 1L, "click", 1.0), (ts(2), 1L, "click", 1.0),
-      (ts(3), 2L, "view", 1.0))
-    q.processAllAvailable()
-    // batch 2: cross-batch duplicate of id 101 within the watermark →
-    // dropped; one new id
-    mem.addData((ts(4), 1L, "click", 1.0), (ts(5), 3L, "view", 1.0))
-    q.processAllAvailable()
-    // batch 3 advances the watermark to 10:30 (10:40 − 10 min), past
-    // id 101's expiry (10:02 + 10 min) → its state is EVICTED
-    mem.addData((ts(40), 9L, "view", 9.0))
-    q.processAllAvailable()
-    // batch 4: id 101 again, above the watermark — with its state
-    // evicted it must be re-emitted: the observable proof state is
-    // bounded by the watermark instead of growing forever
-    mem.addData((ts(35), 1L, "click", 1.0))
-    q.processAllAvailable()
-    q.stop()
-    val ids = spark.table("deduped").collect()
-      .map(_.getAs[Long]("event_id")).sorted.toSeq
-    assert(ids == Seq(101L, 101L, 201L, 301L, 909L), s"got $ids")
-  }
-
-  test("streaming dedup over the real corpus keeps one row per composite key (batch-twin bridge)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // feed sf events through MemoryStream and dedup on the SAME
-    // composite key as the q91 batch twin; the kept-row identity
-    // differs (arrival-first vs event-time-first), but the surviving
-    // KEY SET is the same one-per-key set the twin's oracle pins
-    val rows = graft.queries.Tables(spark, sfDir, "events")
-      .select(col("ts"), col("user_id"), col("event_type"), col("event_id"))
-      .as[(Timestamp, Long, String, Long)].collect().toSeq
-    val mem = MemoryStream[(Timestamp, Long, String, Long)]
-    val events = mem.toDF().toDF("ts", "user_id", "event_type", "event_id")
-    val q = EventStreams.dedupStream(events, Seq("user_id", "event_type"))
-      .writeStream.format("memory").queryName("dedup_bridge")
-      .outputMode("append").start()
-    mem.addData(rows: _*)
-    q.processAllAvailable()
-    q.stop()
-    val streamKeys = spark.table("dedup_bridge")
-      .select(col("user_id"), col("event_type")).collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-    assert(streamKeys.distinct.size == streamKeys.size,
-      "streaming dedup emitted a key twice")
-    val twinKeys = graft.SparkEntry.queries("q91_stream_dedup")(spark, sfDir)
-      .select(col("user_id"), col("event_type")).collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(streamKeys.toSet == twinKeys,
-      s"stream kept ${streamKeys.size} keys, twin ${twinKeys.size}")
-  }
 
   test("streaming schema inference renders per-window schemas and surfaces drift") {
     import spark.implicits._
@@ -242,131 +38,5 @@ class EventStreamsSpec extends SparkTestBase {
     // window closes, not at the next batch inventory
     assert(rows("2024-01-01 10:10:00.0") ==
       (1L, "root.k: tinyint\nroot.note: string\n"))
-  }
-
-  test("curated ingest drops duplicate, contaminated and low-quality docs in one stream") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val good = "the quick brown fox jumps over a lazy sleeping dog"
-    val evalText = "held out benchmark question about the original corpus"
-    val evalDocs = Seq((100L, evalText)).toDF("doc_id", "text")
-    val mem = MemoryStream[(Timestamp, Long, String)]
-    val docs = mem.toDF().toDF("ts", "doc_id", "text")
-    val q = EventStreams.curatedIngest(docs, evalDocs, lateness = "10 minutes")
-      .writeStream.format("memory").queryName("curated")
-      .outputMode("append").start()
-    mem.addData(
-      (ts(1), 1L, good),
-      (ts(2), 2L, good), // in-watermark duplicate of 1 → dropped
-      (ts(3), 3L, evalText), // eval contamination → dropped
-      (ts(4), 4L, "short doc"), // fails the quality gate → dropped
-      (ts(5), 5L, "a second wholly distinct document with the required length"))
-    q.processAllAvailable()
-    q.stop()
-    val kept = spark.table("curated").collect()
-      .map(_.getAs[Long]("doc_id")).sorted.toSeq
-    assert(kept == Seq(1L, 5L), s"got $kept")
-  }
-
-  test("streaming contamination scrub drops eval-fingerprint docs at ingest") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val evalDocs = Seq((100L, "held out benchmark question")).toDF("doc_id", "text")
-    val mem = MemoryStream[(Long, String)]
-    val docs = mem.toDF().toDF("doc_id", "text")
-    val q = EventStreams.scrubContaminated(docs, evalDocs)
-      .writeStream.format("memory").queryName("scrubbed")
-      .outputMode("append").start()
-    mem.addData(
-      (1L, "an ordinary clean training document"),
-      (2L, "held out benchmark question"),          // exact eval text
-      (3L, "question benchmark out held"),           // same token SET → contaminated
-      (4L, "benchmark question with extra words"))   // different set → clean
-    q.processAllAvailable()
-    q.stop()
-    val kept = spark.table("scrubbed").collect().map(_.getAs[Long]("doc_id")).sorted.toSeq
-    assert(kept == Seq(1L, 4L), s"got $kept")
-  }
-
-  test("stream-static enrichment joins the broadcast dim per micro-batch") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dim = Seq((1L, "gold"), (2L, "free")).toDF("user_id", "tier")
-    val mem = MemoryStream[(Timestamp, Long, String, Double)]
-    val events = mem.toDF().toDF("ts", "user_id", "event_type", "value")
-    val q = EventStreams.enrich(events, dim, "user_id")
-      .writeStream.format("memory").queryName("enriched")
-      .outputMode("append").start()
-    mem.addData((ts(1), 1L, "click", 1.0), (ts(2), 3L, "click", 1.0))
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("enriched").collect()
-      .map(r => r.getAs[Long]("user_id") -> r.getAs[String]("tier")).toMap
-    assert(rows == Map(1L -> "gold", 3L -> null))
-  }
-
-  test("stream-stream interval join matches views within the window") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, Long, String, Double)]
-    val events = mem.toDF().toDF("ts", "user_id", "event_type", "value")
-      .withColumn("event_id", (col("user_id") * 1000 +
-        expr("unix_timestamp(ts) % 1000")).cast("long"))
-    val q = EventStreams.purchasesWithRecentViews(events)
-      .writeStream.format("memory").queryName("pv")
-      .outputMode("append").start()
-    // user 1: view at 10:00, purchase at 10:05 (match); view at 10:20,
-    // purchase at 10:35 (outside 10-minute window → no match)
-    mem.addData((ts(0), 1L, "view", 0.0), (ts(5), 1L, "purchase", 9.0),
-      (ts(20), 1L, "view", 0.0), (ts(35), 1L, "purchase", 9.0))
-    q.processAllAvailable()
-    // advance watermarks to flush join state
-    mem.addData((Timestamp.valueOf("2024-01-01 12:00:00"), 9L, "view", 0.0))
-    q.processAllAvailable()
-    q.stop()
-    val matches = spark.table("pv").collect()
-      .map(r => (r.getAs[Timestamp]("purchase_ts").toString,
-        r.getAs[Timestamp]("view_ts").toString))
-    assert(matches.toSeq == Seq(("2024-01-01 10:05:00.0", "2024-01-01 10:00:00.0")),
-      s"got ${matches.toSeq}")
-  }
-
-  test("file sink: windowed aggregates append to checkpointed parquet") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-sink").toString
-    val mem = MemoryStream[(Timestamp, Long, String, Double)]
-    val events = mem.toDF().toDF("ts", "user_id", "event_type", "value")
-    val q = EventStreams.tumblingCounts(events, "10 minutes", "10 minutes")
-      .writeStream.format("parquet")
-      .option("path", s"$dir/out").option("checkpointLocation", s"$dir/ckpt")
-      .outputMode("append").start()
-    mem.addData((ts(1), 1L, "click", 1.0), (ts(2), 1L, "click", 2.0))
-    q.processAllAvailable()
-    mem.addData((ts(31), 1L, "click", 4.0)) // finalize the first window
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.read.parquet(s"$dir/out").collect()
-      .map(r => (r.getAs[Timestamp]("window_start").toString,
-        r.getAs[String]("event_type"), r.getAs[Long]("n")))
-    assert(rows.toSeq.contains(("2024-01-01 10:00:00.0", "click", 2L)), s"got ${rows.toSeq}")
-  }
-
-  test("streaming schema inference converges per micro-batch (complete mode)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[String]
-    val q = EventStreams.streamingInferSchema(mem.toDF().toDF("value"))
-      .writeStream.format("memory").queryName("inferred")
-      .outputMode("complete").start()
-    mem.addData("""{"a": 1}""")
-    q.processAllAvailable()
-    val first = spark.table("inferred").as[String].head()
-    mem.addData("""{"a": 1000, "b": "x"}""")
-    q.processAllAvailable()
-    val second = spark.table("inferred").as[String].head()
-    q.stop()
-    assert(first.contains("a tinyint"))
-    assert(second.contains("a smallint") && second.contains("b string"))
   }
 }

@@ -2,14 +2,12 @@ package graft.streaming
 
 import graft.SparkTestBase
 import graft.sources.{JsonCompact, JsonDocSource, JsonMeta}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-/** Streaming NDJSON ingest into a graftjson table
-  * ([[EventStreams.jsonIngest]] / [[EventStreams.ingestEpoch]]):
-  * deterministic epoch files (replay-idempotent), incremental
-  * planning metadata (fresh-JVM reads walk-free), and the compaction
-  * lifecycle over the accreted epochs. */
+/** NDJSON epoch ingest into a graftjson table
+  * ([[EventStreams.ingestEpoch]]): deterministic epoch files
+  * (replay-idempotent), incremental planning metadata (fresh-JVM reads
+  * walk-free), and the compaction lifecycle over the accreted epochs. */
 class JsonIngestSpec extends SparkTestBase {
 
   private def freshJvm(): Unit = {
@@ -22,22 +20,15 @@ class JsonIngestSpec extends SparkTestBase {
     (r, JsonDocSource.filesWalked.get() - before)
   }
 
-  test("epochs land as deterministic files; stream rows == table rows; meta keeps reads walk-free") {
+  test("epochs land as deterministic files; input rows == table rows; meta keeps reads walk-free") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val dir = graft.TempRoots.path("json_ingest")
     new java.io.File(dir).mkdirs()
     val b1 = (1L to 5L).map(i => (i, s"doc$i"))
     val b2 = (6L to 9L).map(i => (i, s"doc$i"))
-    val mem = MemoryStream[(Long, String)]
-    val q = EventStreams.jsonIngest(mem.toDF().toDF("id", "text"), dir,
-      checkpointDir = Some(graft.TempRoots.path("json_ingest_ckpt")))
-    try {
-      mem.addData(b1: _*)
-      q.processAllAvailable()
-      mem.addData(b2: _*)
-      q.processAllAvailable()
-    } finally q.stop()
+    Seq(b1, b2).zipWithIndex.foreach { case (b, e) =>
+      EventStreams.ingestEpoch(b.toDF("id", "text"), dir, batchId = e.toLong)
+    }
     val files = new java.io.File(dir).listFiles()
       .filter(_.getName.startsWith("epoch-")).map(_.getName).sorted.toSeq
     assert(files == Seq("epoch-000000.json", "epoch-000001.json"), files)
@@ -62,7 +53,7 @@ class JsonIngestSpec extends SparkTestBase {
     def table = spark.read.format("graftjson").load(dir)
       .collect().map(_.toString).sorted.toSeq
     val first = table
-    // the foreachBatch retry contract: same id, same data → same state
+    // the retry contract: same id, same data → same state
     EventStreams.ingestEpoch(batch, dir, batchId = 7L)
     assert(table == first)
     assert(new java.io.File(dir).listFiles()
