@@ -256,9 +256,11 @@ object Bench {
       * only after a driver GC notices the dead references. Wait for
       * storage to fall to `floorMB` with a bounded budget (4 s, one GC
       * nudge). If the budget expires, say so rather than silently
-      * recording a nonzero pre, and return the residual as the floor
-      * for this query's later passes, so they do not re-pay the full
-      * budget chasing the same megabytes. */
+      * recording a nonzero pre, naming the cached RDDs still resident
+      * ("no cached RDD" means a broadcast or another non-RDD block),
+      * and return the residual as the floor for this query's later
+      * passes, so they do not re-pay the full budget chasing the same
+      * megabytes. */
     private def drain(floorMB: Long, name: String, pass: Int): Long = {
       var drainedMs = 0
       while (usedStorageMB() > floorMB && drainedMs < 4000) {
@@ -268,9 +270,12 @@ object Bench {
       val residualMB = usedStorageMB()
       if (residualMB <= floorMB) floorMB
       else {
+        val cached = spark.sparkContext.getRDDStorageInfo.filter(_.isCached)
+          .map(r => f"rdd ${r.id} '${r.name}' ${r.memSize / 1048576.0}%.2fMB")
         System.err.println(
           s"[bench-teardown] ${residualMB}MB storage residual before " +
-            s"$name pass $pass (drain budget expired)")
+            s"$name pass $pass (drain budget expired): " +
+            (if (cached.isEmpty) "no cached RDD" else cached.mkString(", ")))
         residualMB
       }
     }

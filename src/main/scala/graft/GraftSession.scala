@@ -30,7 +30,7 @@ object GraftSession {
     *     emulation for its own I/O anyway (JsonLease.rawFs);
     *   - UI off, WARN logging.
     * The AQE coalescing floor is NOT set here: each query entry pins its
-    * own (SparkEntry.withCoalesceFloor). */
+    * own, 64k for [[QueryDef.dense]] queries (SparkEntry.withCoalesceFloor). */
   def local(cpus: Int, appName: String,
             master: Option[String] = None): SparkSession = {
     val spark = SparkSession.builder()

@@ -3,63 +3,49 @@ package graft
 import graft.queries.{Analytic, Curation, JsonQueries, LlmQueries, Pipeline, Relational}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query inventory and its oracle contract — see SURVEY.md §7.
   *
-  * The query inventory is assembled from three families:
+  * The query inventory is one registry of [[QueryDef]]s, assembled from
+  * six families:
   *   - [[graft.queries.Relational]] — the relational surface (SURVEY
   *     §2.2): scan/filter/project, joins (broadcast/shuffle/semi/anti/
   *     range), aggregation (hash, distinct, HLL, rollup/cube), window
   *     functions, top-k, set ops, scalar function families;
+  *   - [[graft.queries.Analytic]] — exact percentiles, subqueries,
+  *     salted skew shapes, graph and event analytics;
   *   - [[graft.queries.JsonQueries]] — the reference's own capability
   *     re-expressed (distributed schema inference, shredding,
-  *     infer-then-apply) plus JSON scalars and event-time windows;
+  *     infer-then-apply), JSON scalars, event-time windows and the
+  *     graftjson table lifecycle;
   *   - [[graft.queries.LlmQueries]] — training-data-pipeline operators
   *     (dedup exact/MinHash/SimHash/Jaccard, similarity search,
-  *     text stats, language ID, multimodal metadata).
+  *     text stats, language ID, multimodal metadata);
+  *   - [[graft.queries.Curation]] — contamination screens, quantization
+  *     audits and sampling;
+  *   - [[graft.queries.Pipeline]] — multi-step curation pipelines and
+  *     the stored indexes, sketches and CDC stores they maintain.
   */
 object SparkEntry {
 
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
+  /** Flagship query on the sf0.001 testdata; its smoke check wants rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q01_pricing_summary")(spark, "/root/testdata/sf0.001")
 
   private val coalesceFloorKey =
     "spark.sql.adaptive.coalescePartitions.minPartitionSize"
 
-  /** Queries whose post-shuffle stages are compute-dense per BYTE
-    * (shingle-set intersections, MinHash lanes, per-token expressions,
-    * HLL merges): byte-based AQE coalescing folds their sub-MB stages
-    * onto 1–2 tasks while the other cores idle, so these opt in to the
-    * 64k coalescing floor, r17's cross-cutting win. r18 re-measured
-    * the floor per query at VERIFIED 32-way parallelism (VERDICT r17
-    * #1: the session-wide
-    * floor was a wash at 32 cpus — ~10s of wins on these queries
-    * cancelled by ~10s of losses on lifecycle/small-stage queries,
-    * whose many tiny shuffles it shattered into per-task overhead and
-    * extra store files). Membership = 64k beat the Spark-default 1m
-    * floor by ≥0.08s in back-to-back 32-cpu suite A/Bs
-    * (OPTIMIZATION_r18.md has the table); everything else runs at the
-    * Spark default. Scale-safety unchanged from r17: at production
-    * volumes the coalesce target is bytes/parallelism ≫ 1 MB, so the
-    * floor never binds — it is a local-parallelism rescue, not a
-    * tuned shuffle-partition constant. */
-  private val denseCoalesce: Set[String] = Set(
-    "q11_join_multiway", "q15_sql_subquery", "q38_union_agg",
-    "q42_math_fns", "q45_infer_apply", "q46_infer_schema",
-    "q51_neardup_jaccard", "q52_neardup_minhash",
-    "q67_multimodal_resize", "q68_tfidf_top_terms", "q84_view_pipeline",
-    "q90_salted_join", "q97_shard_export", "q100_embedding_neardup_ivf",
-    "q102_curation_e2e", "q103_dedup_best_quality", "q105_data_card",
-    "q124_compaction", "q125_zorder_layout", "q131_index_append",
-    "q136_kmeans_refine", "q138_hll_sketch_store", "q142_pagerank",
-    "q146_orc_roundtrip", "q149_temperature_mix", "q154_scd2_history",
-    "q167_hll_overlap", "q168_communities", "q176_threshold_sweep",
-    "q178_pmi_collocations", "q179_score_auc", "q182_vocab_drift",
-    "q191_event_paths", "q196_sorted_neighborhood",
-    "q197_association_rules", "q202_length_batches",
-    "q215_touch_attribution", "q219_decontamination",
-    "q226_semantic_decontam", "q235_meta_stats",
-    "q251_sql_merge_cdc")
+  /** Checks that no two defs share a name and returns them unchanged.
+    * A repeated name fails loudly, naming every repeat: as map keys the
+    * later entry would silently replace the earlier one. */
+  private[graft] def registry(all: Seq[QueryDef]): Seq[QueryDef] = {
+    val repeated = all.groupBy(_.name).filter(_._2.size > 1).keys.toSeq.sorted
+    require(repeated.isEmpty, s"repeated query names: ${repeated.mkString(", ")}")
+    all
+  }
+
+  private lazy val defs: Seq[QueryDef] = registry(
+    Relational.defs ++ Analytic.defs ++ JsonQueries.defs ++
+      LlmQueries.defs ++ Curation.defs ++ Pipeline.defs)
 
   /** Every query entry pins its own coalescing floor at build time —
     * dense queries the 64k rescue, everything else the session's
@@ -79,10 +65,9 @@ object SparkEntry {
     * build-then-execute one entry at a time on a session; keep that
     * pattern (or re-invoke the entry) — the floor is a perf knob
     * only, results are floor-independent either way. */
-  private def withCoalesceFloor(
-      name: String, fn: (SparkSession, String) => DataFrame)
-      : (SparkSession, String) => DataFrame = { (s, d) =>
-    if (denseCoalesce(name))
+  private def withCoalesceFloor(d: QueryDef)
+      : (SparkSession, String) => DataFrame = { (s, dir) =>
+    if (d.dense)
       s.conf.set(coalesceFloorKey, "64k")
     else s.sparkContext.getConf.getOption(coalesceFloorKey) match {
       // the session's starting value: a deployment-set floor, else
@@ -90,21 +75,12 @@ object SparkEntry {
       case Some(v) => s.conf.set(coalesceFloorKey, v)
       case None => s.conf.unset(coalesceFloorKey)
     }
-    fn(s, d)
+    d.build(s, dir)
   }
 
-  private lazy val rawQueries
-      : Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ Analytic.queries ++ JsonQueries.queries ++
-      LlmQueries.queries ++ Curation.queries ++ Pipeline.queries
-
-  private lazy val wrappedQueries
-      : Map[String, (SparkSession, String) => DataFrame] =
-    rawQueries.map { case (n, f) => n -> withCoalesceFloor(n, f) }
-
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    wrappedQueries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    defs.map(d => d.name -> withCoalesceFloor(d)).toMap
 
   /** The one query-name lookup of the dev harnesses: a full entry name
     * or its unique `qNN` prefix. Fails loudly on zero or several hits. */
@@ -117,10 +93,7 @@ object SparkEntry {
   }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for ops whose semantics are not
-    * SQL-expressible (HLL sketches, LSH candidate generation, lattice
-    * schema inference) → driver records a rows-only check. */
-  def oracleSql: Map[String, String] =
-    Relational.oracle ++ Analytic.oracle ++ JsonQueries.oracle ++
-      LlmQueries.oracle ++ Curation.oracle ++ Pipeline.oracle
+    * the same parquet tables: every query carries one. */
+  lazy val oracleSql: Map[String, String] =
+    defs.map(d => d.name -> d.oracle).toMap
 }

@@ -4,11 +4,14 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated query-name filter (local
-    // iteration only — the driver always passes exactly two)
+    // optional 3rd arg, for local iteration (a full run passes two):
+    // comma-separated query names or unique qNN prefixes; an unknown
+    // name fails here, before the session starts
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+      if (args.length > 2)
+        Some(args(2).split(",").map(SparkEntry.resolve(_)._1).toSet)
+      else None
     val spark = GraftSession.local(GraftSession.envCpus, "graft-verify")
     // java.io.File by contract: outDir is the driver's LOCAL dump
     // directory (the correctness gate reads it with DuckDB on this

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.QueryDef
 import graft.ops.{GraphOps, Skew}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1865,82 +1866,43 @@ object Analytic {
       |  CAST(sum(CAST(value AS DECIMAL(14,2))) AS DOUBLE) AS sum_value
       |FROM u GROUP BY model, touch ORDER BY model, touch""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q215_touch_attribution" -> (q215 _),
-    "q208_cohort_retention" -> (q208 _),
-    "q209_funnel_conversion" -> (q209 _),
-    "q188_join_size_estimate" -> (q188 _),
-    "q189_fd_profile" -> (q189 _),
-    "q191_event_paths" -> (q191 _),
-    "q193_hits_ranking" -> (q193 _),
-    "q194_corr_matrix" -> (q194 _),
-    "q197_association_rules" -> (q197 _),
-    "q198_ri_audit" -> (q198 _),
-    "q199_benford_audit" -> (q199 _),
-    "q180_markov_transitions" -> (q180 _),
-    "q76_exact_percentiles" -> (q76 _),
-    "q77_ntile_buckets" -> (q77 _),
-    "q78_exists_subquery" -> (q78 _),
-    "q79_scalar_subquery" -> (q79 _),
-    "q80_mode_per_group" -> (q80 _),
-    "q81_range_interval_window" -> (q81 _),
-    "q82_lateral_topn" -> (q82 _),
-    "q83_csv_roundtrip" -> (q83 _),
-    "q84_view_pipeline" -> (q84 _),
-    "q89_salted_agg" -> (q89 _),
-    "q90_salted_join" -> (q90 _),
-    "q92_approx_percentiles" -> (q92 _),
-    "q142_pagerank" -> (q142 _),
-    "q147_countmin_audit" -> (q147 _),
-    "q153_event_funnel" -> (q153 _),
-    "q155_retention_cohorts" -> (q155 _),
-    "q157_event_anomalies" -> (q157 _),
-    "q161_triangle_count" -> (q161 _),
-    "q162_time_grid_fill" -> (q162 _),
-    "q163_pareto_frontier" -> (q163 _),
-    "q165_linear_interp" -> (q165 _),
-    "q168_communities" -> (q168 _),
-    "q175_bfs_hops" -> (q175 _))
-  // q168 rows-only like q142: the label recursion has no SQL oracle;
-  // GraphOpsSpec pins exact communities on synthetic graphs
-  // q21/q92/q147 are oracled since r13 via the envelope pattern:
-  // exact values + an in-query boolean pinning the sketch inside its
-  // guarantee; AnalyticSpec keeps the layout-determinism pins
-
-  val oracle: Map[String, String] = Map(
-    "q168_communities" -> q168Sql,
-    "q193_hits_ranking" -> q193Sql,
-    "q142_pagerank" -> q142Sql,
-    "q215_touch_attribution" -> q215Sql,
-    "q208_cohort_retention" -> q208Sql,
-    "q209_funnel_conversion" -> q209Sql,
-    "q189_fd_profile" -> q189Sql,
-    "q191_event_paths" -> q191Sql,
-    "q194_corr_matrix" -> q194Sql,
-    "q197_association_rules" -> q197Sql,
-    "q198_ri_audit" -> q198Sql,
-    "q199_benford_audit" -> q199Sql,
-    "q76_exact_percentiles" -> q76Sql,
-    "q92_approx_percentiles" -> q92Sql,
-    "q147_countmin_audit" -> q147Sql,
-    "q188_join_size_estimate" -> q188Sql,
-    "q77_ntile_buckets" -> q77Sql,
-    "q78_exists_subquery" -> q78Sql,
-    "q79_scalar_subquery" -> q79Sql,
-    "q80_mode_per_group" -> q80Sql,
-    "q81_range_interval_window" -> q81Sql,
-    "q82_lateral_topn" -> q82Sql,
-    "q83_csv_roundtrip" -> q83Sql,
-    "q84_view_pipeline" -> q84Sql,
-    "q89_salted_agg" -> q89Sql,
-    "q90_salted_join" -> q90Sql,
-    "q180_markov_transitions" -> q180Sql,
-    "q153_event_funnel" -> q153Sql,
-    "q155_retention_cohorts" -> q155Sql,
-    "q157_event_anomalies" -> q157Sql,
-    "q161_triangle_count" -> q161Sql,
-    "q162_time_grid_fill" -> q162Sql,
-    "q163_pareto_frontier" -> q163Sql,
-    "q165_linear_interp" -> q165Sql,
-    "q175_bfs_hops" -> q175Sql)
+  // q21/q92/q147 are oracled via the envelope pattern: exact values +
+  // an in-query boolean pinning the sketch inside its guarantee;
+  // AnalyticSpec keeps the layout-determinism pins
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q215_touch_attribution", q215, q215Sql, dense = true),
+    QueryDef("q208_cohort_retention", q208, q208Sql),
+    QueryDef("q209_funnel_conversion", q209, q209Sql),
+    QueryDef("q188_join_size_estimate", q188, q188Sql),
+    QueryDef("q189_fd_profile", q189, q189Sql),
+    QueryDef("q191_event_paths", q191, q191Sql, dense = true),
+    QueryDef("q193_hits_ranking", q193, q193Sql),
+    QueryDef("q194_corr_matrix", q194, q194Sql),
+    QueryDef("q197_association_rules", q197, q197Sql, dense = true),
+    QueryDef("q198_ri_audit", q198, q198Sql),
+    QueryDef("q199_benford_audit", q199, q199Sql),
+    QueryDef("q180_markov_transitions", q180, q180Sql),
+    QueryDef("q76_exact_percentiles", q76, q76Sql),
+    QueryDef("q77_ntile_buckets", q77, q77Sql),
+    QueryDef("q78_exists_subquery", q78, q78Sql),
+    QueryDef("q79_scalar_subquery", q79, q79Sql),
+    QueryDef("q80_mode_per_group", q80, q80Sql),
+    QueryDef("q81_range_interval_window", q81, q81Sql),
+    QueryDef("q82_lateral_topn", q82, q82Sql),
+    QueryDef("q83_csv_roundtrip", q83, q83Sql),
+    QueryDef("q84_view_pipeline", q84, q84Sql, dense = true),
+    QueryDef("q89_salted_agg", q89, q89Sql),
+    QueryDef("q90_salted_join", q90, q90Sql, dense = true),
+    QueryDef("q92_approx_percentiles", q92, q92Sql),
+    QueryDef("q142_pagerank", q142, q142Sql, dense = true),
+    QueryDef("q147_countmin_audit", q147, q147Sql),
+    QueryDef("q153_event_funnel", q153, q153Sql),
+    QueryDef("q155_retention_cohorts", q155, q155Sql),
+    QueryDef("q157_event_anomalies", q157, q157Sql),
+    QueryDef("q161_triangle_count", q161, q161Sql),
+    QueryDef("q162_time_grid_fill", q162, q162Sql),
+    QueryDef("q163_pareto_frontier", q163, q163Sql),
+    QueryDef("q165_linear_interp", q165, q165Sql),
+    QueryDef("q168_communities", q168, q168Sql, dense = true),
+    QueryDef("q175_bfs_hops", q175, q175Sql))
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.QueryDef
 import graft.ops.{TextOps, VectorOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -566,31 +567,17 @@ object Curation {
       |  max(mx) AS max_benchmark_cos
       |FROM s GROUP BY label ORDER BY label""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q85_bloom_contamination" -> (q85 _),
-    "q86_embedding_quantize" -> (q86 _),
-    "q87_zipf_stats" -> (q87 _),
-    "q88_stratified_sample" -> (q88 _),
-    "q216_k_anonymity" -> (q216 _),
-    "q218_matryoshka_recall" -> (q218 _),
-    "q219_decontamination" -> (q219 _),
-    "q222_mixture_weights" -> (q222 _),
-    "q223_rare_trigrams" -> (q223 _),
-    "q224_token_drift" -> (q224 _),
-    "q225_rag_chunking" -> (q225 _),
-    "q226_semantic_decontam" -> (q226 _))
-
-  val oracle: Map[String, String] = Map(
-    "q85_bloom_contamination" -> q85Sql,
-    "q86_embedding_quantize" -> q86Sql,
-    "q87_zipf_stats" -> q87Sql,
-    "q88_stratified_sample" -> q88Sql,
-    "q216_k_anonymity" -> q216Sql,
-    "q218_matryoshka_recall" -> q218Sql,
-    "q219_decontamination" -> q219Sql,
-    "q222_mixture_weights" -> q222Sql,
-    "q223_rare_trigrams" -> q223Sql,
-    "q224_token_drift" -> q224Sql,
-    "q225_rag_chunking" -> q225Sql,
-    "q226_semantic_decontam" -> q226Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q85_bloom_contamination", q85, q85Sql),
+    QueryDef("q86_embedding_quantize", q86, q86Sql),
+    QueryDef("q87_zipf_stats", q87, q87Sql),
+    QueryDef("q88_stratified_sample", q88, q88Sql),
+    QueryDef("q216_k_anonymity", q216, q216Sql),
+    QueryDef("q218_matryoshka_recall", q218, q218Sql),
+    QueryDef("q219_decontamination", q219, q219Sql, dense = true),
+    QueryDef("q222_mixture_weights", q222, q222Sql),
+    QueryDef("q223_rare_trigrams", q223, q223Sql),
+    QueryDef("q224_token_drift", q224, q224Sql),
+    QueryDef("q225_rag_chunking", q225, q225Sql),
+    QueryDef("q226_semantic_decontam", q226, q226Sql, dense = true))
 }

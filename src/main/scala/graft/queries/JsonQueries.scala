@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.QueryDef
 import graft.infer.{InferSchema, InferSchemaAgg}
 import graft.shred.Shredder
 import graft.streaming.EventStreams
@@ -1916,93 +1917,48 @@ object JsonQueries {
       |FROM documents WHERE lang = 'en'
       |GROUP BY source ORDER BY source NULLS FIRST""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q258_dir_partitions" -> (q258 _),
-    "q257_cdc_mirror_op" -> (q257 _),
-    "q255_cdc_mirror" -> (q255 _),
-    "q254_file_provenance" -> (q254 _),
-    "q253_cdc_stream" -> (q253 _),
-    "q250_sql_maintenance" -> (q250 _),
-    "q249_sql_delete" -> (q249 _),
-    "q248_sql_time_travel" -> (q248 _),
-    "q247_zorder_write" -> (q247 _),
-    "q246_vacuum_retention" -> (q246 _),
-    "q245_change_feed" -> (q245 _),
-    "q244_time_travel" -> (q244 _),
-    "q243_zorder_recluster" -> (q243 _),
-    "q242_writer_lease" -> (q242 _),
-    "q241_union_branch_filter" -> (q241 _),
-    "q240_filtered_topk" -> (q240 _),
-    "q239_sql_on_file" -> (q239 _),
-    "q238_topk_pruned" -> (q238 _),
-    "q237_clustered_write" -> (q237 _),
-    "q236_meta_groupby" -> (q236 _),
-    "q235_meta_stats" -> (q235 _),
-    "q234_stream_sink" -> (q234 _),
-    "q233_write_path" -> (q233 _),
-    "q232_stream_source" -> (q232 _),
-    "q231_recluster" -> (q231 _),
-    "q230_json_ingest" -> (q230 _),
-    "q229_filtered_count" -> (q229 _),
-    "q228_nested_zonemap" -> (q228 _),
-    "q227_json_compaction" -> (q227 _),
-    "q210_graftjson_source" -> (q210 _),
-    "q212_graftjson_splits" -> (q212 _),
-    "q214_graftjson_pushdown" -> (q214 _),
-    "q221_zonemap_prune" -> (q221 _),
-    "q200_variant_shred" -> (q200 _),
-    "q144_jsonl_roundtrip" -> (q144 _),
-    "q39_asof_join" -> (q39 _),
-    "q44_json_extract" -> (q44 _),
-    "q45_infer_apply" -> (q45 _),
-    "q46_infer_schema" -> (q46 _),
-    "q47_shred_histogram" -> (q47 _),
-    "q48_tumbling_window" -> (q48 _),
-    "q49_session_window" -> (q49 _),
-    "q91_stream_dedup" -> (q91 _))
-
-  val oracle: Map[String, String] = Map(
-    "q258_dir_partitions" -> q258Sql,
-    "q257_cdc_mirror_op" -> q257Sql,
-    "q255_cdc_mirror" -> q255Sql,
-    "q254_file_provenance" -> q254Sql,
-    "q253_cdc_stream" -> q253Sql,
-    "q250_sql_maintenance" -> q250Sql,
-    "q249_sql_delete" -> q249Sql,
-    "q248_sql_time_travel" -> q248Sql,
-    "q247_zorder_write" -> q247Sql,
-    "q246_vacuum_retention" -> q246Sql,
-    "q245_change_feed" -> q245Sql,
-    "q244_time_travel" -> q244Sql,
-    "q243_zorder_recluster" -> q243Sql,
-    "q242_writer_lease" -> q242Sql,
-    "q241_union_branch_filter" -> q241Sql,
-    "q240_filtered_topk" -> q240Sql,
-    "q239_sql_on_file" -> q239Sql,
-    "q238_topk_pruned" -> q238Sql,
-    "q237_clustered_write" -> q237Sql,
-    "q236_meta_groupby" -> q236Sql,
-    "q235_meta_stats" -> q235Sql,
-    "q234_stream_sink" -> q234Sql,
-    "q233_write_path" -> q233Sql,
-    "q232_stream_source" -> q232Sql,
-    "q231_recluster" -> q231Sql,
-    "q230_json_ingest" -> q230Sql,
-    "q229_filtered_count" -> q229Sql,
-    "q228_nested_zonemap" -> q228Sql,
-    "q227_json_compaction" -> q227Sql,
-    "q210_graftjson_source" -> q210Sql,
-    "q212_graftjson_splits" -> q212Sql,
-    "q214_graftjson_pushdown" -> q214Sql,
-    "q221_zonemap_prune" -> q221Sql,
-    "q200_variant_shred" -> q200Sql,
-    "q144_jsonl_roundtrip" -> q144Sql,
-    "q39_asof_join" -> q39Sql,
-    "q44_json_extract" -> q44Sql,
-    "q46_infer_schema" -> q46Sql,
-    "q45_infer_apply" -> q45Sql,
-    "q47_shred_histogram" -> q47Sql,
-    "q48_tumbling_window" -> q48Sql,
-    "q49_session_window" -> q49Sql,
-    "q91_stream_dedup" -> q91Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q258_dir_partitions", q258, q258Sql),
+    QueryDef("q257_cdc_mirror_op", q257, q257Sql),
+    QueryDef("q255_cdc_mirror", q255, q255Sql),
+    QueryDef("q254_file_provenance", q254, q254Sql),
+    QueryDef("q253_cdc_stream", q253, q253Sql),
+    QueryDef("q250_sql_maintenance", q250, q250Sql),
+    QueryDef("q249_sql_delete", q249, q249Sql),
+    QueryDef("q248_sql_time_travel", q248, q248Sql),
+    QueryDef("q247_zorder_write", q247, q247Sql),
+    QueryDef("q246_vacuum_retention", q246, q246Sql),
+    QueryDef("q245_change_feed", q245, q245Sql),
+    QueryDef("q244_time_travel", q244, q244Sql),
+    QueryDef("q243_zorder_recluster", q243, q243Sql),
+    QueryDef("q242_writer_lease", q242, q242Sql),
+    QueryDef("q241_union_branch_filter", q241, q241Sql),
+    QueryDef("q240_filtered_topk", q240, q240Sql),
+    QueryDef("q239_sql_on_file", q239, q239Sql),
+    QueryDef("q238_topk_pruned", q238, q238Sql),
+    QueryDef("q237_clustered_write", q237, q237Sql),
+    QueryDef("q236_meta_groupby", q236, q236Sql),
+    QueryDef("q235_meta_stats", q235, q235Sql, dense = true),
+    QueryDef("q234_stream_sink", q234, q234Sql),
+    QueryDef("q233_write_path", q233, q233Sql),
+    QueryDef("q232_stream_source", q232, q232Sql),
+    QueryDef("q231_recluster", q231, q231Sql),
+    QueryDef("q230_json_ingest", q230, q230Sql),
+    QueryDef("q229_filtered_count", q229, q229Sql),
+    QueryDef("q228_nested_zonemap", q228, q228Sql),
+    QueryDef("q227_json_compaction", q227, q227Sql),
+    QueryDef("q210_graftjson_source", q210, q210Sql),
+    QueryDef("q212_graftjson_splits", q212, q212Sql),
+    QueryDef("q214_graftjson_pushdown", q214, q214Sql),
+    QueryDef("q221_zonemap_prune", q221, q221Sql),
+    QueryDef("q200_variant_shred", q200, q200Sql),
+    QueryDef("q144_jsonl_roundtrip", q144, q144Sql),
+    QueryDef("q39_asof_join", q39, q39Sql),
+    QueryDef("q44_json_extract", q44, q44Sql),
+    QueryDef("q45_infer_apply", q45, q45Sql, dense = true),
+    QueryDef("q46_infer_schema", q46, q46Sql, dense = true),
+    QueryDef("q47_shred_histogram", q47, q47Sql),
+    QueryDef("q48_tumbling_window", q48, q48Sql),
+    QueryDef("q49_session_window", q49, q49Sql),
+    QueryDef("q91_stream_dedup", q91, q91Sql))
 }

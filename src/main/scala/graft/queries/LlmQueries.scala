@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.QueryDef
 import graft.ops.{Bpe, Multimodal, TextOps, VectorOps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -2397,145 +2398,74 @@ object LlmQueries {
       |  CAST(length(clean) AS BIGINT) AS n_chars
       |FROM c ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q217_html_extract" -> (q217 _),
-    "q205_repetition_signals" -> (q205 _),
-    "q220_sequence_packing" -> (q220 _),
-    "q207_pii_scrub" -> (q207 _),
-    "q186_jl_recall" -> (q186 _),
-    "q187_normalized_dedup" -> (q187 _),
-    "q195_embedding_dim_audit" -> (q195 _),
-    "q196_sorted_neighborhood" -> (q196 _),
-    "q201_interleave_mix" -> (q201 _),
-    "q202_length_batches" -> (q202 _),
-    "q185_isotonic_calibration" -> (q185 _),
-    "q179_score_auc" -> (q179 _),
-    "q181_compression_signal" -> (q181 _),
-    "q182_vocab_drift" -> (q182 _),
-    "q183_mmr_rerank" -> (q183 _),
-    "q184_ols_per_source" -> (q184 _),
-    "q166_bootstrap_ci" -> (q166 _),
-    "q169_quantile_normalize" -> (q169 _),
-    "q176_threshold_sweep" -> (q176 _),
-    "q177_source_entropy" -> (q177 _),
-    "q178_pmi_collocations" -> (q178 _),
-    "q148_label_affinity" -> (q148 _),
-    "q149_temperature_mix" -> (q149 _),
-    "q151_vocab_encode" -> (q151 _),
-    "q152_embedding_outliers" -> (q152 _),
-    "q159_winsorized_stats" -> (q159 _),
-    "q160_chisq_contingency" -> (q160 _),
-    "q66_multimodal_frames" -> (q66 _),
-    "q50_dedup_exact" -> (q50 _),
-    "q51_neardup_jaccard" -> (q51 _),
-    "q52_neardup_minhash" -> (q52 _),
-    "q53_neardup_simhash" -> (q53 _),
-    "q54_text_stats" -> (q54 _),
-    "q55_lang_id" -> (q55 _),
-    "q56_fingerprint" -> (q56 _),
-    "q57_dedup_survivors" -> (q57 _),
-    "q58_quality_score" -> (q58 _),
-    "q59_winnowing_fp" -> (q59 _),
-    "q60_cosine_topk" -> (q60 _),
-    "q61_ann_lsh" -> (q61 _),
-    "q62_embedding_neardup" -> (q62 _),
-    "q63_ann_ivf" -> (q63 _),
-    "q64_neardup_groups" -> (q64 _),
-    "q65_multimodal_meta" -> (q65 _),
-    "q67_multimodal_resize" -> (q67 _),
-    "q121_pixel_resize" -> (q121 _),
-    "q68_tfidf_top_terms" -> (q68 _),
-    "q69_stable_sample" -> (q69 _),
-    "q70_contamination" -> (q70 _),
-    "q71_repetition" -> (q71 _),
-    "q72_doc_chunks" -> (q72 _),
-    "q73_pii_scrub" -> (q73 _),
-    "q74_ann_recall" -> (q74 _),
-    "q75_label_centroids" -> (q75 _),
-    "q93_unigram_nll" -> (q93 _),
-    "q145_backoff_nll" -> (q145 _),
-    "q94_crossdoc_ngrams" -> (q94 _),
-    "q95_pq_ann" -> (q95 _),
-    "q108_audio_meta" -> (q108 _),
-    "q115_video_meta" -> (q115 _),
-    "q122_pcm_stats" -> (q122 _),
-    "q123_heavy_hitters" -> (q123 _),
-    "q126_bpe_vocab" -> (q126 _),
-    "q127_bpe_encode" -> (q127 _),
-    "q133_weighted_sample" -> (q133 _),
-    "q136_kmeans_refine" -> (q136 _),
-    "q137_pca_project" -> (q137 _),
-    "q139_quality_classifier" -> (q139 _))
-  // q126/q127 rows-only: the BPE merge recursion is not SQL-expressible
-  // q61/q63/q95/q74 oracled since r14 via the planted-neighbors fixture
-
-  val oracle: Map[String, String] = Map(
-    "q139_quality_classifier" -> q139Sql,
-    "q183_mmr_rerank" -> q183Sql,
-    "q126_bpe_vocab" -> q126Sql,
-    "q181_compression_signal" -> q181Sql,
-    "q185_isotonic_calibration" -> q185Sql,
-    "q136_kmeans_refine" -> q136Sql,
-    "q186_jl_recall" -> q186Sql,
-    "q52_neardup_minhash" -> q52Sql,
-    "q53_neardup_simhash" -> q53Sql,
-    "q127_bpe_encode" -> q127Sql,
-    "q137_pca_project" -> q137Sql,
-    "q61_ann_lsh" -> q61Sql,
-    "q63_ann_ivf" -> q63Sql,
-    "q95_pq_ann" -> q95Sql,
-    "q74_ann_recall" -> q74Sql,
-    "q205_repetition_signals" -> q205Sql,
-    "q220_sequence_packing" -> q220Sql,
-    "q207_pii_scrub" -> q207Sql,
-    "q217_html_extract" -> q217Sql,
-    "q195_embedding_dim_audit" -> q195Sql,
-    "q196_sorted_neighborhood" -> q196Sql,
-    "q201_interleave_mix" -> q201Sql,
-    "q202_length_batches" -> q202Sql,
-    "q179_score_auc" -> q179Sql,
-    "q182_vocab_drift" -> q182Sql,
-    "q184_ols_per_source" -> q184Sql,
-    "q187_normalized_dedup" -> q187Sql,
-    "q166_bootstrap_ci" -> q166Sql,
-    "q169_quantile_normalize" -> q169Sql,
-    "q176_threshold_sweep" -> q176Sql,
-    "q177_source_entropy" -> q177Sql,
-    "q178_pmi_collocations" -> q178Sql,
-    "q148_label_affinity" -> q148Sql,
-    "q149_temperature_mix" -> q149Sql,
-    "q151_vocab_encode" -> q151Sql,
-    "q152_embedding_outliers" -> q152Sql,
-    "q159_winsorized_stats" -> q159Sql,
-    "q160_chisq_contingency" -> q160Sql,
-    "q66_multimodal_frames" -> q66Sql,
-    "q50_dedup_exact" -> q50Sql,
-    "q51_neardup_jaccard" -> q51Sql,
-    "q54_text_stats" -> q54Sql,
-    "q55_lang_id" -> q55Sql,
-    "q56_fingerprint" -> q56Sql,
-    "q57_dedup_survivors" -> q57Sql,
-    "q58_quality_score" -> q58Sql,
-    "q59_winnowing_fp" -> q59Sql,
-    "q60_cosine_topk" -> q60Sql,
-    "q62_embedding_neardup" -> q62Sql,
-    "q64_neardup_groups" -> q64Sql,
-    "q65_multimodal_meta" -> q65Sql,
-    "q67_multimodal_resize" -> q67Sql,
-    "q121_pixel_resize" -> q121Sql,
-    "q68_tfidf_top_terms" -> q68Sql,
-    "q69_stable_sample" -> q69Sql,
-    "q70_contamination" -> q70Sql,
-    "q71_repetition" -> q71Sql,
-    "q72_doc_chunks" -> q72Sql,
-    "q73_pii_scrub" -> q73Sql,
-    "q75_label_centroids" -> q75Sql,
-    "q93_unigram_nll" -> q93Sql,
-    "q145_backoff_nll" -> q145Sql,
-    "q94_crossdoc_ngrams" -> q94Sql,
-    "q108_audio_meta" -> q108Sql,
-    "q115_video_meta" -> q115Sql,
-    "q122_pcm_stats" -> q122Sql,
-    "q123_heavy_hitters" -> q123Sql,
-    "q133_weighted_sample" -> q133Sql)
+  // q61/q63/q95/q74 are oracled via the planted-neighbors fixture
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q217_html_extract", q217, q217Sql),
+    QueryDef("q205_repetition_signals", q205, q205Sql),
+    QueryDef("q220_sequence_packing", q220, q220Sql),
+    QueryDef("q207_pii_scrub", q207, q207Sql),
+    QueryDef("q186_jl_recall", q186, q186Sql),
+    QueryDef("q187_normalized_dedup", q187, q187Sql),
+    QueryDef("q195_embedding_dim_audit", q195, q195Sql),
+    QueryDef("q196_sorted_neighborhood", q196, q196Sql, dense = true),
+    QueryDef("q201_interleave_mix", q201, q201Sql),
+    QueryDef("q202_length_batches", q202, q202Sql, dense = true),
+    QueryDef("q185_isotonic_calibration", q185, q185Sql),
+    QueryDef("q179_score_auc", q179, q179Sql, dense = true),
+    QueryDef("q181_compression_signal", q181, q181Sql),
+    QueryDef("q182_vocab_drift", q182, q182Sql, dense = true),
+    QueryDef("q183_mmr_rerank", q183, q183Sql),
+    QueryDef("q184_ols_per_source", q184, q184Sql),
+    QueryDef("q166_bootstrap_ci", q166, q166Sql),
+    QueryDef("q169_quantile_normalize", q169, q169Sql),
+    QueryDef("q176_threshold_sweep", q176, q176Sql, dense = true),
+    QueryDef("q177_source_entropy", q177, q177Sql),
+    QueryDef("q178_pmi_collocations", q178, q178Sql, dense = true),
+    QueryDef("q148_label_affinity", q148, q148Sql),
+    QueryDef("q149_temperature_mix", q149, q149Sql, dense = true),
+    QueryDef("q151_vocab_encode", q151, q151Sql),
+    QueryDef("q152_embedding_outliers", q152, q152Sql),
+    QueryDef("q159_winsorized_stats", q159, q159Sql),
+    QueryDef("q160_chisq_contingency", q160, q160Sql),
+    QueryDef("q66_multimodal_frames", q66, q66Sql),
+    QueryDef("q50_dedup_exact", q50, q50Sql),
+    QueryDef("q51_neardup_jaccard", q51, q51Sql, dense = true),
+    QueryDef("q52_neardup_minhash", q52, q52Sql, dense = true),
+    QueryDef("q53_neardup_simhash", q53, q53Sql),
+    QueryDef("q54_text_stats", q54, q54Sql),
+    QueryDef("q55_lang_id", q55, q55Sql),
+    QueryDef("q56_fingerprint", q56, q56Sql),
+    QueryDef("q57_dedup_survivors", q57, q57Sql),
+    QueryDef("q58_quality_score", q58, q58Sql),
+    QueryDef("q59_winnowing_fp", q59, q59Sql),
+    QueryDef("q60_cosine_topk", q60, q60Sql),
+    QueryDef("q61_ann_lsh", q61, q61Sql),
+    QueryDef("q62_embedding_neardup", q62, q62Sql),
+    QueryDef("q63_ann_ivf", q63, q63Sql),
+    QueryDef("q64_neardup_groups", q64, q64Sql),
+    QueryDef("q65_multimodal_meta", q65, q65Sql),
+    QueryDef("q67_multimodal_resize", q67, q67Sql, dense = true),
+    QueryDef("q121_pixel_resize", q121, q121Sql),
+    QueryDef("q68_tfidf_top_terms", q68, q68Sql, dense = true),
+    QueryDef("q69_stable_sample", q69, q69Sql),
+    QueryDef("q70_contamination", q70, q70Sql),
+    QueryDef("q71_repetition", q71, q71Sql),
+    QueryDef("q72_doc_chunks", q72, q72Sql),
+    QueryDef("q73_pii_scrub", q73, q73Sql),
+    QueryDef("q74_ann_recall", q74, q74Sql),
+    QueryDef("q75_label_centroids", q75, q75Sql),
+    QueryDef("q93_unigram_nll", q93, q93Sql),
+    QueryDef("q145_backoff_nll", q145, q145Sql),
+    QueryDef("q94_crossdoc_ngrams", q94, q94Sql),
+    QueryDef("q95_pq_ann", q95, q95Sql),
+    QueryDef("q108_audio_meta", q108, q108Sql),
+    QueryDef("q115_video_meta", q115, q115Sql),
+    QueryDef("q122_pcm_stats", q122, q122Sql),
+    QueryDef("q123_heavy_hitters", q123, q123Sql),
+    QueryDef("q126_bpe_vocab", q126, q126Sql),
+    QueryDef("q127_bpe_encode", q127, q127Sql),
+    QueryDef("q133_weighted_sample", q133, q133Sql),
+    QueryDef("q136_kmeans_refine", q136, q136Sql, dense = true),
+    QueryDef("q137_pca_project", q137, q137Sql),
+    QueryDef("q139_quality_classifier", q139, q139Sql))
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.QueryDef
 import graft.ops.{InvertedIndex, Sharding, Sketches, TextOps, VectorOps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -2438,122 +2439,61 @@ object Pipeline {
       |  CAST(max(n_chars) AS VARCHAR) FROM documents
       |ORDER BY col_name""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q96_ngram_contamination" -> (q96 _),
-    "q97_shard_export" -> (q97 _),
-    "q98_context_packing" -> (q98 _),
-    "q99_filter_funnel" -> (q99 _),
-    "q100_embedding_neardup_ivf" -> (q100 _),
-    "q101_stream_schema" -> (q101 _),
-    "q102_curation_e2e" -> (q102 _),
-    "q103_dedup_best_quality" -> (q103 _),
-    "q104_incremental_dedup" -> (q104 _),
-    "q105_data_card" -> (q105 _),
-    "q106_diversity_sample" -> (q106 _),
-    "q107_token_budget_mix" -> (q107 _),
-    "q109_schema_evolution" -> (q109 _),
-    "q110_adaptive_quality" -> (q110 _),
-    "q111_strip_boilerplate" -> (q111 _),
-    "q112_incremental_ivf_index" -> (q112 _),
-    "q113_neardup_suppress" -> (q113 _),
-    "q114_curation_lineage" -> (q114 _),
-    "q116_index_lifecycle" -> (q116 _),
-    "q117_snapshot_diff" -> (q117 _),
-    "q118_train_val_test" -> (q118 _),
-    "q119_incremental_curation" -> (q119 _),
-    "q120_index_drift" -> (q120 _),
-    "q124_compaction" -> (q124 _),
-    "q125_zorder_layout" -> (q125 _),
-    "q128_cdc_merge" -> (q128 _),
-    "q129_index_search" -> (q129 _),
-    "q130_index_ranked" -> (q130 _),
-    "q131_index_append" -> (q131 _),
-    "q132_phrase_search" -> (q132 _),
-    "q134_bm25_search" -> (q134 _),
-    "q135_zone_map_scan" -> (q135 _),
-    "q138_hll_sketch_store" -> (q138 _),
-    "q140_incremental_rollup" -> (q140 _),
-    "q143_table_stats" -> (q143 _),
-    "q146_orc_roundtrip" -> (q146 _),
-    "q154_scd2_history" -> (q154 _),
-    "q156_pointintime_join" -> (q156 _),
-    "q158_data_expectations" -> (q158 _),
-    "q164_trigram_search" -> (q164 _),
-    "q170_chunk_retrieval" -> (q170 _),
-    "q171_index_delete" -> (q171 _),
-    "q172_hybrid_retrieval" -> (q172 _),
-    "q173_index_compaction" -> (q173 _),
-    "q174_retrieval_eval" -> (q174 _),
-    "q167_hll_overlap" -> (q167 _),
-    "q192_xml_roundtrip" -> (q192 _),
-    "q190_hist_quantiles" -> (q190 _),
-    "q203_pq_index_drift" -> (q203 _),
-    "q204_diff_index_maintenance" -> (q204 _),
-    "q206_diff_ivf_maintenance" -> (q206 _),
-    "q211_ivf_compaction" -> (q211 _),
-    "q213_full_upsert_maintenance" -> (q213 _),
-    "q251_sql_merge_cdc" -> (q251 _),
-    "q252_hybrid_stored_rrf" -> (q252 _),
-    "q256_hybrid_batch_rrf" -> (q256 _))
-
-  val oracle: Map[String, String] = Map(
-    "q251_sql_merge_cdc" -> q251Sql,
-    "q252_hybrid_stored_rrf" -> q252Sql,
-    "q256_hybrid_batch_rrf" -> q256Sql,
-    "q106_diversity_sample" -> q106Sql,
-    "q112_incremental_ivf_index" -> q112Sql,
-    "q116_index_lifecycle" -> q116Sql,
-    "q120_index_drift" -> driftVerdictSql,
-    "q138_hll_sketch_store" -> q138Sql,
-    "q167_hll_overlap" -> q167Sql,
-    "q203_pq_index_drift" -> driftVerdictSql,
-    "q113_neardup_suppress" -> q113Sql,
-    "q100_embedding_neardup_ivf" -> q100Sql,
-    "q192_xml_roundtrip" -> q192Sql,
-    "q190_hist_quantiles" -> q190Sql,
-    "q96_ngram_contamination" -> q96Sql,
-    "q97_shard_export" -> q97Sql,
-    "q98_context_packing" -> q98Sql,
-    "q99_filter_funnel" -> q99Sql,
-    // q100 rows-only: k-means blocking cells are not SQL-recomputable
-    "q101_stream_schema" -> q101Sql,
-    "q102_curation_e2e" -> q102Sql,
-    "q103_dedup_best_quality" -> q103Sql,
-    "q104_incremental_dedup" -> q104Sql,
-    "q105_data_card" -> q105Sql,
-    // q106 rows-only: k-means cells are not SQL-recomputable
-    "q107_token_budget_mix" -> q107Sql,
-    "q109_schema_evolution" -> q109Sql,
-    "q110_adaptive_quality" -> q110Sql,
-    "q111_strip_boilerplate" -> q111Sql,
-    "q114_curation_lineage" -> q114Sql,
-    "q117_snapshot_diff" -> q117Sql,
-    "q118_train_val_test" -> q118Sql,
-    // q120 rows-only: k-means cells are not SQL-recomputable
-    "q119_incremental_curation" -> q119Sql,
-    "q124_compaction" -> q124Sql,
-    "q125_zorder_layout" -> q125Sql,
-    "q128_cdc_merge" -> q128Sql,
-    "q129_index_search" -> q129Sql,
-    "q130_index_ranked" -> q130Sql,
-    "q131_index_append" -> q131Sql,
-    "q132_phrase_search" -> q132Sql,
-    "q134_bm25_search" -> q134Sql,
-    "q135_zone_map_scan" -> q135Sql,
-    "q140_incremental_rollup" -> q140Sql,
-    "q143_table_stats" -> q143Sql,
-    "q146_orc_roundtrip" -> q146Sql,
-    "q154_scd2_history" -> q154Sql,
-    "q156_pointintime_join" -> q156Sql,
-    "q158_data_expectations" -> q158Sql,
-    "q164_trigram_search" -> q164Sql,
-    "q170_chunk_retrieval" -> q170Sql,
-    "q171_index_delete" -> q171Sql,
-    "q172_hybrid_retrieval" -> q172Sql,
-    "q173_index_compaction" -> q173Sql,
-    "q174_retrieval_eval" -> q174Sql,
-    "q204_diff_index_maintenance" -> q204Sql,
-    "q206_diff_ivf_maintenance" -> q206Sql,
-    "q211_ivf_compaction" -> q211Sql,
-    "q213_full_upsert_maintenance" -> q213Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q96_ngram_contamination", q96, q96Sql),
+    QueryDef("q97_shard_export", q97, q97Sql, dense = true),
+    QueryDef("q98_context_packing", q98, q98Sql),
+    QueryDef("q99_filter_funnel", q99, q99Sql),
+    QueryDef("q100_embedding_neardup_ivf", q100, q100Sql, dense = true),
+    QueryDef("q101_stream_schema", q101, q101Sql),
+    QueryDef("q102_curation_e2e", q102, q102Sql, dense = true),
+    QueryDef("q103_dedup_best_quality", q103, q103Sql, dense = true),
+    QueryDef("q104_incremental_dedup", q104, q104Sql),
+    QueryDef("q105_data_card", q105, q105Sql, dense = true),
+    QueryDef("q106_diversity_sample", q106, q106Sql),
+    QueryDef("q107_token_budget_mix", q107, q107Sql),
+    QueryDef("q109_schema_evolution", q109, q109Sql),
+    QueryDef("q110_adaptive_quality", q110, q110Sql),
+    QueryDef("q111_strip_boilerplate", q111, q111Sql),
+    QueryDef("q112_incremental_ivf_index", q112, q112Sql),
+    QueryDef("q113_neardup_suppress", q113, q113Sql),
+    QueryDef("q114_curation_lineage", q114, q114Sql),
+    QueryDef("q116_index_lifecycle", q116, q116Sql),
+    QueryDef("q117_snapshot_diff", q117, q117Sql),
+    QueryDef("q118_train_val_test", q118, q118Sql),
+    QueryDef("q119_incremental_curation", q119, q119Sql),
+    QueryDef("q120_index_drift", q120, driftVerdictSql),
+    QueryDef("q124_compaction", q124, q124Sql, dense = true),
+    QueryDef("q125_zorder_layout", q125, q125Sql, dense = true),
+    QueryDef("q128_cdc_merge", q128, q128Sql),
+    QueryDef("q129_index_search", q129, q129Sql),
+    QueryDef("q130_index_ranked", q130, q130Sql),
+    QueryDef("q131_index_append", q131, q131Sql, dense = true),
+    QueryDef("q132_phrase_search", q132, q132Sql),
+    QueryDef("q134_bm25_search", q134, q134Sql),
+    QueryDef("q135_zone_map_scan", q135, q135Sql),
+    QueryDef("q138_hll_sketch_store", q138, q138Sql, dense = true),
+    QueryDef("q140_incremental_rollup", q140, q140Sql),
+    QueryDef("q143_table_stats", q143, q143Sql),
+    QueryDef("q146_orc_roundtrip", q146, q146Sql, dense = true),
+    QueryDef("q154_scd2_history", q154, q154Sql, dense = true),
+    QueryDef("q156_pointintime_join", q156, q156Sql),
+    QueryDef("q158_data_expectations", q158, q158Sql),
+    QueryDef("q164_trigram_search", q164, q164Sql),
+    QueryDef("q170_chunk_retrieval", q170, q170Sql),
+    QueryDef("q171_index_delete", q171, q171Sql),
+    QueryDef("q172_hybrid_retrieval", q172, q172Sql),
+    QueryDef("q173_index_compaction", q173, q173Sql),
+    QueryDef("q174_retrieval_eval", q174, q174Sql),
+    QueryDef("q167_hll_overlap", q167, q167Sql, dense = true),
+    QueryDef("q192_xml_roundtrip", q192, q192Sql),
+    QueryDef("q190_hist_quantiles", q190, q190Sql),
+    QueryDef("q203_pq_index_drift", q203, driftVerdictSql),
+    QueryDef("q204_diff_index_maintenance", q204, q204Sql),
+    QueryDef("q206_diff_ivf_maintenance", q206, q206Sql),
+    QueryDef("q211_ivf_compaction", q211, q211Sql),
+    QueryDef("q213_full_upsert_maintenance", q213, q213Sql),
+    QueryDef("q251_sql_merge_cdc", q251, q251Sql, dense = true),
+    QueryDef("q252_hybrid_stored_rrf", q252, q252Sql),
+    QueryDef("q256_hybrid_batch_rrf", q256, q256Sql))
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.QueryDef
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1036,95 +1037,49 @@ object Relational {
 
   // ---- registry -----------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_pricing_summary" -> (q01 _),
-    "q02_filter_pushdown" -> (q02 _),
-    "q03_agg_filter" -> (q03 _),
-    "q04_full_outer_join" -> (q04 _),
-    "q05_interval_join" -> (q05 _),
-    "q06_window_distribution" -> (q06 _),
-    "q07_regexp_fns" -> (q07 _),
-    "q08_fuzzy_join" -> (q08 _),
-    "q09_histogram" -> (q09 _),
-    "q16_unpivot" -> (q16 _),
-    "q18_bitwise_agg" -> (q18 _),
-    "q10_join_agg" -> (q10 _),
-    "q11_join_multiway" -> (q11 _),
-    "q12_semi_join" -> (q12 _),
-    "q13_anti_join" -> (q13 _),
-    "q14_range_join" -> (q14 _),
-    "q15_sql_subquery" -> (q15 _),
-    "q141_recursive_cte" -> (q141 _),
-    "q150_bloom_join" -> (q150 _),
-    "q17_map_fns" -> (q17 _),
-    "q19_array_fns" -> (q19 _),
-    "q20_distinct_agg" -> (q20 _),
-    "q21_hll_distinct" -> (q21 _),
-    "q22_rollup" -> (q22 _),
-    "q23_cube" -> (q23 _),
-    "q24_grouping_sets" -> (q24 _),
-    "q25_pivot" -> (q25 _),
-    "q26_stats_agg" -> (q26 _),
-    "q27_posexplode" -> (q27 _),
-    "q28_string_agg" -> (q28 _),
-    "q29_topk_per_group" -> (q29 _),
-    "q30_window_rank" -> (q30 _),
-    "q31_window_running" -> (q31 _),
-    "q32_window_lag_lead" -> (q32 _),
-    "q33_intersect_all" -> (q33 _),
-    "q34_except_all" -> (q34 _),
-    "q35_topk" -> (q35 _),
-    "q36_intersect" -> (q36 _),
-    "q37_except" -> (q37 _),
-    "q38_union_agg" -> (q38 _),
-    "q40_string_fns" -> (q40 _),
-    "q41_date_fns" -> (q41 _),
-    "q42_math_fns" -> (q42 _),
-    "q43_conditional_fns" -> (q43 _))
-
-  val oracle: Map[String, String] = Map(
-    "q01_pricing_summary" -> q01Sql,
-    "q02_filter_pushdown" -> q02Sql,
-    "q03_agg_filter" -> q03Sql,
-    "q04_full_outer_join" -> q04Sql,
-    "q05_interval_join" -> q05Sql,
-    "q06_window_distribution" -> q06Sql,
-    "q07_regexp_fns" -> q07Sql,
-    "q08_fuzzy_join" -> q08Sql,
-    "q09_histogram" -> q09Sql,
-    "q16_unpivot" -> q16Sql,
-    "q18_bitwise_agg" -> q18Sql,
-    "q10_join_agg" -> q10Sql,
-    "q11_join_multiway" -> q11Sql,
-    "q12_semi_join" -> q12Sql,
-    "q13_anti_join" -> q13Sql,
-    "q14_range_join" -> q14Sql,
-    "q15_sql_subquery" -> q15Sql,
-    "q141_recursive_cte" -> q141Sql,
-    "q150_bloom_join" -> q150Sql,
-    "q17_map_fns" -> q17Sql,
-    "q19_array_fns" -> q19Sql,
-    "q20_distinct_agg" -> q20Sql,
-    "q21_hll_distinct" -> q21Sql,
-    "q22_rollup" -> q22Sql,
-    "q23_cube" -> q23Sql,
-    "q24_grouping_sets" -> q24Sql,
-    "q25_pivot" -> q25Sql,
-    "q26_stats_agg" -> q26Sql,
-    "q27_posexplode" -> q27Sql,
-    "q28_string_agg" -> q28Sql,
-    "q29_topk_per_group" -> q29Sql,
-    "q30_window_rank" -> q30Sql,
-    "q31_window_running" -> q31Sql,
-    "q32_window_lag_lead" -> q32Sql,
-    "q33_intersect_all" -> q33Sql,
-    "q34_except_all" -> q34Sql,
-    "q35_topk" -> q35Sql,
-    "q36_intersect" -> q36Sql,
-    "q37_except" -> q37Sql,
-    "q38_union_agg" -> q38Sql,
-    "q40_string_fns" -> q40Sql,
-    "q41_date_fns" -> q41Sql,
-    "q42_math_fns" -> q42Sql,
-    "q43_conditional_fns" -> q43Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q01_pricing_summary", q01, q01Sql),
+    QueryDef("q02_filter_pushdown", q02, q02Sql),
+    QueryDef("q03_agg_filter", q03, q03Sql),
+    QueryDef("q04_full_outer_join", q04, q04Sql),
+    QueryDef("q05_interval_join", q05, q05Sql),
+    QueryDef("q06_window_distribution", q06, q06Sql),
+    QueryDef("q07_regexp_fns", q07, q07Sql),
+    QueryDef("q08_fuzzy_join", q08, q08Sql),
+    QueryDef("q09_histogram", q09, q09Sql),
+    QueryDef("q16_unpivot", q16, q16Sql),
+    QueryDef("q18_bitwise_agg", q18, q18Sql),
+    QueryDef("q10_join_agg", q10, q10Sql),
+    QueryDef("q11_join_multiway", q11, q11Sql, dense = true),
+    QueryDef("q12_semi_join", q12, q12Sql),
+    QueryDef("q13_anti_join", q13, q13Sql),
+    QueryDef("q14_range_join", q14, q14Sql),
+    QueryDef("q15_sql_subquery", q15, q15Sql, dense = true),
+    QueryDef("q141_recursive_cte", q141, q141Sql),
+    QueryDef("q150_bloom_join", q150, q150Sql),
+    QueryDef("q17_map_fns", q17, q17Sql),
+    QueryDef("q19_array_fns", q19, q19Sql),
+    QueryDef("q20_distinct_agg", q20, q20Sql),
+    QueryDef("q21_hll_distinct", q21, q21Sql),
+    QueryDef("q22_rollup", q22, q22Sql),
+    QueryDef("q23_cube", q23, q23Sql),
+    QueryDef("q24_grouping_sets", q24, q24Sql),
+    QueryDef("q25_pivot", q25, q25Sql),
+    QueryDef("q26_stats_agg", q26, q26Sql),
+    QueryDef("q27_posexplode", q27, q27Sql),
+    QueryDef("q28_string_agg", q28, q28Sql),
+    QueryDef("q29_topk_per_group", q29, q29Sql),
+    QueryDef("q30_window_rank", q30, q30Sql),
+    QueryDef("q31_window_running", q31, q31Sql),
+    QueryDef("q32_window_lag_lead", q32, q32Sql),
+    QueryDef("q33_intersect_all", q33, q33Sql),
+    QueryDef("q34_except_all", q34, q34Sql),
+    QueryDef("q35_topk", q35, q35Sql),
+    QueryDef("q36_intersect", q36, q36Sql),
+    QueryDef("q37_except", q37, q37Sql),
+    QueryDef("q38_union_agg", q38, q38Sql, dense = true),
+    QueryDef("q40_string_fns", q40, q40Sql),
+    QueryDef("q41_date_fns", q41, q41Sql),
+    QueryDef("q42_math_fns", q42, q42Sql, dense = true),
+    QueryDef("q43_conditional_fns", q43, q43Sql))
 }

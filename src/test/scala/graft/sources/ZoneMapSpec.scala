@@ -833,7 +833,7 @@ class ZoneMapSpec extends SparkTestBase {
   }
 
   test("q238 plans a file-pruned top-k on the clustered table") {
-    val df = graft.queries.JsonQueries.queries("q238_topk_pruned")(
+    val df = graft.SparkEntry.queries("q238_topk_pruned")(
       spark, "/root/testdata/sf0.001")
     val rows = df.collect()
     assert(rows.length == 20)
@@ -844,7 +844,7 @@ class ZoneMapSpec extends SparkTestBase {
   }
 
   test("q240 plans a FILTERED file-pruned top-k on real data") {
-    val df = graft.queries.JsonQueries.queries("q240_filtered_topk")(
+    val df = graft.SparkEntry.queries("q240_filtered_topk")(
       spark, "/root/testdata/sf0.001")
     val rows = df.collect()
     assert(rows.length == 15)
@@ -855,7 +855,7 @@ class ZoneMapSpec extends SparkTestBase {
   }
 
   test("q235 plans both sides as metadata-answered aggregates on real data") {
-    val df = graft.queries.JsonQueries.queries("q235_meta_stats")(
+    val df = graft.SparkEntry.queries("q235_meta_stats")(
       spark, "/root/testdata/sf0.001")
     val row = df.collect()(0)
     assert(row.getLong(0) > 0L && !row.isNullAt(7))
@@ -923,7 +923,7 @@ class ZoneMapSpec extends SparkTestBase {
   }
 
   test("q236 plans the whole grouped aggregate as metadata on real data") {
-    val df = graft.queries.JsonQueries.queries("q236_meta_groupby")(
+    val df = graft.SparkEntry.queries("q236_meta_groupby")(
       spark, "/root/testdata/sf0.001")
     val rows = df.collect()
     assert(rows.length > 1 && rows.forall(_.getLong(1) > 0L))
@@ -933,7 +933,7 @@ class ZoneMapSpec extends SparkTestBase {
   }
 
   test("q229 plans as a metadata-answered filtered count on real data") {
-    val df = graft.queries.JsonQueries.queries("q229_filtered_count")(
+    val df = graft.SparkEntry.queries("q229_filtered_count")(
       spark, "/root/testdata/sf0.001")
     assert(df.collect()(0).getLong(0) > 0L)
     assert(df.queryExecution.executedPlan.toString.contains("PushedAggregation"),
