@@ -38,11 +38,9 @@ object Fanout {
     * physical tree and asks the scan node for its split count — plan
     * cost only, no codegen compile, no job. Frames without a v1 file
     * scan leaf (DSv2 sources, pure in-memory frames) return unchanged:
-    * this helper is for the parquet-table entry points. */
+    * this helper is for the parquet-table entry points. Batch frames
+    * only: a streaming frame fails the plan probe loudly. */
   def apply(df: DataFrame): DataFrame = {
-    // streaming frames cannot be probed (no batch physical plan) and
-    // micro-batches are already split by the source — no-op
-    if (df.isStreaming) return df
     // Memory-bounded target (r18 — VERDICT r17 #1a, guide §5): the
     // stages this helper fans out are explode + partial hash
     // aggregation, whose per-task state must fit its share of the

@@ -62,8 +62,9 @@ object InvertedIndex {
       .withColumn("bucket", bucketOf(col("term"), nBuckets))
       .withColumn("seg", lit(seg))
 
-  /** Write one segment's postings and its meta row in ONE corpus pass
-    * (r17 optimization, guide §1.2): the meta scalars are derivable
+  /** Write one segment's postings and its meta row under `root` (the
+    * index, or the compaction's staging) in ONE corpus pass (r17
+    * optimization, guide §1.2): the meta scalars are derivable
     * from the postings stream itself — Σtf over a doc's groups is the
     * doc's token count (so Σtf overall == Σdl == the old
     * size(split(text)) sum), and exactly one (term, doc) group per doc
@@ -79,7 +80,7 @@ object InvertedIndex {
     * still sums both copies (skewing the BM25 average doc length).
     * Every in-repo caller feeds a keyed corpus where doc_id is the
     * primary key; external callers must dedup first. */
-  private def writeSegment(postings: DataFrame, indexDir: String,
+  private def writeSegment(postings: DataFrame, root: String,
                            nBuckets: Int, seg: Int): Unit = {
     val spark = postings.sparkSession
     val obs = org.apache.spark.sql.Observation()
@@ -93,7 +94,7 @@ object InvertedIndex {
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("seg", "bucket")
-      .parquet(s"$indexDir/postings")
+      .parquet(s"$root/postings")
     val row = obs.get
     import spark.implicits._
     Seq((row("n_docs").asInstanceOf[Long],
@@ -102,7 +103,7 @@ object InvertedIndex {
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("seg")
-      .parquet(s"$indexDir/meta")
+      .parquet(s"$root/meta")
   }
 
   /** Default driver bound on a retrieval batch's distinct
@@ -111,10 +112,10 @@ object InvertedIndex {
     * mis-pointed at the serving API and fail with a named error. */
   val DefaultMaxBatchRows = 100000
 
-  /** Marker file names: touched before a multi-step wipe/swap, removed
+  /** Marker file names: put up before a multi-step wipe/swap, removed
     * after it completes — readers fail fast in the window and the
-    * crashed operation converges on a rerun (the in-flight guard of
-    * [[StoreTxn.Guard]]; a build IS the recovery rerun). */
+    * crashed operation converges on a rerun (a build IS the recovery
+    * rerun; compactSegments rolls its swap forward). */
   private val RebuildMarker = "_rebuild_pending"
   private val CompactMarker = "_compact_pending"
 
@@ -127,6 +128,21 @@ object InvertedIndex {
     rebuildGuard(indexDir, "inverted index", "build")
   private def trigramGuard(indexDir: String) =
     rebuildGuard(indexDir, "trigram index", "buildTrigramIndex")
+
+  /** The compaction's swap: staged segment 0 over postings and meta. */
+  private def compactSwap(indexDir: String): StoreTxn.Swap = {
+    val staging = s"$indexDir/_staging"
+    StoreTxn.Swap(s"$indexDir/$CompactMarker", staging,
+      targets = Seq(
+        StoreTxn.Target(s"$staging/postings", s"$indexDir/postings",
+          Seq("seg", "bucket"), Some(postingsSchema)),
+        StoreTxn.Target(s"$staging/meta", s"$indexDir/meta", Seq("seg"))),
+      drop = Seq(s"$indexDir/tombstones"),
+      crashed = s"inverted index $indexDir: a compaction crashed " +
+        s"mid-swap ($CompactMarker) — rerun compactSegments() to roll forward",
+      lost = s"inverted index $indexDir: compaction marker " +
+        s"($CompactMarker) is up without its staged copy — rerun build()")
+  }
 
   /** Build the index as segment 0: one corpus scan, one (term, doc)
     * aggregation, one (seg, bucket)-partitioned write, plus a per-
@@ -148,8 +164,9 @@ object InvertedIndex {
       // data — left alive, the post-rebuild "rerun compactSegments"
       // recovery would swap that stale copy over the fresh index
       // (review r12); the rebuild supersedes them wholesale
-      Seq(CompactMarker, "_staging", "postings", "meta", "tombstones")
-        .foreach(d => Fs.delete(spark, s"$indexDir/$d"))
+      val c = compactSwap(indexDir)
+      (Seq(c.marker, c.staging) ++ c.drop ++ c.targets.map(_.live))
+        .foreach(Fs.delete(spark, _))
       writeSegment(postingsOf(docs, nBuckets, 0), indexDir, nBuckets, 0)
     }
   }
@@ -178,10 +195,7 @@ object InvertedIndex {
     * postings silently would be worse than the loud error. */
   private def meta(spark: SparkSession, indexDir: String): (Long, Long, Int) = {
     postingsGuard(indexDir).failIfPending(spark)
-    if (Fs.exists(spark, s"$indexDir/$CompactMarker"))
-      throw new IllegalStateException(
-        s"inverted index $indexDir: a compaction crashed mid-swap " +
-          "(_compact_pending) — rerun compactSegments() to roll forward")
+    compactSwap(indexDir).failIfPending(spark)
     val rows = spark.read.parquet(s"$indexDir/meta").collect()
     (rows.map(_.getAs[Long]("n_docs")).sum,
       rows.map(_.getAs[Long]("n_tokens")).sum,
@@ -337,85 +351,20 @@ object InvertedIndex {
     * the overwrite of the postings dir reads from that DURABLE copy —
     * never from the very files being replaced, and never from
     * executor-memory lineage that an executor loss would truncate.
+    * A crashed swap ([[StoreTxn.Swap]]) rolls forward FROM STAGING.
     * Cost ∝ live index size — the full rewrite IS the point of a
     * merge; deletes stay O(batch) until one is scheduled. */
   def compactSegments(spark: SparkSession, indexDir: String): Unit = {
-    val staging = s"$indexDir/_staging"
-    val marker = s"$indexDir/$CompactMarker"
-    // ROLL-FORWARD (review r12): the marker is touched only after the
-    // staged copy is complete, so a crashed swap leaves the staged
-    // dirs as the AUTHORITATIVE live set — a rerun must redo the swap
-    // FROM STAGING, never re-stage from the (possibly emptied) live
-    // dirs: reading a half-swapped postings dir as "live" and staging
-    // it would overwrite the only surviving copy with a partial one.
-    if (Fs.exists(spark, marker)) {
-      if (Fs.exists(spark, s"$staging/postings"))
-        swapFromStaging(spark, indexDir, staging, marker)
-      else {
-        // crash inside the post-swap cleanup: the swap completed,
-        // only the tombstone/marker removal is left
-        Fs.delete(spark, s"$indexDir/tombstones")
-        Fs.delete(spark, marker)
-      }
-      return
+    val swap = compactSwap(indexDir)
+    swap.run(spark, "compactSegments") {
+      val nBuckets = meta(spark, indexDir)._3
+      val p = spark.read.schema(postingsSchema).parquet(s"$indexDir/postings")
+      val live = tombstones(spark, indexDir)
+        .fold(p)(t => p.join(broadcast(t), Seq("doc_id"), "left_anti"))
+      // the staged segment's meta row derives from the same write
+      writeSegment(live.withColumn("seg", lit(0)), swap.staging, nBuckets, 0)
+      swap.commit(spark, "compactSegments", "")
     }
-    val nBuckets = meta(spark, indexDir)._3
-    val live = {
-      val p = spark.read.schema(postingsSchema)
-        .parquet(s"$indexDir/postings")
-        .select(col("term"), col("doc_id"), col("dl"), col("tf"),
-          col("positions"), col("bucket"))
-      tombstones(spark, indexDir) match {
-        case Some(t) => p.join(broadcast(t), Seq("doc_id"), "left_anti")
-        case None => p
-      }
-    }
-    live.withColumn("seg", lit(0))
-      .repartition(col("bucket"))
-      .sortWithinPartitions(col("term"), col("doc_id"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "static")
-      .partitionBy("seg", "bucket")
-      .parquet(s"$staging/postings")
-    val stagedPostings = spark.read.schema(postingsSchema)
-      .parquet(s"$staging/postings")
-    // meta from the staged live rows: dl is constant per doc, so the
-    // token total is the sum of one dl per live doc
-    val perDoc = stagedPostings.groupBy(col("doc_id"))
-      .agg(max(col("dl")).as("dl"))
-    perDoc.agg(count(lit(1)).as("n_docs"),
-        coalesce(sum(col("dl")), lit(0L)).as("n_tokens"),
-        lit(nBuckets.toLong).as("n_buckets"), lit(0).as("seg"))
-      .write.mode("overwrite").parquet(s"$staging/meta")
-    Fs.touch(spark, marker)
-    swapFromStaging(spark, indexDir, staging, marker)
-  }
-
-  /** The compaction swap, runnable from a fresh JVM after a crash:
-    * overwrite the live dirs FROM the durable staged copies (never
-    * from the files being replaced), then clear tombstones, staging,
-    * and the marker — in that order, so every crash point re-enters
-    * one of [[compactSegments]]'s roll-forward branches. Overwrites
-    * pin STATIC partition-overwrite semantics: under a session-wide
-    * `dynamic` default the swap would replace only the partitions
-    * the live set produces, leaving stale segments (and with them
-    * every tombstoned doc) alive. */
-  private def swapFromStaging(spark: SparkSession, indexDir: String,
-                              staging: String, marker: String): Unit = {
-    spark.read.schema(postingsSchema).parquet(s"$staging/postings")
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "static")
-      .partitionBy("seg", "bucket")
-      .parquet(s"$indexDir/postings")
-    spark.read.parquet(s"$staging/meta")
-      .withColumn("seg", lit(0))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "static")
-      .partitionBy("seg")
-      .parquet(s"$indexDir/meta")
-    Fs.delete(spark, s"$indexDir/tombstones")
-    Fs.delete(spark, staging)
-    Fs.delete(spark, marker)
   }
 
   /** Character-trigram substring index — the grep / pg_trgm-style

@@ -396,13 +396,31 @@ object Sharding {
   /** Initialize the incrementally-maintained per-source rollup next to
     * a [[initDocStore]] corpus: (source, n_docs, total_chars), the
     * materialized view [[maintainStats]] keeps current without ever
-    * rescanning the corpus. One aggregation, one tiny write. */
-  def initStatsStore(docs: DataFrame, statsDir: String): Unit =
+    * rescanning the corpus. One aggregation, one tiny write; retires the
+    * old rollup's publish state (its ledger would skip the next batch). */
+  def initStatsStore(docs: DataFrame, statsDir: String): Unit = {
+    val swap = statsSwap(statsDir)
+    (Seq(swap.marker, swap.staging) ++ swap.ledger)
+      .foreach(Fs.delete(docs.sparkSession, _))
     docs.groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("total_chars"))
       .coalesce(1)
       .write.mode("overwrite").parquet(statsDir)
+  }
+
+  /** The rollup publish: marker and ledger carry the batch signature,
+    * so a crashed publish rolls forward (its overwrite wipes statsDir
+    * first) and a retry of the batch is skipped. Staging is a SIBLING:
+    * the overwrite would delete an in-tree one. */
+  private def statsSwap(statsDir: String): StoreTxn.Swap = {
+    val staging = s"${statsDir}__staging"
+    StoreTxn.Swap(s"${statsDir}__pending", staging,
+      targets = Seq(StoreTxn.Target(s"$staging/updated", statsDir)),
+      ledger = Some(s"${statsDir}__last"),
+      lost = s"stats store $statsDir: publish marker present without " +
+        "its staged rollup — restore statsDir from backup")
+  }
 
   /** Incremental materialized-view maintenance — apply a CDC batch to
     * the per-source rollup WITHOUT rescanning the corpus: the delta is
@@ -421,34 +439,11 @@ object Sharding {
   def maintainStats(spark: org.apache.spark.sql.SparkSession,
                     storeDir: String, statsDir: String,
                     changes: DataFrame, nBuckets: Int): DataFrame = {
-    // SIBLING of statsDir, not inside it: the final write fully
-    // overwrites statsDir, which would delete an in-tree staging dir
-    // out from under the very read that feeds the write
-    val staging = s"${statsDir}__staging"
-    val marker = s"${statsDir}__pending"
-    val ledger = s"${statsDir}__last"
-    // roll a crashed publish FORWARD before reading the store: the
-    // staged updated table is the authoritative rollup while the
-    // marker is up (the overwrite below wipes statsDir first, so a
-    // crash there loses the rollup with apply-once semantics that
-    // forbid recomputing it — review r12). The marker CARRIES the
-    // batch signature; completing the publish also writes it to the
-    // ledger, so the caller's natural retry of the same batch is
-    // detected below instead of double-applying the deltas.
-    Fs.readUtf8IfExists(spark, marker).foreach { pendingSig =>
-      require(Fs.exists(spark, s"$staging/updated"),
-        s"stats store $statsDir: publish marker present without its " +
-          "staged rollup — restore statsDir from backup")
-      spark.read.parquet(s"$staging/updated")
-        .coalesce(1).write.mode("overwrite").parquet(statsDir)
-      Fs.writeUtf8Atomic(spark, ledger, pendingSig)
-      Fs.delete(spark, marker)
-      Fs.delete(spark, staging)
-    }
-    try {
+    val swap = statsSwap(statsDir)
+    swap.run(spark, "maintainStats") {
       val ch = StoreTxn.stage(
         changes.withColumn("bucket", shardOf(col("doc_id"), nBuckets)),
-        s"$staging/changes")
+        s"${swap.staging}/changes")
       // deterministic batch signature (count + decimal hash-sum): the
       // SERIAL retry of a batch whose publish already completed (via
       // the roll-forward above or a fully-committed first attempt)
@@ -484,65 +479,48 @@ object Sharding {
       val sig = s"v2:${sigRow.getLong(0)}:${sigRow.get(1)}"
       val untaggedContentSig = s"${sigRow.getLong(0)}:${sigRow.get(1)}"
       val legacyKeysSig = s"${sigRow.getLong(0)}:${sigRow.get(2)}"
-      val recorded = Fs.readUtf8IfExists(spark, ledger)
-      if (recorded.contains(sig) || recorded.contains(untaggedContentSig) ||
-        recorded.contains(legacyKeysSig)) {
-        Fs.delete(spark, staging)
-        return spark.read.parquet(statsDir)
-      }
-      // the same conflicting-batch gate mergeCdc enforces, HERE too:
-      // maintainStats runs FIRST by contract, so a batch mergeCdc
-      // would reject must not have already corrupted the apply-once
-      // rollup (a duplicate upsert would +2 the plus leg while the
-      // left_semi minus leg dedups — permanently off by one)
-      require(ch.groupBy(col("doc_id")).count()
-        .where(col("count") > 1).isEmpty,
-        "maintainStats batch carries conflicting rows for the same " +
-          "doc_id; resolve to one change per id upstream")
-      val touched = ch.select(col("bucket")).distinct()
-        .collect().map(_.getInt(0))
-      val olds =
-        if (touched.isEmpty) ch.where(lit(false))
-          .select(col("doc_id"), col("source"), col("n_chars"))
-        else spark.read.parquet(storeDir)
-          .where(col("bucket").isin(touched.map(Int.box).toSeq: _*))
-          .join(ch.select(col("doc_id")), Seq("doc_id"), "left_semi")
-          .select(col("doc_id"), col("source"), col("n_chars"))
-      val minus = olds.select(col("source"), lit(-1L).as("d_docs"),
-        (-col("n_chars")).as("d_chars"))
-      val plus = ch.where(col("op") === "upsert")
-        .select(col("source"), lit(1L).as("d_docs"),
-          col("n_chars").as("d_chars"))
-      val delta = plus.unionByName(minus)
-        .groupBy(col("source"))
-        .agg(sum(col("d_docs")).as("d_docs"), sum(col("d_chars")).as("d_chars"))
-      val updated = StoreTxn.stage(
+      val recorded = swap.ledger.flatMap(Fs.readUtf8IfExists(spark, _))
+      if (!Seq(sig, untaggedContentSig, legacyKeysSig).exists(recorded.contains)) {
+        // the same conflicting-batch gate mergeCdc enforces, HERE too:
+        // maintainStats runs FIRST by contract, so a batch mergeCdc
+        // would reject must not have already corrupted the apply-once
+        // rollup (a duplicate upsert would +2 the plus leg while the
+        // left_semi minus leg dedups — permanently off by one)
+        require(ch.groupBy(col("doc_id")).count()
+          .where(col("count") > 1).isEmpty,
+          "maintainStats batch carries conflicting rows for the same " +
+            "doc_id; resolve to one change per id upstream")
+        val touched = ch.select(col("bucket")).distinct()
+          .collect().map(_.getInt(0))
+        val olds =
+          if (touched.isEmpty) ch.where(lit(false))
+            .select(col("doc_id"), col("source"), col("n_chars"))
+          else spark.read.parquet(storeDir)
+            .where(col("bucket").isin(touched.map(Int.box).toSeq: _*))
+            .join(ch.select(col("doc_id")), Seq("doc_id"), "left_semi")
+            .select(col("doc_id"), col("source"), col("n_chars"))
+        val minus = olds.select(col("source"), lit(-1L).as("d_docs"),
+          (-col("n_chars")).as("d_chars"))
+        val plus = ch.where(col("op") === "upsert")
+          .select(col("source"), lit(1L).as("d_docs"),
+            col("n_chars").as("d_chars"))
+        val delta = plus.unionByName(minus)
+          .groupBy(col("source"))
+          .agg(sum(col("d_docs")).as("d_docs"), sum(col("d_chars")).as("d_chars"))
+        // one staged file, so the swap's overwrite writes one file
         spark.read.parquet(statsDir).join(delta, Seq("source"), "full_outer")
           .select(col("source"),
             (coalesce(col("n_docs"), lit(0L)) +
               coalesce(col("d_docs"), lit(0L))).as("n_docs"),
             (coalesce(col("total_chars"), lit(0L)) +
               coalesce(col("d_chars"), lit(0L))).as("total_chars"))
-          .where(col("n_docs") > 0),
-        s"$staging/updated")
-      // publish under the marker: staged rollup durable → marker(sig)
-      // → overwrite → ledger(sig) → marker down → staging down. A
-      // crash at any point re-enters the roll-forward above, which
-      // finishes the publish AND the ledger write; the marker is only
-      // ever up while the staged copy exists
-      Fs.writeUtf8Atomic(spark, marker, sig)
-      updated.coalesce(1).write.mode("overwrite").parquet(statsDir)
-      Fs.writeUtf8Atomic(spark, ledger, sig)
-      Fs.delete(spark, marker)
-      Fs.delete(spark, staging)
-      spark.read.parquet(statsDir)
-    } catch {
-      case e: Throwable =>
-        // only pre-marker failures may clear staging — once the
-        // marker is up, the staged rollup is the recovery source
-        if (!Fs.exists(spark, marker)) Fs.delete(spark, staging)
-        throw e
+          .where(col("n_docs") > 0)
+          .coalesce(1)
+          .write.mode("overwrite").parquet(swap.targets.head.staged)
+        swap.commit(spark, "maintainStats", sig)
+      }
     }
+    spark.read.parquet(statsDir)
   }
 
   /** Morton bit-spread of a 16-bit value (zeros interleaved between

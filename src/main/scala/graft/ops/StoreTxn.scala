@@ -4,7 +4,7 @@ import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 
 /** The ONE copy of the crash-safety marker protocols the parquet
   * stores in `graft.ops` share, and the owner of their marker format.
-  * Two shapes:
+  * Three shapes:
   *
   *   1. IN-FLIGHT GUARD ([[Guard]]): touch an empty marker file, run
   *      the destructive writes, delete the marker. Readers fail fast
@@ -21,10 +21,20 @@ import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
   *      crash between the two empties a partition; while the marker
   *      is up the staged copy is the redo log every entry point rolls
   *      forward from ([[rollForward]]) — review r12.
+  *   3. STAGED SWAP ([[Swap]]): the same order for a commit that
+  *      replaces whole targets (a segment merge, a rollup publish): a
+  *      text marker with the store's payload, a static overwrite of
+  *      each target, the store's after-step, then the retirements.
   *
   * Every step runs under the job description `"<op>:<step>"`
   * ([[step]]), so each Spark job a store operation starts names the
-  * operation and its lifecycle step. */
+  * operation and its lifecycle step.
+  *
+  * graftjson's `_compaction/commit` with its writer lease and
+  * `EventStreams.ingestEpoch`'s hidden `_ingest_tmp` staging stay in
+  * `graft.sources`: they are file-RENAME commits that readers apply
+  * while listing (hiding the originals a commit names, skipping
+  * hidden dirs), not parquet overwrites a reader must fail fast on. */
 private[graft] object StoreTxn {
 
   /** Run `body` with the job description `"$op:$name"`, restoring the
@@ -187,5 +197,74 @@ private[graft] object StoreTxn {
     for (p <- emptied) Fs.delete(spark, s"${redo.target}/${redo.partCol}=$p")
     Fs.delete(spark, redo.markerDir)
     Fs.delete(spark, redo.staging)
+  }
+
+  // ---- 3. staged swap ---------------------------------------------
+
+  /** One [[Swap]] target: `live` is overwritten from `staged`, read with
+    * `schema` (DDL) when given, so a fileless staged dir reads as empty. */
+  final case class Target(staged: String, live: String,
+                          partitionBy: Seq[String] = Nil,
+                          schema: Option[String] = None)
+
+  /** One store's swap layout: the UTF-8 `marker`, the `staging` dir,
+    * the targets, and the after-step (delete `drop`, then publish the
+    * payload to `ledger`). Readers fail with `crashed` while the marker
+    * is up; a marker whose staged copy is gone fails with `lost`. */
+  final case class Swap(marker: String, staging: String,
+                        targets: Seq[Target],
+                        drop: Seq[String] = Nil,
+                        ledger: Option[String] = None,
+                        crashed: String = "", lost: String) {
+
+    def failIfPending(spark: SparkSession): Unit =
+      if (Fs.exists(spark, marker)) throw new IllegalStateException(crashed)
+
+    /** Roll any crashed commit forward, then run `body` (staging, then
+      * [[commit]]) as step `stage`. Staging left without a marker up
+      * is cleared; under a marker it is the redo log. */
+    def run[T](spark: SparkSession, op: String)(body: => T): T = {
+      rollForward(spark, op)
+      Fs.delete(spark, staging) // debris of a crash before its marker
+      try step(spark, op, "stage")(body)
+      finally if (!Fs.exists(spark, marker)) Fs.delete(spark, staging)
+    }
+
+    /** Commit the staged copies as step `commit`: marker(`payload`),
+      * overwrites, after-step, marker, then staging retirement. */
+    def commit(spark: SparkSession, op: String, payload: String): Unit =
+      step(spark, op, "commit") {
+        Fs.writeUtf8Atomic(spark, marker, payload)
+        finish(spark, payload)
+      }
+
+    /** Roll a crashed commit forward (no-op without a marker) as step
+      * `rollForward`, finishing it from the staged copies; without
+      * them there is nothing to redo a half-overwritten target from. */
+    private def rollForward(spark: SparkSession, op: String): Unit =
+      Fs.readUtf8IfExists(spark, marker).foreach { payload =>
+        step(spark, op, "rollForward") {
+          if (!targets.forall(t => Fs.exists(spark, t.staged)))
+            throw new IllegalStateException(lost)
+          finish(spark, payload)
+        }
+      }
+
+    /** STATIC overwrites: under a session-wide `dynamic` default the
+      * partitions missing from the staged copy would stay alive. */
+    private def finish(spark: SparkSession, payload: String): Unit = {
+      for (t <- targets) {
+        val r = spark.read
+        t.schema.fold(r)(r.schema).parquet(t.staged)
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "static")
+          .partitionBy(t.partitionBy: _*)
+          .parquet(t.live)
+      }
+      drop.foreach(Fs.delete(spark, _))
+      ledger.foreach(Fs.writeUtf8Atomic(spark, _, payload))
+      Fs.delete(spark, marker)
+      Fs.delete(spark, staging)
+    }
   }
 }

@@ -240,16 +240,11 @@ object TextOps {
   private def coefficients(n: Int): Seq[(Long, Long)] =
     graft.functions.UniversalHash.coefficients(n).toSeq
 
-  /** MinHash signature of a word-set column: for each of `n` universal
-    * hashes h_i(x) = (a_i·x + b_i) mod p, the min over the set's
-    * base hashes. Pure expressions (xxhash64 + transform/array_min),
-    * codegen'd, embarrassingly parallel. Operands stay < 2^62 so ANSI
-    * overflow checking never trips. */
-  def minhashSignature(words: Column, n: Int): Column =
-    minhashSignatureFromHashes(transform(words, w => xxhash64(w)), n)
-
-  /** Signature from pre-hashed shingles (shares the base hash pass
-    * with the verification stage). Uses the native one-pass
+  /** MinHash signature of a pre-hashed shingle set (shares the base
+    * hash pass with the verification stage): for each of `n` universal
+    * hashes h_i(x) = (a_i·x + b_i) mod p, the min over the set's base
+    * hashes. Operands stay < 2^62 so ANSI overflow checking never
+    * trips. Uses the native one-pass
     * [[graft.functions.MinhashSignature]] when [[graft.GraftExtensions]]
     * is installed (the composed form below traverses the array once
     * per lane through interpreted lambdas); values are identical.

@@ -31,10 +31,39 @@ object TornCommitProtocol {
   @volatile var tear: Option[(String, String)] = None
 }
 
+/** Raw local FS that crashes ONE chosen step of a store commit: armed
+  * with a [[CrashFs.Point]], the first recursive delete of its path (a
+  * store's `Fs.delete`, a static overwrite's wipe) or rename onto it (an
+  * atomic control-file publish) throws — after performing the
+  * operation when `done`, before it otherwise. */
+class CrashFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def delete(p: Path, recursive: Boolean): Boolean =
+    if (!recursive) super.delete(p, recursive)
+    else CrashFs.at("delete", p)(super.delete(p, recursive))
+  override def rename(src: Path, dst: Path): Boolean =
+    CrashFs.at("rename", dst)(super.rename(src, dst))
+}
+
+object CrashFs {
+  final case class Point(op: String, path: String, done: Boolean)
+  @volatile var armed: Option[Point] = None
+
+  def at(op: String, p: Path)(run: => Boolean): Boolean = armed match {
+    case Some(pt) if pt.op == op &&
+        p.toUri.getPath == new Path(pt.path).toUri.getPath =>
+      armed = None
+      if (pt.done) run
+      throw new java.io.IOException(s"injected crash at $op $p")
+    case _ => run
+  }
+}
+
 /** [[StoreTxn]]: the in-flight guard's refuse / allow / reader-fail
   * paths, the staged redo's roll-forward rules, the named store jobs,
-  * and torn IVF commits (a delete that empties no cell, an append)
-  * restored from their staged redo log by the next maintenance call. */
+  * torn IVF commits (a delete that empties no cell, an append)
+  * restored from their staged redo log by the next maintenance call,
+  * and the swap ports (compactSegments, maintainStats) crashed at each
+  * step of a real commit and converged by their rerun. */
 class StoreTxnSpec extends SparkTestBase {
 
   private def vecs: Seq[(Long, Seq[Float])] = {
@@ -62,6 +91,170 @@ class StoreTxnSpec extends SparkTestBase {
       TornCommitProtocol.tear = None
       spark.conf.unset(key)
     }
+  }
+
+  /** Run `op` on [[CrashFs]] armed at `point`; the op must fail there. */
+  private def crashAt(point: CrashFs.Point)(op: => Unit): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val impl = conf.get("fs.file.impl")
+    CrashFs.armed = Some(point)
+    conf.set("fs.file.impl", classOf[CrashFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    try {
+      val e = intercept[Exception](op)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("injected crash")),
+        s"the op failed for another reason: $e")
+      assert(CrashFs.armed.isEmpty, "the crash never fired")
+    } finally {
+      CrashFs.armed = None
+      conf.set("fs.file.impl", impl)
+      conf.unset("fs.file.impl.disable.cache")
+    }
+  }
+
+  /** The crash points of one swap commit, in commit order. */
+  private val swapCrashes = Seq("after the marker write",
+    "mid-overwrite, live wiped", "after the overwrite",
+    "after the after-step", "after the marker is retired")
+  private val Retired = swapCrashes.last
+
+  /** The point at which `crash` tears a commit, given the store's
+    * marker, first target, and the after-step's path and FS op. */
+  private def swapPoint(crash: String, marker: String, live: String,
+                        after: String, afterOp: String): CrashFs.Point =
+    crash match {
+      case "after the marker write" => CrashFs.Point("rename", marker, done = true)
+      case "mid-overwrite, live wiped" => CrashFs.Point("delete", live, done = true)
+      case "after the overwrite" => CrashFs.Point(afterOp, after, done = false)
+      case "after the after-step" => CrashFs.Point(afterOp, after, done = true)
+      case Retired => CrashFs.Point("delete", marker, done = true)
+    }
+
+  private def indexDocs = spark.createDataFrame((0L until 40L).map(i =>
+      (i, s"merge w${i % 3} w${i % 5} merge w${i % 7}")))
+    .toDF("doc_id", "text")
+
+  /** An index with two segments and a tombstone batch, and its live
+    * search results before any compaction. */
+  private def tombstonedIndex(dir: String): Map[String, Map[Long, Long]] = {
+    InvertedIndex.build(indexDocs.where(col("doc_id") < 30), dir, nBuckets = 8)
+    InvertedIndex.appendSegment(indexDocs.where(col("doc_id") >= 30), dir, 1)
+    InvertedIndex.deleteDocs(spark, dir,
+      indexDocs.where(col("doc_id") % 4 === 1).select(col("doc_id")), 1)
+    searches(dir)
+  }
+  private def searches(dir: String): Map[String, Map[Long, Long]] =
+    Seq("merge", "w1", "w4").map(t => t ->
+      InvertedIndex.searchAll(spark, dir, Seq(t)).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap).toMap
+
+  for ((crash, i) <- swapCrashes.zipWithIndex) {
+    test(s"compactSegments crashed $crash converges on its rerun") {
+      val dir = graft.TempRoots.path(s"storetxn_compact_$i")
+      val marker = s"$dir/_compact_pending"
+      val want = tombstonedIndex(dir)
+      crashAt(swapPoint(crash, marker, s"$dir/postings",
+          s"$dir/tombstones", "delete")) {
+        InvertedIndex.compactSegments(spark, dir)
+      }
+      if (crash == Retired) assert(!exists(marker))
+      else {
+        assert(exists(marker) && exists(s"$dir/_staging"))
+        val e = intercept[IllegalStateException](searches(dir))
+        assert(e.getMessage.contains("compaction crashed"), e.getMessage)
+      }
+      InvertedIndex.compactSegments(spark, dir)
+      assert(searches(dir) == want)
+      assert(!exists(s"$dir/tombstones") && !exists(marker) &&
+        !exists(s"$dir/_staging"))
+      assert(spark.read.parquet(s"$dir/postings").select(col("seg"))
+        .distinct().collect().map(_.getInt(0)).toSeq == Seq(0))
+    }
+  }
+
+  test("compactSegments: a marker without its staged copy fails loudly, naming the index") {
+    val dir = graft.TempRoots.path("storetxn_compact_lost")
+    tombstonedIndex(dir)
+    crashAt(CrashFs.Point("delete", s"$dir/tombstones", done = true)) {
+      InvertedIndex.compactSegments(spark, dir)
+    }
+    Fs.delete(spark, s"$dir/_staging")
+    val e = intercept[IllegalStateException] {
+      InvertedIndex.compactSegments(spark, dir)
+    }
+    assert(e.getMessage.contains(dir) &&
+      e.getMessage.contains("without its staged copy"), e.getMessage)
+    assert(exists(s"$dir/_compact_pending"))
+  }
+
+  private def statsBase = spark.createDataFrame(Seq(
+      (0L, "aaaa", "en", "web", 4L), (1L, "bbbbbb", "en", "web", 6L),
+      (2L, "cc", "en", "book", 2L), (3L, "ddddd", "en", "book", 5L),
+      (4L, "eee", "en", "code", 3L)))
+    .toDF("doc_id", "text", "lang", "source", "n_chars")
+  private def statsBatch = spark.createDataFrame(Seq(
+      (0L, "aaaaaaaa", "en", "web", 8L, "upsert"),
+      (2L, "cc", "en", "web", 2L, "upsert"),
+      (9L, "zzzz", "en", "wiki", 4L, "upsert"),
+      (4L, null.asInstanceOf[String], "en", "code", 0L, "delete")))
+    .toDF("doc_id", "text", "lang", "source", "n_chars", "op")
+  private def rollup(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getAs[String]("source"), r.getAs[Long]("n_docs"),
+      r.getAs[Long]("total_chars"))).sortBy(_._1).toSeq
+
+  for ((crash, i) <- swapCrashes.zipWithIndex) {
+    test(s"maintainStats crashed $crash converges on its rerun and applies once") {
+      val root = graft.TempRoots.path(s"storetxn_stats_$i")
+      val (store, stats) = (s"$root/store", s"$root/stats")
+      Sharding.initDocStore(statsBase, store, 4)
+      Sharding.initStatsStore(statsBase, stats)
+      crashAt(swapPoint(crash, s"${stats}__pending", stats,
+          s"${stats}__last", "rename")) {
+        Sharding.maintainStats(spark, store, stats, statsBatch, 4)
+      }
+      if (crash == Retired) assert(!exists(s"${stats}__pending"))
+      else assert(exists(s"${stats}__pending") && exists(s"${stats}__staging"))
+      // the rerun and a further retry of the same batch: applied once
+      Sharding.maintainStats(spark, store, stats, statsBatch, 4)
+      val got = rollup(Sharding.maintainStats(spark, store, stats, statsBatch, 4))
+      assert(!exists(s"${stats}__pending") && !exists(s"${stats}__staging"))
+      Sharding.mergeCdc(spark, store, statsBatch, 4)
+      val want = rollup(spark.read.parquet(store).groupBy(col("source"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars")))
+      assert(got == want && rollup(spark.read.parquet(stats)) == want)
+    }
+  }
+
+  test("maintainStats: re-initializing the stats store retires its ledger, so the batch applies again") {
+    val root = graft.TempRoots.path("storetxn_stats_reinit")
+    val (store, stats) = (s"$root/store", s"$root/stats")
+    def fresh(): Unit = {
+      Sharding.initDocStore(statsBase, store, 4)
+      Sharding.initStatsStore(statsBase, stats)
+    }
+    fresh()
+    val first = rollup(Sharding.maintainStats(spark, store, stats, statsBatch, 4))
+    assert(first != rollup(statsBase.groupBy(col("source"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))))
+    fresh() // a second run of the same pipeline, as a bench pass does
+    assert(rollup(Sharding.maintainStats(spark, store, stats, statsBatch, 4)) == first)
+  }
+
+  test("maintainStats: a marker without its staged rollup fails loudly, naming the store") {
+    val root = graft.TempRoots.path("storetxn_stats_lost")
+    val (store, stats) = (s"$root/store", s"$root/stats")
+    Sharding.initDocStore(statsBase, store, 4)
+    Sharding.initStatsStore(statsBase, stats)
+    crashAt(CrashFs.Point("rename", s"${stats}__pending", done = true)) {
+      Sharding.maintainStats(spark, store, stats, statsBatch, 4)
+    }
+    Fs.delete(spark, s"${stats}__staging")
+    val e = intercept[IllegalStateException] {
+      Sharding.maintainStats(spark, store, stats, statsBatch, 4)
+    }
+    assert(e.getMessage.contains(stats) &&
+      e.getMessage.contains("restore statsDir from backup"), e.getMessage)
   }
 
   test("guard: readers fail fast, a foreign write is refused, the recovery rerun converges") {
