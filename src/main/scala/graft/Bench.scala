@@ -79,13 +79,18 @@ object Bench {
   /** `--jobs <qNN> [passes]`: runs one query `passes` times and prints
     * per-job and per-stage wall times of the last pass from a
     * SparkListener, so a multi-job lifecycle query's cost attributes to
-    * its actual passes (build / write / probe). */
+    * its actual passes (build / write / probe). Each stage line also
+    * sums its tasks' deserialization CPU and run CPU
+    * (`executorDeserializeCpuTime`, `executorCpuTime`): task setup
+    * shipped with every task (a closure, a factory) shows in the first,
+    * which per-span task CPU elsewhere leaves out. */
   private def profileJobs(spark: SparkSession, sfDir: String, want: String,
                           passes: Int): Unit = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
     import scala.jdk.CollectionConverters._
     val (name, fn) = SparkEntry.resolve(want)
-    final case class Stage(id: Int, desc: String, ms: Long, tasks: Int)
+    final case class Stage(id: Int, desc: String, ms: Long, tasks: Int,
+                           deserCpuNs: Long, cpuNs: Long)
     final class Job(val id: Int, val desc: String, val start: Long) {
       var end = 0L
       var stages = List.empty[Stage]
@@ -114,11 +119,13 @@ object Bench {
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
         val si = sc.stageInfo
         Option(jobs.get(stageToJob.getOrDefault(si.stageId, -1))).foreach { j =>
+          val tm = Option(si.taskMetrics)
           j.stages ::= Stage(si.stageId,
             (si.name.takeWhile(_ != '\n') + " | " +
               si.details.linesIterator.take(4).mkString(" <- ")).take(220),
             si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L),
-            si.numTasks)
+            si.numTasks, tm.fold(0L)(_.executorDeserializeCpuTime),
+            tm.fold(0L)(_.executorCpuTime))
         }
       }
     }
@@ -147,7 +154,8 @@ object Bench {
         jobs.values.asScala.toSeq.sortBy(_.id).foreach { j =>
           println(f"  job ${j.id}%3d ${(j.end - j.start) / 1e3}%7.3fs  ${j.desc.take(70)}")
           j.stages.sortBy(_.id).foreach { st =>
-            println(f"    stage ${st.id}%4d ${st.ms / 1e3}%7.3fs tasks=${st.tasks}%-3d\n      ${st.desc}")
+            println(f"    stage ${st.id}%4d ${st.ms / 1e3}%7.3fs tasks=${st.tasks}%-3d " +
+              f"deser_cpu=${st.deserCpuNs / 1e6}%.1fms cpu=${st.cpuNs / 1e6}%.1fms\n      ${st.desc}")
           }
         }
       }

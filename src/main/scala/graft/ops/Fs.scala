@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 
 /** The ONE copy of the Hadoop-filesystem helpers every store-path
@@ -106,10 +107,22 @@ private[graft] object Fs {
     } finally { ia.close(); ib.close() }
   }
 
+  /** The session's Hadoop conf for task code, as ONE broadcast per
+    * job: an executor deserializes it once, not once per task (the
+    * full conf is ~34 KB; shipped inside each task, every task of a
+    * many-file scan would decode its own copy). Tasks read
+    * `conf.value.value`. The broadcast holds a copy: local-mode tasks
+    * read the driver's broadcast value itself, so without the copy a
+    * later driver-side `set` would reach a job already planned. Spark's
+    * own file scans ship their conf the same way. */
+  def broadcastConf(spark: SparkSession): Broadcast[SerializableConf] =
+    spark.sparkContext.broadcast(new SerializableConf(
+      new Configuration(spark.sparkContext.hadoopConfiguration)))
+
   /** Hadoop `Configuration` is not java-serializable; this wrapper
-    * ships it into executor-side readers via its own write/readFields
-    * (the same shape as Spark's internal SerializableConfiguration,
-    * which is `private[spark]`). */
+    * ships it into task code via its own write/readFields (the same
+    * shape as Spark's internal SerializableConfiguration, which is
+    * `private[spark]`). Constructed only by [[broadcastConf]]. */
   class SerializableConf(@transient var value: Configuration)
       extends Serializable {
     private def writeObject(out: java.io.ObjectOutputStream): Unit = {

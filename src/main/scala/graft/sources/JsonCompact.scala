@@ -341,8 +341,7 @@ object JsonCompact {
       val name = s"compact-${java.util.UUID.randomUUID().toString.take(12)}.json"
       (name, bin.map(st => (st.getPath.toString, st.getLen)))
     }
-    val conf = new graft.ops.Fs.SerializableConf(
-      spark.sparkContext.hadoopConfiguration)
+    val conf = graft.ops.Fs.broadcastConf(spark)
     val stageStr = stage.toString
     // tasks stage under ATTEMPT-unique names (taskAttemptId suffix):
     // a speculative or zombie attempt writing the same staged path as
@@ -357,7 +356,7 @@ object JsonCompact {
         val attempt = Option(org.apache.spark.TaskContext.get())
           .map(_.taskAttemptId()).getOrElse(0L)
         val staged = s"$name.a$attempt"
-        mergeBin(conf.value, stageStr, staged, files)
+        mergeBin(conf.value.value, stageStr, staged, files)
         name -> staged
       }.collect().toMap
     // heartbeat after the (possibly long) merge job, then verify the
@@ -562,8 +561,7 @@ object JsonCompact {
           () => { keyed.unpersist(blocking = false); () })
     }
     val run = java.util.UUID.randomUUID().toString.take(12)
-    val conf = new graft.ops.Fs.SerializableConf(
-      spark.sparkContext.hadoopConfiguration)
+    val conf = graft.ops.Fs.broadcastConf(spark)
     val stageStr = stage.toString
     import spark.implicits._
     // staged names are ATTEMPT-unique (same rule as compact's bin
@@ -578,7 +576,7 @@ object JsonCompact {
             .map(_.taskAttemptId()).getOrElse(0L)
           val staged = s"$name.a$attempt"
           val p = new Path(stageStr, staged)
-          val ofs = p.getFileSystem(conf.value)
+          val ofs = p.getFileSystem(conf.value.value)
           val out = ofs.create(p, true)
           try it.foreach { l =>
             out.write(l.getBytes(StandardCharsets.UTF_8)); out.write('\n')

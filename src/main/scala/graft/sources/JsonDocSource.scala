@@ -3,8 +3,8 @@ package graft.sources
 import graft.infer.{InferSchema, Materialize}
 import graft.types.{HNull, HType}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -1421,7 +1421,7 @@ private class JsonDocScanBuilder(ps: Seq[String], whole: Boolean, t: HType,
   * derived rows — ONE row for a global aggregate, one PER GROUP for a
   * layout-decided GROUP BY (fingerprint-verified in the builder).
   * External values ride to the reader and convert through the same
-  * RowEncoder path as data rows. */
+  * generic converter as data rows ([[JsonDocReader]]). */
 private class JsonDocMetaScan(ps: Seq[String], schema: StructType,
                               rows: Seq[Seq[Any]])
     extends Scan with Batch
@@ -1460,16 +1460,16 @@ private case class JsonDocMetaReaderFactory() extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
       private val mp = p.asInstanceOf[JsonDocMetaPartition]
-      // one serializer per reader, not per get() (a handful of rows
-      // either way, but encoder construction is the expensive part)
-      private lazy val toInternal =
-        ExpressionEncoder(RowEncoder.encoderFor(mp.schema)).createSerializer()
+      private val toInternal =
+        CatalystTypeConverters.createToCatalystConverter(mp.schema)
       private val it = mp.rows.iterator
-      private var current: Seq[Any] = _
+      private var current: InternalRow = _
       override def next(): Boolean =
-        if (it.hasNext) { current = it.next(); true } else false
-      override def get(): InternalRow =
-        toInternal(Row.fromSeq(current)).copy()
+        if (it.hasNext) {
+          current = toInternal(Row.fromSeq(it.next())).asInstanceOf[InternalRow]
+          true
+        } else false
+      override def get(): InternalRow = current
       override def close(): Unit = ()
     }
 }
@@ -1747,13 +1747,13 @@ private class JsonDocScan(ps: Seq[String], whole: Boolean, t: HType,
     }.toArray
   }
   override def createReaderFactory(): PartitionReaderFactory = {
-    // ship the SESSION's Hadoop conf to the readers: a fresh executor
-    // Configuration would drop every spark.hadoop.* setting (S3
-    // credentials/endpoints, codec config) that planning used
+    // ship the SESSION's Hadoop conf to the readers, one broadcast per
+    // job: a fresh executor Configuration would drop every
+    // spark.hadoop.* setting (S3 credentials/endpoints, codec config)
+    // that planning used
     val base = JsonDocReaderFactory(whole, t, full, required,
       pushed ++ runtimePushed,
-      new graft.ops.Fs.SerializableConf(
-        SparkSession.active.sparkContext.hadoopConfiguration))
+      graft.ops.Fs.broadcastConf(SparkSession.active))
     val withPart: PartitionReaderFactory = (dirPart, partField) match {
       case (Some(s), Some(_)) =>
         PartAppendingReaderFactory(base, s.rootQualified, s.col, s.isLong)
@@ -1861,11 +1861,11 @@ private case class JsonDocReaderFactory(whole: Boolean, t: HType,
                                         full: StructType,
                                         required: StructType,
                                         pushed: Array[org.apache.spark.sql.sources.Filter],
-                                        conf: graft.ops.Fs.SerializableConf)
+                                        conf: Broadcast[graft.ops.Fs.SerializableConf])
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[JsonDocPartition]
-    new JsonDocReader(part, whole, t, full, required, pushed, conf.value)
+    new JsonDocReader(part, whole, t, full, required, pushed, conf.value.value)
   }
 }
 
@@ -2119,8 +2119,14 @@ private object JsonDocFilters {
   * ([[Materialize.convertPruned]]) of exactly the pruned required
   * schema plus full-typed cells for pushed-filter columns outside
   * it, then early-skip filter evaluation, projection to the required
-  * width, and Catalyst serialization. A fully-pruned scan (count(*))
-  * skips the parse entirely — a row per line is the whole contract. */
+  * width, and conversion to a generic `InternalRow` through
+  * `CatalystTypeConverters` — no per-reader code generation. The rows
+  * are not unsafe: `DataSourceV2Strategy` puts a `Project` above every
+  * row-based scan (`ProjectExec` over `BatchScan` in `explain`), and
+  * its unsafe projection is the one conversion to `UnsafeRow` (the
+  * `_file`, partition-column and CDC factories' `JoinedRow`s rely on
+  * it too). A fully-pruned scan (count(*)) skips the parse entirely —
+  * a row per line is the whole contract. */
 private class JsonDocReader(part: JsonDocPartition, whole: Boolean, t: HType,
                             full: StructType, required: StructType,
                             pushed: Array[org.apache.spark.sql.sources.Filter],
@@ -2204,13 +2210,13 @@ private class JsonDocReader(part: JsonDocPartition, whole: Boolean, t: HType,
   // one row per input unit IS the contract
   private val needParse = wide.nonEmpty
   private val allNullBase: Row = Row.fromSeq(Seq.fill(baseWide.length)(null))
-  // reused across rows: the serializer consumes the values before
-  // next() is called again, and .copy() gives the UnsafeRow its own
-  // buffer — so one Array[Any] (not a fresh Seq + Row per row) serves
-  // every pruned projection this task emits
+  // reused across rows: the converter copies the values into a fresh
+  // InternalRow before next() is called again — so one Array[Any] (not
+  // a fresh Seq + Row per row) serves every pruned projection this
+  // task emits
   private val projBuf = new Array[Any](outWidth)
   private val toInternal =
-    ExpressionEncoder(RowEncoder.encoderFor(required)).createSerializer()
+    CatalystTypeConverters.createToCatalystConverter(required)
 
   /** One parsed unit → the wide external row (required ∪ filter
     * columns, nested filter leaves appended last). Struct-
@@ -2277,8 +2283,7 @@ private class JsonDocReader(part: JsonDocPartition, whole: Boolean, t: HType,
           }
           new GenericRow(projBuf)
         }
-      // copy: the encoder's serializer reuses its UnsafeRow buffer
-      current = toInternal(pruned).copy()
+      current = toInternal(pruned).asInstanceOf[InternalRow]
       true
     }
   }

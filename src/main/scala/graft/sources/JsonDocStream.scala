@@ -429,8 +429,7 @@ private[sources] class JsonDocMicroBatchStream(
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val base = JsonDocReaderFactory(whole, t, full, required, pushed,
-      new graft.ops.Fs.SerializableConf(
-        spark.sparkContext.hadoopConfiguration))
+      graft.ops.Fs.broadcastConf(spark))
     // `_file` metadata column selected on the stream: same per-
     // partition constant append as the batch scan. cdcDeletes appends
     // the two EXPLICIT cdc columns instead (and serves retractions).

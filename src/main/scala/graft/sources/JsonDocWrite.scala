@@ -228,8 +228,7 @@ private[sources] class JsonDocBatchWrite(dir: String, schema: StructType, tag: S
     if (lease.isEmpty)
       lease = Some(JsonLease.acquire(lfs, root, "write"))
     val stage = new Path(dir, JsonCompact.MarkerDirName).toString
-    val conf = new graft.ops.Fs.SerializableConf(
-      SparkSession.active.sparkContext.hadoopConfiguration)
+    val conf = graft.ops.Fs.broadcastConf(SparkSession.active)
     val s = schema
     val t = tag
     val doRefreshMeta = refreshMeta
@@ -238,7 +237,7 @@ private[sources] class JsonDocBatchWrite(dir: String, schema: StructType, tag: S
                                 taskId: Long): DataWriter[InternalRow] =
         new NdjsonDataWriter(stage,
           JsonDocWrite.stagedBatchName(t, partitionId, taskId),
-          partitionId, s, conf.value, capture = doRefreshMeta)
+          partitionId, s, conf.value.value, capture = doRefreshMeta)
     }
   }
 
@@ -348,8 +347,7 @@ private[sources] class JsonDocStreamingWrite(dir: String, schema: StructType,
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : StreamingDataWriterFactory = {
     val stage = new Path(dir, JsonCompact.MarkerDirName).toString
-    val conf = new graft.ops.Fs.SerializableConf(
-      SparkSession.active.sparkContext.hadoopConfiguration)
+    val conf = graft.ops.Fs.broadcastConf(SparkSession.active)
     val s = schema
     val t = tag
     val doRefreshMeta = refreshMeta
@@ -358,7 +356,7 @@ private[sources] class JsonDocStreamingWrite(dir: String, schema: StructType,
                                 epochId: Long): DataWriter[InternalRow] =
         new NdjsonDataWriter(stage,
           JsonDocWrite.stagedStreamName(t, epochId, partitionId, taskId),
-          partitionId, s, conf.value, capture = doRefreshMeta)
+          partitionId, s, conf.value.value, capture = doRefreshMeta)
     }
   }
 

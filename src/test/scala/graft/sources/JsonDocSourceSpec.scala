@@ -100,6 +100,134 @@ class JsonDocSourceSpec extends SparkTestBase {
       .collect().map(_.toString).sorted.toSeq
     assert(viaSource == viaOperator)
     assert(viaSource.length == n.toInt && n == 3L)
+
+    // the values the reader's generic row conversion has to get right,
+    // under dirPartitions (one `p=<n>/` level) so the partition and
+    // `_file` columns ride along: decimals at scale, timestamps, hex
+    // binary, union cells, arrays of structs, nested structs
+    val tree = new java.io.File(graft.TempRoots.path("graftjson_shapes"))
+    Seq("p=1" -> Seq(
+      """{"id": 1, "amt": 12.345, "ts": "2024-01-02T03:04:05Z", "blob": "0aff", "u": 7, "items": [{"k": "a", "n": 1}, {"k": "b", "n": 2}], "meta": {"src": "s1", "extra": {"x": 1}}}""",
+      """{"id": 2, "amt": 1.5, "ts": "2024-02-03 04:05:06", "blob": "1234", "u": "seven", "items": [], "meta": {"src": "s2", "extra": {"x": 2}}}"""),
+      "p=2" -> Seq(
+      """{"id": 3, "amt": -99.999, "ts": null, "blob": "deadBEEF", "u": {"z": 1}, "items": [{"k": "c", "n": 300}], "meta": {"src": "s3"}}""",
+      """{"id": 4, "amt": 0.001, "ts": "2024-03-04T05:06:07", "u": null, "meta": null}""")
+    ).foreach { case (sub, lines) =>
+      val d = new java.io.File(tree, sub)
+      d.mkdirs()
+      val w = new java.io.PrintWriter(new java.io.File(d, "part-0.json"))
+      lines.foreach(w.println)
+      w.close()
+    }
+    val root = tree.toString
+    def open(zonemaps: Boolean) = spark.read.format("graftjson")
+      .option("dirPartitions", "true")
+      .option("zonemaps", zonemaps.toString).load(root)
+    val tdf = open(zonemaps = false)
+    val tDocs = spark.read.textFile(s"$root/*/*.json")
+    val (tInferred, _) = tDocs.select(new InferSchemaCountAgg().toColumn).head()
+    def operator(sub: String) = Materialize.materialize(
+      spark.read.textFile(s"$root/$sub/*.json"), tInferred.canonical)
+    val ops = operator("p=1").withColumn("p", lit(1L))
+      .unionByName(operator("p=2").withColumn("p", lit(2L)))
+    assert(tdf.schema.map(f => f.name -> f.dataType) ==
+      ops.schema.map(f => f.name -> f.dataType), tdf.schema.treeString)
+    Seq("amt" -> "DecimalType", "ts" -> "TimestampType",
+      "blob" -> "BinaryType", "u" -> "StructType", "items" -> "ArrayType")
+      .foreach { case (c, k) =>
+        assert(tdf.schema(c).dataType.getClass.getSimpleName.startsWith(k),
+          s"$c: ${tdf.schema(c).dataType}")
+      }
+    assert(tdf.schema("amt").dataType ==
+      org.apache.spark.sql.types.DecimalType(5, 3))
+    // Row.toString prints byte arrays by identity: compare bytes
+    def norm(v: Any): Any = v match {
+      case r: org.apache.spark.sql.Row => r.toSeq.map(norm)
+      case b: Array[Byte] => b.toSeq
+      case s: scala.collection.Seq[_] => s.map(norm)
+      case o => o
+    }
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(r => norm(r).toString).sorted.toSeq
+    // the unprojected scan: its only row conversion is the unsafe
+    // Project Spark adds above a row-based scan
+    val scanProjects = tdf.queryExecution.executedPlan.collect {
+      case pr: org.apache.spark.sql.execution.ProjectExec
+          if pr.child.exists(_.isInstanceOf[BatchScanExec]) => pr
+    }
+    assert(scanProjects.nonEmpty, tdf.queryExecution.executedPlan.toString)
+    assert(rowsOf(tdf) == rowsOf(ops))
+    assert(rowsOf(tdf).exists(_.contains("12.345")) &&
+      rowsOf(tdf).exists(_.contains("1.500")), rowsOf(tdf).mkString("\n"))
+    assert(tdf.rdd.count() == 4L)
+    assert(tdf.rdd.map(r => norm(r).toString).collect().sorted.toSeq ==
+      rowsOf(ops))
+    // nested-pruned projection, the union's cells, an array of structs
+    val nested = Seq(col("id"), col("meta.src"), col("meta.extra.x"),
+      col("u.tag"), col("u"), col("items.n"), col("ts"), col("blob"))
+    val pruned = tdf.select(nested: _*)
+    val prunedRead = pruned.queryExecution.executedPlan.collect {
+      case b: BatchScanExec => b.scan.readSchema()
+    }.head
+    assert(prunedRead("meta").dataType.asInstanceOf[
+      org.apache.spark.sql.types.StructType].fieldNames.toSeq ==
+      Seq("extra", "src"), prunedRead.treeString)
+    assert(prunedRead("meta").dataType.asInstanceOf[
+      org.apache.spark.sql.types.StructType]("extra").dataType
+      .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq ==
+      Seq("x"), prunedRead.treeString)
+    assert(rowsOf(pruned) == rowsOf(ops.select(nested: _*)))
+    // a pushed filter, with the partition and `_file` columns
+    val filtered = tdf.where(col("id") > 1)
+      .select(col("id"), col("amt"), col("p"), col("_file"))
+    assert(filtered.queryExecution.executedPlan.collect {
+      case b: BatchScanExec => b.scan.description()
+    }.mkString.contains("GreaterThan(id,1)"))
+    val got = filtered.collect().map(r =>
+      (r.getAs[Number](0).longValue, r.getDecimal(1), r.getLong(2),
+        r.getString(3))).sortBy(_._1).toSeq
+    assert(got.map(g => (g._1, g._2.toPlainString, g._3)) == Seq(
+      (2L, "1.500", 1L), (3L, "-99.999", 2L), (4L, "0.001", 2L)), got)
+    assert(got.forall { case (_, _, p, f) =>
+      f.contains(s"p=$p/part-0.json") }, got)
+    // a metadata-answered aggregate: JsonDocMetaScan's rows take the
+    // same converter
+    val zdf = open(zonemaps = true)
+    val aggs = Seq(count(lit(1)).as("c"), min(col("amt")).as("lo"),
+      max(col("amt")).as("hi"), sum(col("id")).as("s"))
+    val viaMeta = zdf.agg(aggs.head, aggs.tail: _*)
+    assert(viaMeta.queryExecution.executedPlan.toString
+      .contains("PushedAggregation"), viaMeta.queryExecution.executedPlan.toString)
+    assert(viaMeta.collect().map(norm(_).toString).toSeq ==
+      tdf.agg(aggs.head, aggs.tail: _*).collect().map(norm(_).toString).toSeq)
+  }
+
+  test("the reader factory ships a conf handle, not the conf: small, and one Configuration per JVM") {
+    val dir = writeFixture("graftjson_factory")
+    val scan = spark.read.format("graftjson").load(dir).queryExecution
+      .executedPlan.collectFirst { case b: BatchScanExec => b }.get
+    val factory = scan.scan.toBatch.createReaderFactory()
+    def bytesOf(o: AnyRef): Array[Byte] = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bos)
+      try out.writeObject(o) finally out.close()
+      bos.toByteArray
+    }
+    // the serialized session conf alone: tens of KB
+    val confBytes = bytesOf(new graft.ops.Fs.SerializableConf(
+      spark.sparkContext.hadoopConfiguration)).length
+    val shipped = bytesOf(factory)
+    assert(confBytes > 16384, s"conf serializes to $confBytes bytes")
+    assert(shipped.length < confBytes / 4,
+      s"factory ${shipped.length} bytes vs conf $confBytes bytes")
+    def reread(): JsonDocReaderFactory = {
+      val in = new java.io.ObjectInputStream(
+        new java.io.ByteArrayInputStream(shipped))
+      try in.readObject().asInstanceOf[JsonDocReaderFactory]
+      finally in.close()
+    }
+    // what two tasks' readers receive: the same Configuration instance
+    assert(reread().conf.value.value eq reread().conf.value.value)
   }
 
   test("column pruning reaches the scan: readSchema is exactly the projection") {
