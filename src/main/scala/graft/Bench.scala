@@ -144,11 +144,12 @@ object Bench {
     }
     spark.sparkContext.addSparkListener(listener)
     for (p <- 1 to passes) {
+      val stores = tempEntries()
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
       val total = (System.nanoTime() - t0) / 1e9
       fence(p)
-      GraftSession.dropCaches(spark)
+      resetPass(spark, stores)
       println(f"== pass $p: $name total=$total%.3fs jobs=${jobs.size}")
       if (p == passes) {
         jobs.values.asScala.toSeq.sortBy(_.id).foreach { j =>
@@ -162,6 +163,25 @@ object Bench {
       jobs.clear(); stageToJob.clear()
       System.gc()
     }
+  }
+
+  /** The entries under [[TempRoots]] right now. */
+  private def tempEntries(): Set[java.nio.file.Path] = {
+    val ls = java.nio.file.Files.list(TempRoots.root)
+    try { import scala.jdk.CollectionConverters._; ls.iterator.asScala.toSet }
+    finally ls.close()
+  }
+
+  /** Untimed, after a pass: drop its caches and delete the
+    * [[TempRoots]] stores it created (`before` is the listing taken
+    * just before it), so the next pass starts cold on storage too.
+    * A build-once store (q173's inverted index, the `graftjson_qNNN`
+    * tables) is built only while absent; kept, it would leave its
+    * build, delete and compaction steps out of every later pass. */
+  private def resetPass(spark: SparkSession,
+                        before: Set[java.nio.file.Path]): Unit = {
+    GraftSession.dropCaches(spark)
+    (tempEntries() -- before).foreach(TempRoots.deleteRecursively)
   }
 
   /** The timed suite: every query through [[Timer.measure]], then the
@@ -264,9 +284,9 @@ object Bench {
       * only after a driver GC notices the dead references. Wait for
       * storage to fall to `floorMB` with a bounded budget (4 s, one GC
       * nudge). If the budget expires, say so rather than silently
-      * recording a nonzero pre, naming the cached RDDs still resident
-      * ("no cached RDD" means a broadcast or another non-RDD block),
-      * and return the residual as the floor for this query's later
+      * recording a nonzero pre, naming the cached RDDs and the other
+      * blocks (broadcast pieces, ...) still resident in memory, and
+      * return the residual as the floor for this query's later
       * passes, so they do not re-pay the full budget chasing the same
       * megabytes. */
     private def drain(floorMB: Long, name: String, pass: Int): Long = {
@@ -280,22 +300,30 @@ object Bench {
       else {
         val cached = spark.sparkContext.getRDDStorageInfo.filter(_.isCached)
           .map(r => f"rdd ${r.id} '${r.name}' ${r.memSize / 1048576.0}%.2fMB")
+        // local mode: the driver's block manager is the only executor's
+        val bm = org.apache.spark.SparkEnv.get.blockManager
+        val blocks = bm.getMatchingBlockIds(!_.isRDD).sortBy(_.name)
+          .flatMap(id => bm.getStatus(id).filter(_.memSize > 0).map(st =>
+            f"${id.name} ${st.memSize / 1024.0}%.1fKB"))
         System.err.println(
           s"[bench-teardown] ${residualMB}MB storage residual before " +
             s"$name pass $pass (drain budget expired): " +
-            (if (cached.isEmpty) "no cached RDD" else cached.mkString(", ")))
+            (if (cached.isEmpty) "no cached RDD" else cached.mkString(", ")) +
+            "; other blocks: " +
+            (if (blocks.isEmpty) "none" else blocks.mkString(", ")))
         residualMB
       }
     }
 
-    /** Time one pass, then drop its caches so the next pass is cold
-      * (clearing per pass, not per query: a warm second pass once
-      * reported 5× off on q161). A failed pass says so on stderr. The
+    /** Time one pass, then reset it ([[resetPass]]) so the next pass
+      * is cold (clearing per pass, not per query: a warm second pass
+      * once reported 5× off on q161). A failed pass says so on stderr. The
       * storage occupancy before and after the timed region persists as
       * `storage_mb`: a first pass has pre == 0 unless a
       * `[bench-teardown]` line names it (see [[measure]]). */
     private def timedCold(name: String, pass: Int,
                           fn: (SparkSession, String) => DataFrame): Pass = {
+      val stores = tempEntries()
       val pre = usedStorageMB()
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true }
@@ -306,7 +334,7 @@ object Bench {
       }
       val secs = (System.nanoTime() - t0) / 1e9
       val post = usedStorageMB()
-      GraftSession.dropCaches(spark)
+      resetPass(spark, stores)
       Pass(ok, secs, pre, post)
     }
   }

@@ -41,7 +41,18 @@ import scala.jdk.CollectionConverters._
   * a single 100 GB NDJSON file fans out across the cluster instead of
   * serializing through one core. `.gz` (stream-codec, not seekable)
   * and `whole=true` (the file IS the record) are inherently
-  * unsplittable and stay one partition per file.
+  * unsplittable and stay one split per file. The batch scan then
+  * PACKS consecutive small splits into one task ([[JsonDocPack]]) by
+  * Spark's own file-source rule, on the session's existing confs: a
+  * split costs its length plus `spark.sql.files.openCostInBytes`, and
+  * a pack is capped at `min(split size, max(open cost, Σ cost / n))`,
+  * `n` = `spark.sql.files.minPartitionNum` or the default parallelism
+  * — about one task per core for a table of small files, where one
+  * task per file paid scheduling, reader setup and a partial
+  * aggregate per file. Packing is next-fit in LISTING order, so a
+  * collected scan's row order is the one-split-per-task order. No
+  * option of its own: set `openCostInBytes` to the split size for one
+  * split per task.
   *
   * Column pruning is REAL pushdown ([[SupportsPushDownRequiredColumns]]):
   * a pruned scan converts only the requested top-level fields and
@@ -1698,14 +1709,7 @@ private class JsonDocScan(ps: Seq[String], whole: Boolean, t: HType,
   }
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
-    val conf = spark.sparkContext.hadoopConfiguration
-    val codecs =
-      new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
-    // session split size unless the option overrides; clamped ≥1 MB so
-    // a mis-set option cannot plan thousands of splits per small file
-    val target = math.max(1L << 20,
-      maxSplitBytes.getOrElse(
-        spark.sessionState.conf.filesMaxPartitionBytes))
+    val splitter = new JsonDocSplitter(spark, whole, maxSplitBytes)
     // zone-map file skipping: the pushed set is a CONJUNCTION (Spark
     // splits the query's filters into top-level conjuncts), so one
     // conjunct provably empty over a file's zone excludes the whole
@@ -1731,89 +1735,123 @@ private class JsonDocScan(ps: Seq[String], whole: Boolean, t: HType,
     val population =
       if (snapshot.isDefined) fingerprint
       else JsonDocSource.listFiles(spark, liveScanPaths(spark))
-    population.flatMap { case (p, len, mtime) =>
+    val splits = population.flatMap { case (p, len, mtime) =>
       if (topExcludedActive.get(p).contains((len, mtime)) ||
         zoneSkips(p, len, mtime)) {
         JsonDocSource.zoneSkippedFiles.incrementAndGet()
-        Seq.empty[InputPartition]
-      } else {
-        val splittable = !whole &&
-          codecs.getCodec(new org.apache.hadoop.fs.Path(p)) == null
-        if (!splittable || len <= target)
-          Seq(JsonDocPartition(p, 0L, len): InputPartition)
-        else (0L until len by target).map(s =>
-          JsonDocPartition(p, s, math.min(target, len - s)): InputPartition)
-      }
-    }.toArray
+        Seq.empty
+      } else splitter(p, len)
+    }
+    JsonDocPack.pack(spark, splits, splitter.target).toArray
   }
-  override def createReaderFactory(): PartitionReaderFactory = {
+  override def createReaderFactory(): PartitionReaderFactory =
     // ship the SESSION's Hadoop conf to the readers, one broadcast per
     // job: a fresh executor Configuration would drop every
     // spark.hadoop.* setting (S3 credentials/endpoints, codec config)
-    // that planning used
-    val base = JsonDocReaderFactory(whole, t, full, required,
-      pushed ++ runtimePushed,
-      graft.ops.Fs.broadcastConf(SparkSession.active))
-    val withPart: PartitionReaderFactory = (dirPart, partField) match {
-      case (Some(s), Some(_)) =>
-        PartAppendingReaderFactory(base, s.rootQualified, s.col, s.isLong)
-      case _ => base
-    }
-    if (fileField.isEmpty) withPart
-    else FileAppendingReaderFactory(withPart)
+    // that planning used. The decoding of the partition column needs
+    // only root, column and type — the directory list stays behind.
+    JsonDocReaderFactory(whole, t, full, required, pushed ++ runtimePushed,
+      graft.ops.Fs.broadcastConf(SparkSession.active),
+      appendFile = fileField.isDefined,
+      dirPart = partField.flatMap(_ => dirPart.map(_.copy(dirs = Nil))))
+}
+
+/** The byte-range split rule, shared by the batch scan and the stream.
+  * The split size is the `maxSplitBytes` option, else the session's
+  * `spark.sql.files.maxPartitionBytes`, clamped ≥1 MB so a mis-set
+  * option cannot plan thousands of splits per small file. `.gz`
+  * (stream codec, not seekable) and `whole` files are never split. */
+private final class JsonDocSplitter(spark: SparkSession, whole: Boolean,
+                                    maxSplitBytes: Option[Long]) {
+  val target: Long = math.max(1L << 20,
+    maxSplitBytes.getOrElse(spark.sessionState.conf.filesMaxPartitionBytes))
+  private val codecs = new org.apache.hadoop.io.compress.CompressionCodecFactory(
+    spark.sparkContext.hadoopConfiguration)
+  def apply(path: String, len: Long): Seq[JsonDocPartition] = {
+    val splittable = !whole &&
+      codecs.getCodec(new org.apache.hadoop.fs.Path(path)) == null
+    if (!splittable || len <= target) Seq(JsonDocPartition(path, 0L, len))
+    else (0L until len by target).map(s =>
+      JsonDocPartition(path, s, math.min(target, len - s)))
   }
 }
 
-/** Appends the derived partition-directory value (dirPartitions) —
-  * one constant per partition, decoded from the file's directory
-  * component, joined onto every data row with zero copy (the
-  * [[FileAppendingReaderFactory]] mechanics). */
-private case class PartAppendingReaderFactory(inner: PartitionReaderFactory,
-                                              rootQualified: String,
-                                              col: String,
-                                              isLong: Boolean)
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val r = inner.createReader(p)
-    val suffix = InternalRow(DirPartitions.valueOf(rootQualified, col,
-      isLong, p.asInstanceOf[JsonDocPartition].path) match {
-      case null => null
-      case l: java.lang.Long => l.longValue()
-      case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
-    })
-    new PartitionReader[InternalRow] {
-      private val joined =
-        new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      override def next(): Boolean = r.next()
-      override def get(): InternalRow = joined(r.get(), suffix)
-      override def close(): Unit = r.close()
-    }
-  }
-}
-
-/** Appends the `_file` metadata value — one constant per partition,
-  * joined onto every data row with zero copy ([[JoinedRow]]); the
-  * data reader is untouched, so every pruning/pushdown/materialize
-  * contract holds verbatim. */
-private case class FileAppendingReaderFactory(inner: PartitionReaderFactory)
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val r = inner.createReader(p)
-    val suffix = InternalRow(
-      org.apache.spark.unsafe.types.UTF8String.fromString(
-        p.asInstanceOf[JsonDocPartition].path))
-    new PartitionReader[InternalRow] {
-      private val joined =
-        new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      override def next(): Boolean = r.next()
-      override def get(): InternalRow = joined(r.get(), suffix)
-      override def close(): Unit = r.close()
-    }
-  }
-}
-
+/** One byte range of one file: `[start, start + length)`. */
 private case class JsonDocPartition(path: String, start: Long, length: Long)
     extends InputPartition
+
+/** One batch-scan task: consecutive splits in listing order, read one
+  * after another by a single task. */
+private case class JsonDocPack(splits: Seq[JsonDocPartition])
+    extends InputPartition
+
+private object JsonDocPack {
+  /** Spark's file-source packing rule (`FilePartition.maxSplitBytes` and
+    * `getFilePartitions`), on the session's own confs: each split costs
+    * its length plus `spark.sql.files.openCostInBytes`, and the cap is
+    * `min(target, max(open, Σ cost / n))` with `n` =
+    * `spark.sql.files.minPartitionNum`, else the default parallelism —
+    * about one pack per core for a table of small files. A split joins
+    * the open pack while the pack's cost so far plus the split's
+    * length fits the cap. Unlike Spark the splits are packed next-fit
+    * in LISTING order, not by descending size, so every pack holds
+    * consecutive splits and a collected scan's row order is the
+    * one-split-per-task order. Splitting is untouched: a split of a
+    * large file costs more than a `target`-capped pack and rides alone. */
+  def pack(spark: SparkSession, splits: Seq[JsonDocPartition],
+           target: Long): Seq[JsonDocPack] = {
+    val conf = spark.sessionState.conf
+    val open = conf.filesOpenCostInBytes
+    val n = conf.filesMinPartitionNum
+      .getOrElse(spark.sparkContext.defaultParallelism)
+    val cap = math.min(target,
+      math.max(open, splits.iterator.map(_.length + open).sum / n))
+    val packs = Seq.newBuilder[JsonDocPack]
+    var current = Vector.empty[JsonDocPartition]
+    var cost = 0L
+    splits.foreach { s =>
+      if (current.nonEmpty && cost + s.length > cap) {
+        packs += JsonDocPack(current); current = Vector.empty; cost = 0L
+      }
+      current :+= s; cost += s.length + open
+    }
+    if (current.nonEmpty) packs += JsonDocPack(current)
+    packs.result()
+  }
+}
+
+/** A reader whose every row carries `suffix` after the data columns —
+  * a per-split constant (`_file`, the partition value, the CDC pair)
+  * joined on with zero copy ([[JoinedRow]]); the data reader is
+  * untouched, so every pruning/pushdown/materialize contract holds
+  * verbatim. */
+private final class SuffixedReader(r: PartitionReader[InternalRow],
+                                   suffix: InternalRow)
+    extends PartitionReader[InternalRow] {
+  private val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
+  override def next(): Boolean = r.next()
+  override def get(): InternalRow = joined(r.get(), suffix)
+  override def close(): Unit = r.close()
+}
+
+/** Reads a pack's splits in order, opening each split's reader only
+  * after the previous one is exhausted and closed: one open file per
+  * task, whatever the pack's size. */
+private final class PackReader(readers: Iterator[PartitionReader[InternalRow]])
+    extends PartitionReader[InternalRow] {
+  private var current: PartitionReader[InternalRow] = _
+  @annotation.tailrec
+  override def next(): Boolean =
+    if (current != null && current.next()) true
+    else if (!readers.hasNext) false
+    else {
+      if (current != null) { current.close(); current = null }
+      current = readers.next()
+      next()
+    }
+  override def get(): InternalRow = current.get()
+  override def close(): Unit = if (current != null) current.close()
+}
 
 /** A file-level RETRACTION in a `cdcDeletes` change feed: the named
   * file's previous form died at its save. No bytes are read — the
@@ -1822,9 +1860,9 @@ private case class JsonDocPartition(path: String, start: Long, length: Long)
 private case class CdcRemovePartition(path: String) extends InputPartition
 
 /** `cdcDeletes=true` reader: data partitions ride as `insert` rows
-  * with the (file, change_type) pair joined on zero-copy (the
-  * [[FileAppendingReaderFactory]] mechanics); [[CdcRemovePartition]]s
-  * emit one synthetic `delete` row whose data columns are all null. */
+  * with the (file, change_type) pair joined on ([[SuffixedReader]]);
+  * [[CdcRemovePartition]]s emit one synthetic `delete` row whose data
+  * columns are all null. */
 private case class CdcAppendingReaderFactory(inner: JsonDocReaderFactory,
                                              dataWidth: Int)
     extends PartitionReaderFactory {
@@ -1845,27 +1883,45 @@ private case class CdcAppendingReaderFactory(inner: JsonDocReaderFactory,
           override def close(): Unit = ()
         }
       case part: JsonDocPartition =>
-        val r = inner.createReader(part)
-        val suffix = InternalRow(utf8(part.path), utf8("insert"))
-        new PartitionReader[InternalRow] {
-          private val joined =
-            new org.apache.spark.sql.catalyst.expressions.JoinedRow
-          override def next(): Boolean = r.next()
-          override def get(): InternalRow = joined(r.get(), suffix)
-          override def close(): Unit = r.close()
-        }
+        new SuffixedReader(inner.createReader(part),
+          InternalRow(utf8(part.path), utf8("insert")))
     }
 }
 
+/** Readers for one scan: a [[JsonDocPack]] reads its splits in order
+  * through one [[PackReader]]; a bare [[JsonDocPartition]] (the
+  * stream's one split per partition) reads alone. Each split's rows
+  * carry that split's own `_file` (`appendFile`) and `dirPartitions`
+  * value (`dirPart`, its directory list left empty) — per split, not
+  * per task, because one pack may span files of several directories. */
 private case class JsonDocReaderFactory(whole: Boolean, t: HType,
                                         full: StructType,
                                         required: StructType,
                                         pushed: Array[org.apache.spark.sql.sources.Filter],
-                                        conf: Broadcast[graft.ops.Fs.SerializableConf])
+                                        conf: Broadcast[graft.ops.Fs.SerializableConf],
+                                        appendFile: Boolean = false,
+                                        dirPart: Option[DirPartitions.Spec] = None)
     extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val part = p.asInstanceOf[JsonDocPartition]
-    new JsonDocReader(part, whole, t, full, required, pushed, conf.value.value)
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    p match {
+      case JsonDocPack(splits) => new PackReader(splits.iterator.map(splitReader))
+      case split: JsonDocPartition => splitReader(split)
+    }
+
+  private def splitReader(split: JsonDocPartition): PartitionReader[InternalRow] = {
+    val r = new JsonDocReader(split, whole, t, full, required, pushed,
+      conf.value.value)
+    val part = dirPart.map(s =>
+      DirPartitions.valueOf(s.rootQualified, s.col, s.isLong, split.path) match {
+        case null => null
+        case l: java.lang.Long => l.longValue()
+        case v: String => org.apache.spark.unsafe.types.UTF8String.fromString(v)
+      })
+    val file =
+      if (appendFile) Some(org.apache.spark.unsafe.types.UTF8String.fromString(split.path))
+      else None
+    val suffix = part ++ file
+    if (suffix.isEmpty) r else new SuffixedReader(r, InternalRow.fromSeq(suffix.toSeq))
   }
 }
 
@@ -2124,8 +2180,8 @@ private object JsonDocFilters {
   * are not unsafe: `DataSourceV2Strategy` puts a `Project` above every
   * row-based scan (`ProjectExec` over `BatchScan` in `explain`), and
   * its unsafe projection is the one conversion to `UnsafeRow` (the
-  * `_file`, partition-column and CDC factories' `JoinedRow`s rely on
-  * it too). A fully-pruned scan (count(*)) skips the parse entirely —
+  * `_file`, partition-column and CDC suffixes that [[SuffixedReader]]
+  * joins on rely on it too). A fully-pruned scan (count(*)) skips the parse entirely —
   * a row per line is the whole contract. */
 private class JsonDocReader(part: JsonDocPartition, whole: Boolean, t: HType,
                             full: StructType, required: StructType,

@@ -33,9 +33,14 @@ import scala.collection.mutable
   * Schema locks at stream start (the load-time inference); later
   * files materialize through that locked [[HType]] exactly like
   * post-inference files do in a batch scan. Batches reuse the batch
-  * reader wholesale — byte-range splits for plain NDJSON, single
-  * partitions for `.gz`/whole, pushed-filter early skip — so stream
-  * and batch cannot drift row-wise.
+  * reader wholesale — the same [[JsonDocSplitter]] byte-range splits
+  * for plain NDJSON, single partitions for `.gz`/whole, pushed-filter
+  * early skip — so stream and batch cannot drift row-wise. Unlike the
+  * batch scan, the stream does NOT pack small splits into one task:
+  * its partitions interleave [[CdcRemovePartition]]s with the data
+  * splits, and trigger admission (`maxFilesPerTrigger` /
+  * `maxBytesPerTrigger`) already bounds a batch, so each split stays
+  * its own partition.
   *
   * The tailed directory is APPEND-ONLY by contract: ingest epochs
   * add files and never mutate them (a replayed epoch rewrites
@@ -382,11 +387,7 @@ private[sources] class JsonDocMicroBatchStream(
     val s = start.asInstanceOf[JsonStreamOffset].batchId
     val e = end.asInstanceOf[JsonStreamOffset].batchId
     val conf = spark.sparkContext.hadoopConfiguration
-    val codecs =
-      new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
-    val target = math.max(1L << 20,
-      maxSplitBytes.getOrElse(
-        spark.sessionState.conf.filesMaxPartitionBytes))
+    val splitter = new JsonDocSplitter(spark, whole, maxSplitBytes)
     ((s + 1) to e).flatMap { id =>
       readLog(fs, logDir, id).flatMap { entry =>
         if (entry.len < 0L)
@@ -415,26 +416,21 @@ private[sources] class JsonDocMicroBatchStream(
                 s"-> ${st.getModificationTime}): ${entry.path} — " +
                 "tailed directories are append-only (write new files; " +
                 "never rewrite or append in place)")
-          val splittable = !whole &&
-            codecs.getCodec(new Path(entry.path)) == null
-          if (!splittable || entry.len <= target)
-            Seq(JsonDocPartition(entry.path, 0L, entry.len): InputPartition)
-          else (0L until entry.len by target).map(o =>
-            JsonDocPartition(entry.path, o,
-              math.min(target, entry.len - o)): InputPartition)
+          splitter(entry.path, entry.len)
         }
       }
     }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
+    // `_file` metadata column selected on the stream (never with
+    // cdcDeletes): same per-split constant append as the batch scan.
+    // cdcDeletes appends the two EXPLICIT cdc columns instead (and
+    // serves retractions).
     val base = JsonDocReaderFactory(whole, t, full, required, pushed,
-      graft.ops.Fs.broadcastConf(spark))
-    // `_file` metadata column selected on the stream: same per-
-    // partition constant append as the batch scan. cdcDeletes appends
-    // the two EXPLICIT cdc columns instead (and serves retractions).
+      graft.ops.Fs.broadcastConf(spark),
+      appendFile = appendFilePath)
     if (cdcDeletes) CdcAppendingReaderFactory(base, required.size)
-    else if (appendFilePath) FileAppendingReaderFactory(base)
     else base
   }
 

@@ -685,6 +685,122 @@ class JsonDocSourceSpec extends SparkTestBase {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  /** Runs `body` with one session conf set, restoring it afterwards. */
+  private def withConf[A](key: String, value: String)(body: => A): A = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  private def writeFiles(dir: java.io.File, files: (String, Seq[String])*): Unit =
+    files.foreach { case (name, lines) =>
+      val f = new java.io.File(dir, name)
+      f.getParentFile.mkdirs()
+      val w = new java.io.PrintWriter(f)
+      lines.foreach(w.println); w.close()
+    }
+
+  test("packing: 32 small files plan at most defaultParallelism tasks under the cap; rows and order equal one split per task") {
+    val dir = new java.io.File(graft.TempRoots.path("graftjson_pack32"))
+    // ids 1000..1639 in listing order, 20 per file
+    writeFiles(dir, (0 until 32).map(f => f"part-$f%02d.json" ->
+      (0 until 20).map(i => s"""{"id": ${1000 + f * 20 + i}, "f": $f}""")): _*)
+    val df = spark.read.format("graftjson").load(dir.toString)
+    val rows = df.collect().toSeq
+    val packs = PlannedScan.packs(df)
+    val n = spark.sparkContext.defaultParallelism
+    assert(packs.size <= n && packs.exists(_.splits.size > 1),
+      s"${packs.size} packs on $n cores: ${packs.map(_.splits.size)}")
+    // every file once, whole, in listing order
+    val splits = packs.flatMap(_.splits)
+    def local(s: JsonDocPartition) = new java.io.File(new java.net.URI(s.path))
+    assert(splits.map(local(_).getName) ==
+      (0 until 32).map(f => f"part-$f%02d.json"))
+    assert(splits.forall(s => s.start == 0L && s.length == local(s).length))
+    // Spark's getFilePartitions rule: a split joins a pack while the
+    // pack's cost so far (Σ length + open) plus its length fits the cap,
+    // so a pack's cost exceeds the cap by at most its last open cost
+    val conf = spark.sessionState.conf
+    val open = conf.filesOpenCostInBytes
+    val cap = math.min(conf.filesMaxPartitionBytes, math.max(open,
+      splits.map(_.length + open).sum / conf.filesMinPartitionNum.getOrElse(n)))
+    packs.foreach { p =>
+      assert(p.splits.map(_.length + open).sum - open <= cap,
+        s"pack ${p.splits.map(_.path)} over the cap $cap")
+    }
+    assert(rows.map(_.getAs[Number]("id").longValue) == (1000L until 1640L))
+    // one split per task: the open cost alone fills the cap
+    val (soloPacks, soloRows) = withConf("spark.sql.files.openCostInBytes",
+      conf.filesMaxPartitionBytes.toString) {
+      val solo = spark.read.format("graftjson").load(dir.toString)
+      (PlannedScan.packs(solo), solo.collect().toSeq)
+    }
+    assert(soloPacks.map(_.splits) == splits.map(Seq(_)))
+    assert(soloRows == rows)
+  }
+
+  test("packing: `_file` and dirPartitions values are right on every row of a pack spanning two directories") {
+    val tree = new java.io.File(graft.TempRoots.path("graftjson_pack_dirs"))
+    writeFiles(tree, (for (p <- 1 to 2; f <- 0 until 3) yield
+      s"p=$p/$f.json" -> (0 until 4).map(i =>
+        s"""{"id": ${p * 100 + f * 10 + i}, "src": "file$f"}""")): _*)
+    // one pack for the whole table: its splits come from both dirs
+    withConf("spark.sql.files.minPartitionNum", "1") {
+      val df = spark.read.format("graftjson").option("dirPartitions", "true")
+        .load(tree.toString).select(col("id"), col("src"), col("p"), col("_file"))
+      val packs = PlannedScan.packs(df)
+      assert(packs.exists(_.splits.map(s =>
+        new java.io.File(new java.net.URI(s.path)).getParentFile.getName)
+        .distinct.size == 2),
+        packs.map(_.splits.map(_.path)))
+      val rows = df.collect()
+      assert(rows.length == 24)
+      rows.foreach { r =>
+        val id = r.getAs[Number]("id").longValue
+        assert(r.getAs[Long]("p") == id / 100, r)
+        assert(r.getAs[String]("_file").endsWith(
+          s"/p=${id / 100}/${r.getAs[String]("src").stripPrefix("file")}.json"), r)
+      }
+    }
+  }
+
+  test("packing: a runtime-filter re-plan (SupportsRuntimeFiltering.filter) drops the pruned files from the packs") {
+    import org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
+    import org.apache.spark.sql.sources.In
+    val dir = new java.io.File(graft.TempRoots.path("graftjson_pack_runtime"))
+    writeFiles(dir, (0 until 4).map(f => s"r$f.json" ->
+      (0 until 5).map(i => s"""{"id": ${f * 100 + i}}""")): _*)
+    withConf("spark.sql.files.minPartitionNum", "1") {
+      val df = spark.read.format("graftjson").option("zonemaps", "true")
+        .load(dir.toString)
+      val scan = df.queryExecution.executedPlan.collectFirst {
+        case b: BatchScanExec => b.scan
+      }.get
+      def files(): Seq[String] = scan.toBatch.planInputPartitions().toSeq
+        .flatMap(_.asInstanceOf[JsonDocPack].splits)
+        .map(s => new java.io.File(new java.net.URI(s.path)).getName)
+      assert(files() == Seq("r0.json", "r1.json", "r2.json", "r3.json"))
+      // ids of r1 and r3 only: the zones prove r0 and r2 empty
+      scan.asInstanceOf[SupportsRuntimeFiltering].filter(
+        Array[org.apache.spark.sql.sources.Filter](In("id", Array(101, 302))))
+      assert(files() == Seq("r1.json", "r3.json"))
+      val batch = scan.toBatch
+      val reader = batch.createReaderFactory()
+      val idOrd = df.schema.fieldIndex("id")
+      val idType = df.schema(idOrd).dataType
+      val ids = batch.planInputPartitions().toSeq.flatMap { p =>
+        val r = reader.createReader(p)
+        val buf = scala.collection.mutable.ArrayBuffer[Long]()
+        while (r.next())
+          buf += r.get().get(idOrd, idType).asInstanceOf[Number].longValue
+        r.close(); buf
+      }
+      // the kept files' rows, in listing order (the join above the scan
+      // re-verifies each; INT literals skip no rows of a SMALLINT column)
+      assert(ids == (100L to 104L) ++ (300L to 304L), ids)
+    }
+  }
+
   test("a user-supplied schema must match the inferred one (unions are not reconstructible)") {
     val dir = writeFixture("graftjson_uschema")
     val inferredSchema = spark.read.format("graftjson").load(dir).schema

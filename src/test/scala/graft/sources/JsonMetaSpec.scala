@@ -68,21 +68,11 @@ class JsonMetaSpec extends SparkTestBase {
     }
     assert(w == 0L, s"zonemaps load walked $w files despite saved zones")
     assert(got.map(_.getString(0)).toSeq == Seq("s0"))
-    // the equality filter plans a single partition: the other files
-    // were zone-pruned from metadata that never touched the data
+    // the equality filter plans a single split: the other files were
+    // zone-pruned from metadata that never touched the data
     val q = spark.read.format("graftjson").option("zonemaps", "true")
       .load(dir.toString).where(col("id") === 30)
-    q.collect()
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    def scans(p: SparkPlan): Seq[BatchScanExec] = p match {
-      case b: BatchScanExec => Seq(b)
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case qs: QueryStageExec => scans(qs.plan)
-      case other => other.children.flatMap(scans)
-    }
-    assert(scans(q.queryExecution.executedPlan).head.partitions.size == 1)
+    assert(PlannedScan.splits(q) == 1)
   }
 
   test("stale entries re-walk exactly the diff; a re-save refreshes them") {

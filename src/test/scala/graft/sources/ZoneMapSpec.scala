@@ -41,32 +41,14 @@ class ZoneMapSpec extends SparkTestBase {
     (r, JsonDocSource.zoneSkippedFiles.get() - before)
   }
 
-  /** Input partitions the executed v2 scan actually planned —
-    * descending through AQE's stage wrappers. */
-  private def plannedParts(df: org.apache.spark.sql.DataFrame): Int = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    df.collect()
-    def scans(p: SparkPlan): Seq[BatchScanExec] = p match {
-      case b: BatchScanExec => Seq(b)
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case q: QueryStageExec => scans(q.plan)
-      case other => other.children.flatMap(scans)
-    }
-    val found = scans(df.queryExecution.executedPlan)
-    assert(found.nonEmpty, "no BatchScanExec in plan")
-    found.head.partitions.size
-  }
-
   test("numeric range filter skips provably-excluded files; rows identical to no-zonemaps") {
     val dir = writeRanged("zm_ranged")
     val zdf = spark.read.format("graftjson").option("zonemaps", "true").load(dir)
     val plain = spark.read.format("graftjson").load(dir)
       .where(col("id") < 50).select(col("id")).collect().map(_.getAs[Number](0).longValue).sorted
     val q = zdf.where(col("id") < 50).select(col("id"))
-    val (parts, skipped) = skipsDuring(plannedParts(q))
-    assert(parts == 1, s"expected only f1 planned, got $parts partitions")
+    val (parts, skipped) = skipsDuring(PlannedScan.splits(q))
+    assert(parts == 1, s"expected only f1 planned, got $parts splits")
     assert(skipped >= 2, s"skip counter did not move: $skipped")
     val got = q.collect().map(_.getAs[Number](0).longValue).sorted
     assert(got.toSeq == plain.toSeq && got.toSeq == Seq(1L, 9L))
@@ -76,11 +58,11 @@ class ZoneMapSpec extends SparkTestBase {
     val dir = writeRanged("zm_str")
     val zdf = spark.read.format("graftjson").option("zonemaps", "true").load(dir)
     val q1 = zdf.where(col("src") === "beta").select(col("id"))
-    assert(plannedParts(q1) == 1)
+    assert(PlannedScan.splits(q1) == 1)
     assert(q1.collect().map(_.getAs[Number](0).longValue).sorted.toSeq ==
       Seq(100L, 190L))
     val q2 = zdf.where(col("src").startsWith("gam")).select(col("id"))
-    assert(plannedParts(q2) == 1)
+    assert(PlannedScan.splits(q2) == 1)
     assert(q2.collect().map(_.getAs[Number](0).longValue).sorted.toSeq ==
       Seq(1000L, 1900L))
   }
@@ -153,9 +135,9 @@ class ZoneMapSpec extends SparkTestBase {
     val files = JsonDocSource.listFiles(spark, Seq(out)).size
     assert(files > 1, s"export produced only $files file(s)")
     val q = graft.SparkEntry.queries("q221_zonemap_prune")(spark, sfDir)
-    val parts = plannedParts(q)
+    val parts = PlannedScan.splits(q)
     assert(parts < files,
-      s"zone maps pruned nothing: $parts partitions over $files files")
+      s"zone maps pruned nothing: $parts splits over $files files")
   }
 
   test("count(*) pushdown: answered from zone metadata, one partition, no data read") {
@@ -178,7 +160,7 @@ class ZoneMapSpec extends SparkTestBase {
       s"pushed count $counted vs scan count $plain")
     // the pushed plan reads ONE metadata partition, not the files
     val q = zdf.groupBy().count()
-    assert(plannedParts(q) == 1)
+    assert(PlannedScan.splits(q) == 1)
     assert(q.queryExecution.executedPlan.toString.contains("PushedAggregation"),
       q.queryExecution.executedPlan.toString)
   }
@@ -227,7 +209,7 @@ class ZoneMapSpec extends SparkTestBase {
     assert(r.getString(3) == "alpha" && r.getString(4) == "omega")
     assert(r.getDecimal(5).compareTo(new JBD("0.25")) == 0 &&
       r.getDecimal(6).compareTo(new JBD("9.50")) == 0)
-    assert(plannedParts(q) == 1, "min/max did not come from metadata")
+    assert(PlannedScan.splits(q) == 1, "min/max did not come from metadata")
     assert(q.queryExecution.executedPlan.toString.contains("PushedAggregation"))
     // float column in the mix → whole push declines, real scan answers
     assert(zdf.schema("score").dataType ==
@@ -244,7 +226,7 @@ class ZoneMapSpec extends SparkTestBase {
       .load(dir.toString)
     val q2 = zdf2.agg(min(col("extra")))
     assert(q2.collect()(0).isNullAt(0))
-    assert(plannedParts(q2) == 1)
+    assert(PlannedScan.splits(q2) == 1)
   }
 
   test("min/max pushdown declines when any file is dirty; count alone still pushes") {
@@ -979,21 +961,12 @@ class ZoneMapSpec extends SparkTestBase {
     val q = zdf.where(col("meta.src") === "b").select(col("id"))
     assert(q.collect().map(_.getAs[Number](0).longValue).toSeq == Seq(3L))
     // only f2 was scanned: the nested equality pruned the other files
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    def scans(p: SparkPlan): Seq[BatchScanExec] = p match {
-      case b: BatchScanExec => Seq(b)
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case qs: QueryStageExec => scans(qs.plan)
-      case other => other.children.flatMap(scans)
-    }
-    assert(scans(q.queryExecution.executedPlan).head.partitions.size == 1,
+    assert(PlannedScan.splits(q) == 1,
       "nested predicate should zone-prune to the single matching file")
     // nested range predicate prunes by the nested numeric bounds
     val r = zdf.where(col("meta.n") > 35).select(col("id"))
     assert(r.collect().map(_.getAs[Number](0).longValue).toSeq == Seq(4L))
-    assert(scans(r.queryExecution.executedPlan).head.partitions.size == 1)
+    assert(PlannedScan.splits(r) == 1)
   }
 
   test("nested MIN/MAX and IsNull answer from zones; union chains and deep paths never do") {
@@ -1388,8 +1361,8 @@ class ZoneMapSpec extends SparkTestBase {
     val zdf = spark.read.format("graftjson").option("zonemaps", "true")
       .load(dir.toString)
     val q = zdf.where(col("k") === "yak").select(col("n"))
-    val (parts, skipped) = skipsDuring(plannedParts(q))
-    assert(parts == 1, s"expected f1 set-pruned, got $parts partitions")
+    val (parts, skipped) = skipsDuring(PlannedScan.splits(q))
+    assert(parts == 1, s"expected f1 set-pruned, got $parts splits")
     assert(skipped >= 1, s"skip counter did not move: $skipped")
     assert(q.collect().map(_.getAs[Number](0).longValue).toSeq == Seq(4L))
     // parity: same rows without zonemaps
@@ -1440,8 +1413,8 @@ class ZoneMapSpec extends SparkTestBase {
     val zdf = spark.read.format("graftjson").option("zonemaps", "true")
       .load(dir.toString)
     val q = zdf.where(col("k").isNull).select(col("n"))
-    val (parts, skipped) = skipsDuring(plannedParts(q))
-    assert(parts == 1, s"expected full.json skipped, got $parts partitions")
+    val (parts, skipped) = skipsDuring(PlannedScan.splits(q))
+    assert(parts == 1, s"expected full.json skipped, got $parts splits")
     assert(skipped >= 1)
     assert(q.collect().map(_.getAs[Number](0).longValue).toSeq == Seq(4L))
   }
